@@ -40,15 +40,12 @@ HEADLINE = [
     "method_metrics",
     "doi_tier0",
     "standardise_doi",
-    "exact_dup_groups",
-    "minhash_bands",
+    "minhash_near_dups",
     "simhash_near_dups",
     "embedding_near_dups",
     "cosine_topk",
     "ann_ivf_topk",
     "length_percentiles",
-    "quality_score",
-    "token_count",
     "canonical_urls",
     "redact_pii",
     "line_dedup",
@@ -66,8 +63,8 @@ HEADLINE = [
     "latest_capture",
     "chunk_documents",
     "domain_curation",
-    # round-3 consolidated driver queries (the pre-consolidation names
-    # above stay timed for cross-round comparability)
+    # driver supersets of the deleted per-operator queries (the name
+    # mapping for cross-round comparison is in BENCH.md)
     "quality_suite",
     "doc_signals",
     "exact_dedup",
@@ -260,7 +257,7 @@ def main() -> None:
         return
 
     from pdf2doi_spark.session import build_session
-    from pdf2doi_spark.queries import build_all_queries
+    from pdf2doi_spark.queries import _BUILDERS
 
     spark = build_session(master=f"local[{CPUS}]", app_name="bench",
                           extra_conf=_BENCH_READ_CONF)
@@ -314,9 +311,8 @@ def main() -> None:
         counter_stats["missheavy_n_docs"] = n_miss
         counter_stats["missheavy_docs_per_sec"] = round(n_miss / dt_m, 1)
         counter_stats["missheavy_ids_only_docs_per_sec"] = round(n_miss / dt_mi, 1)
-        qs = build_all_queries()
         for name in HEADLINE:
-            dt, _, _runs = _timed(qs[name](spark, SF_DIR))
+            dt, _, _runs = _timed(_BUILDERS[name]()[0](spark, SF_DIR))
             timings[name] = round(dt, 3)
 
         # Incremental near-dup index: build once (the dump-0 analogue,
@@ -343,10 +339,9 @@ def main() -> None:
         )
         dt, _, _runs = _timed(probe)
         timings["incremental_probe"] = round(dt, 3)
-        # VERDICT r4 #8: names timed here that are NOT driver-gate rows
-        # (consolidated-away builders kept for cross-round comparability,
-        # plus bench-only artifacts like the miss-heavy regime) are
-        # marked so nobody mistakes them for CORRECTNESS rows.
+        # names timed here that are NOT driver-gate rows (the pytest-only
+        # oracles plus bench-only artifacts like the miss-heavy regime)
+        # are marked so nobody mistakes them for CORRECTNESS rows.
         from pdf2doi_spark.queries import build_queries
 
         driver_rows = set(build_queries().keys())

@@ -7,12 +7,12 @@ dump already ingested — without re-signaturing the whole corpus per dump
 (operators/dedup_index.py). This example replays that cadence over the
 synthetic documents table:
 
-  start    → build_minhash_index over ZERO docs (a valid empty index —
-             so every dump, including the first, runs the same path and
-             gets its intra-dump dups flagged)
-  dump 0.. → incremental_near_dups (probe: collisions vs the index AND
-             within the dump), write the dump's survivors, then
-             merge_minhash_index(exclude=dups) so the NEXT dump sees them
+  dump 0.. → ingest_dump: the first call bootstraps an EMPTY index (so
+             every dump, the first included, runs the same path and gets
+             its intra-dump dups flagged); each call probes the dump
+             against the index AND within itself, writes the flagged docs
+             to <index-dir>_dups/dump=<i> (survivors get no row), then
+             merges the survivors so the NEXT dump sees them
   finally  → compact_minhash_index (one file per partition again)
 
 Per-dump cost is O(dump + collisions): the signature pass runs over the
@@ -51,57 +51,36 @@ def main() -> None:
     args = ap.parse_args()
 
     from pdf2doi_spark.operators.dedup_index import (
-        build_minhash_index,
         compact_minhash_index,
-        incremental_near_dups,
-        merge_minhash_index,
+        ingest_dump,
     )
     from pdf2doi_spark.session import build_session
 
     spark = build_session(master=args.master, app_name="incremental-ingest")
     try:
-        shutil.rmtree(args.index_dir, ignore_errors=True)
+        dups_dir = args.index_dir.rstrip("/") + "_dups"
+        for d in (args.index_dir, dups_dir):
+            shutil.rmtree(d, ignore_errors=True)
         docs = (
             spark.read.parquet(f"{args.sf_dir}/documents.parquet")
             .select("doc_id", "text")
         )
 
-        def dump(i: int):
-            return docs.filter(F.col("doc_id") % args.dumps == i)
-
-        build_minhash_index(spark, docs.limit(0), args.index_dir)
-        print(json.dumps({"action": "build_empty_index"}))
-
         for i in range(0, args.dumps):
-            batch = dump(i)
-            # return_sigs: the probe's checkpointed signature frame feeds
-            # the merge, so the dominant cost (shingle+minhash) runs ONCE
-            # per dump — the canonical ingest-loop shape
-            dups, batch_sigs = incremental_near_dups(
-                spark, args.index_dir, batch, threshold=args.threshold,
-                return_sigs=True,
-            )
-            dups = dups.persist()
-            by_source = {
-                r["source"]: r["n"]
-                for r in dups.groupBy("source").agg(
-                    F.count(F.lit(1)).alias("n")).collect()
-            }
+            batch = docs.filter(F.col("doc_id") % args.dumps == i)
             # survivors of THIS dump join the corpus; the next dump's
             # probe sees them without any recompute of dumps 0..i
-            merge_minhash_index(
-                spark, args.index_dir, batch,
-                exclude=dups.select("doc_id"), sigs=batch_sigs,
+            by_source = ingest_dump(
+                spark, args.index_dir, batch, f"{dups_dir}/dump={i}",
+                threshold=args.threshold,
             )
             n_batch = batch.count()
-            n_dups = sum(by_source.values())
             print(json.dumps({
                 "dump": i, "docs": n_batch,
-                "dups_vs_index": by_source.get("index", 0),
-                "dups_within_dump": by_source.get("batch", 0),
-                "survivors_merged": n_batch - n_dups,
+                "dups_vs_index": by_source["index"],
+                "dups_within_dump": by_source["batch"],
+                "survivors_merged": n_batch - sum(by_source.values()),
             }))
-            dups.unpersist()
 
         compact_minhash_index(spark, args.index_dir)
         sigs = spark.read.parquet(args.index_dir + "/sigs")

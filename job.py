@@ -163,28 +163,23 @@ def main() -> None:
             merge_cache(spark, args.cache, results)
 
         if args.dedup_index:
-            # Rolling-crawl near-dedup (VERDICT r4 #4): probe this dump's
-            # extracted text against the persisted index (= every prior
-            # dump's survivors), write the verdicts, merge the survivors.
-            # doc_id = xxhash64(url): deterministic across dumps, so a
-            # RECRAWL of the same url is the same doc (self-matches are
-            # excluded by the probe), not a near-dup of itself; at 10^12
-            # docs the 64-bit birthday bound leaves ~1e-8 of ids colliding
-            # — noise for an approximate dedup. Restart-safe: probing is
-            # read-only, the dups write overwrites, and the merge
-            # anti-joins already-indexed ids (replays to a no-op).
+            # Rolling-crawl near-dedup: one ingest_dump
+            # step probes this dump's extracted text against the persisted
+            # index (= every prior dump's survivors), writes the verdicts
+            # and merges the survivors. doc_id = xxhash64(url):
+            # deterministic across dumps, so a RECRAWL of the same url is
+            # the same doc (self-matches are excluded by the probe), not a
+            # near-dup of itself; at 10^12 docs the 64-bit birthday bound
+            # leaves ~1e-8 of ids colliding — noise for an approximate
+            # dedup.
             from pyspark.sql import functions as F
 
-            from pdf2doi_spark.operators.dedup_index import (
-                bootstrap_index_if_absent,
-                incremental_near_dups,
-                merge_minhash_index,
-            )
+            from pdf2doi_spark.operators.dedup_index import ingest_dump
 
             docs = (
                 results.filter(F.col("extracted_text").isNotNull())
-                .select(F.xxhash64("url").alias("doc_id"),
-                        F.col("extracted_text").alias("text"), "url")
+                .select("url", F.xxhash64("url").alias("doc_id"),
+                        F.col("extracted_text").alias("text"))
             )
             # durable checkpoint dir for the probe's lineage cuts (without
             # one, _truncate_lineage falls back to localCheckpoint, whose
@@ -192,30 +187,13 @@ def main() -> None:
             if spark.sparkContext.getCheckpointDir() is None:
                 spark.sparkContext.setCheckpointDir(
                     os.path.join(args.output, "_checkpoints"))
-            # empty bootstrap iff genuinely absent (refuses a crashed-
-            # compaction dir), then the normal probe→merge path — dump
-            # 1's intra-dump dups are flagged and excluded exactly like
-            # anyone else's
-            bootstrap_index_if_absent(spark, args.dedup_index, docs,
-                                      hash_fn="xxhash64")
-            dups, batch_sigs = incremental_near_dups(
+            split = ingest_dump(
                 spark, args.dedup_index, docs,
+                os.path.join(args.output, "dups"),
                 threshold=args.dedup_threshold,
-                max_bucket=args.dedup_max_bucket, return_sigs=True,
+                max_bucket=args.dedup_max_bucket, hash_fn="xxhash64",
             )
-            dups_path = os.path.join(args.output, "dups")
-            (dups.join(docs.select("doc_id", "url"), "doc_id")
-                 .select("url", "doc_id", "dup_of", "est_jaccard", "source")
-                 .write.mode("overwrite").parquet(dups_path))
-            # merge excludes the WRITTEN verdicts (stable snapshot, the
-            # streaming sink's pattern — never the live probe plan) and
-            # reuses the probe's checkpointed signatures: ONE signature
-            # pass per dump, not two
-            written_dups = spark.read.parquet(dups_path)
-            merge_minhash_index(spark, args.dedup_index, docs,
-                                exclude=written_dups.select("doc_id"),
-                                sigs=batch_sigs)
-            print(f"near-dups flagged: {written_dups.count()}")
+            print(f"near-dups flagged: {sum(split.values())}")
 
         metrics_path = os.path.join(args.output, "metrics")
         method_metrics(results).write.mode("overwrite").parquet(metrics_path)

@@ -256,6 +256,50 @@ def minhash_signature(col: Column, num_hashes: int = 12,
     raise ValueError(f"unknown hash_fn {hash_fn!r}: use 'md5' or 'xxhash64'")
 
 
+def _sig_df(docs: DataFrame, text_col: str, num_hashes: int,
+            hash_fn: str) -> DataFrame:
+    """(doc_id, mh0..mh{k-1}) for every doc with at least one shingle.
+
+    NULL doc_ids are dropped outright: every downstream consumer keys on
+    doc_id (self-join ``<``, anti-joins, semi-joins, best-match windows),
+    and a NULL key matches nothing — in the persisted index a null-id row
+    would re-append on EVERY merge (the idempotency anti-join can never
+    see it) and never be findable by any probe."""
+    sh = docs.filter(
+        F.col("doc_id").isNotNull() & has_min_words(F.col(text_col))
+    ).select(
+        F.col("doc_id"), word_shingles(F.col(text_col)).alias("sh")
+    )
+    return sh.select(
+        "doc_id", *minhash_signature(F.col("sh"), num_hashes, hash_fn)
+    )
+
+
+def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
+                     hash_fn: str) -> DataFrame:
+    """(doc_id, band_idx, band_hash) from a signature table — THE band
+    construction, shared by the one-shot join and the persisted index
+    (which bands stored signatures without re-shingling the text)."""
+    rows_per_band = num_hashes // bands
+    band_cols = []
+    for b in range(bands):
+        parts = [F.col(f"mh{b * rows_per_band + r}")
+                 for r in range(rows_per_band)]
+        band_hash = (
+            F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
+            else F.xxhash64(*parts)
+        )
+        band_cols.append(
+            F.struct(F.lit(b).alias("band_idx"), band_hash.alias("band_hash"))
+        )
+    return (
+        sigs.select(F.col("doc_id"),
+                    F.explode(F.array(*band_cols)).alias("band"))
+        .select("doc_id", F.col("band.band_idx").alias("band_idx"),
+                F.col("band.band_hash").alias("band_hash"))
+    )
+
+
 def minhash_bands(df: DataFrame, text_col: str = "text", num_hashes: int = 12,
                   bands: int = 4, hash_fn: str = "md5") -> DataFrame:
     """doc_id × band rows: (doc_id, band_idx, band_hash). rows = docs × b —
@@ -268,28 +312,8 @@ def minhash_bands(df: DataFrame, text_col: str = "text", num_hashes: int = 12,
             f"({bands}) — a remainder would silently compute-but-ignore "
             f"the trailing hashes and change the effective b*r recall curve"
         )
-    rows_per_band = num_hashes // bands
-    sh = df.filter(has_min_words(F.col(text_col))).select(
-        F.col("doc_id"), word_shingles(F.col(text_col)).alias("sh")
-    )
-    sig = sh.select(
-        "doc_id", *minhash_signature(F.col("sh"), num_hashes, hash_fn)
-    )
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_hash = (
-            F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
-            else F.xxhash64(*parts)
-        )
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), band_hash.alias("band_hash"))
-        )
-    return (
-        sig.select(F.col("doc_id"), F.explode(F.array(*band_cols)).alias("band"))
-        .select("doc_id", F.col("band.band_idx").alias("band_idx"),
-                F.col("band.band_hash").alias("band_hash"))
-    )
+    return _bands_from_sigs(_sig_df(df, text_col, num_hashes, hash_fn),
+                            num_hashes, bands, hash_fn)
 
 
 def minhash_bucket_profile(df: DataFrame, text_col: str = "text",

@@ -52,11 +52,10 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdf2doi_spark.operators.dedup import (
+    _bands_from_sigs,
+    _sig_df,
     _truncate_lineage,
     cap_buckets,
-    has_min_words,
-    minhash_signature,
-    word_shingles,
 )
 from pdf2doi_spark.sources.io import (
     _fs_read_small,
@@ -77,49 +76,6 @@ def load_index_params(spark: SparkSession, index_path: str) -> dict:
             f"no minhash index at {index_path!r} (missing {_PARAMS_FILE})"
         )
     return json.loads(_fs_read_small(spark, _params_path(index_path)))
-
-
-def _sig_df(docs: DataFrame, text_col: str, num_hashes: int,
-            hash_fn: str) -> DataFrame:
-    # NULL doc_ids are dropped outright: every downstream consumer keys on
-    # doc_id (anti-joins, semi-joins, best-match windows), and a NULL key
-    # matches nothing — a null-id row would re-append to the index on
-    # EVERY merge (the idempotency anti-join can never see it) and never
-    # be findable by any probe.
-    sh = docs.filter(
-        F.col("doc_id").isNotNull() & has_min_words(F.col(text_col))
-    ).select(
-        F.col("doc_id"), word_shingles(F.col(text_col)).alias("sh")
-    )
-    return sh.select(
-        "doc_id", *minhash_signature(F.col("sh"), num_hashes, hash_fn)
-    )
-
-
-def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
-                     hash_fn: str) -> DataFrame:
-    """(doc_id, band_idx, band_hash) derived from an existing signature
-    table — same band construction as dedup.minhash_bands, but without
-    re-shingling and re-hashing the text (the signature pass is the heavy
-    compute; build/merge would otherwise pay it twice)."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}")
-                 for r in range(rows_per_band)]
-        band_hash = (
-            F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
-            else F.xxhash64(*parts)
-        )
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), band_hash.alias("band_hash"))
-        )
-    return (
-        sigs.select(F.col("doc_id"),
-                    F.explode(F.array(*band_cols)).alias("band"))
-        .select("doc_id", F.col("band.band_idx").alias("band_idx"),
-                F.col("band.band_hash").alias("band_hash"))
-    )
 
 
 def _sp(n_parts: int):
@@ -484,6 +440,50 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
         sigs.unpersist()
 
 
+def ingest_dump(spark: SparkSession, index_path: str, docs: DataFrame,
+                verdicts_path: str, *, threshold: float,
+                max_bucket: Optional[int] = None,
+                hash_fn: str = "md5") -> dict:
+    """One rolling-crawl ingest step: bootstrap the index if absent, probe
+    ``docs`` (doc_id, text, any carried columns) against it, write the
+    flagged rows to ``verdicts_path``, merge the survivors.
+
+    * The bootstrap refuses a crashed-compaction dir (see
+      ``bootstrap_index_if_absent``); ``hash_fn`` only applies to a
+      bootstrapped index — an existing one replays its stored params. So every dump, the first
+      included, runs the same probe and gets its intra-dump dups flagged.
+    * ``verdicts_path`` is overwritten with one row per flagged doc:
+      ``docs``' columns minus ``text`` + (dup_of, est_jaccard, source).
+      Survivors get no row. ``docs`` is deduplicated on doc_id before
+      that join, so a dump that repeats a url (same doc_id) cannot fan
+      the verdict rows out.
+    * The merge excludes the WRITTEN verdicts — a stable snapshot, never
+      the live probe plan — and reuses the probe's checkpointed
+      signatures: ONE signature pass per dump.
+
+    Restart-safe: the probe is read-only, the verdict write overwrites,
+    and the merge anti-joins already-indexed ids (replays to a no-op).
+    Returns the verdict split ``{"index": n, "batch": n}``, counted from
+    the small written table (no extra job over ``docs``).
+    """
+    bootstrap_index_if_absent(spark, index_path, docs, hash_fn=hash_fn)
+    dups, sigs = incremental_near_dups(
+        spark, index_path, docs, threshold=threshold,
+        max_bucket=max_bucket, return_sigs=True,
+    )
+    carried = [c for c in docs.columns if c != "text"]
+    (dups.join(docs.select(*carried).dropDuplicates(["doc_id"]), "doc_id")
+         .select(*carried, "dup_of", "est_jaccard", "source")
+         .write.mode("overwrite").parquet(verdicts_path))
+    written = spark.read.parquet(verdicts_path)
+    merge_minhash_index(spark, index_path, docs,
+                        exclude=written.select("doc_id"), sigs=sigs)
+    split = {"index": 0, "batch": 0}
+    for r in written.groupBy("source").count().collect():
+        split[r["source"]] = r["count"]
+    return split
+
+
 def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     """Rewrite both index tables to one file per partition.
 
@@ -491,9 +491,14 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     partition holds up to K small files; scan cost and open-file overhead
     creep up with corpus age. Run this offline when file counts warrant
     (it is one full read+write of the index — the same cost as one
-    signature-free merge of the whole corpus). Values are untouched.
-    Via a .tmp swap because Spark (correctly) refuses to overwrite a path
-    it is reading from.
+    signature-free merge of the whole corpus). Sig values are untouched;
+    postings are REBUILT from the compacted sigs with the same banding
+    the merge uses, so orphan postings left by a merge that crashed
+    between its two appends (see ``merge_minhash_index``) are dropped and
+    ``postings == sigs × bands`` holds again — stale duplicates would
+    otherwise inflate ``minhash_index_profile`` and push a legitimate
+    bucket over ``max_bucket`` forever. Via a .cmp swap because Spark
+    (correctly) refuses to overwrite a path it is reading from.
 
     Crash safety: ``_params`` is REMOVED before the destructive rewrite
     of the live tables and restored only after both complete — a job
@@ -511,13 +516,19 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     p = load_index_params(spark, index_path)  # refuse half-built index
     root = index_path.rstrip("/")
     params_raw = json.dumps(p)
-    tmps = {}
-    for table, part_col in (("sigs", "sp"), ("postings", "pq")):
-        tmp = f"{root}/{table}.cmp"
-        live = _read_index_table(spark, root, table, p)
-        (live.repartition(F.col(part_col))
-             .write.mode("overwrite").partitionBy(part_col).parquet(tmp))
-        tmps[table] = (tmp, part_col, live.schema)
+    sigs_tmp, posts_tmp = f"{root}/sigs.cmp", f"{root}/postings.cmp"
+    sigs = _read_index_table(spark, root, "sigs", p)
+    (sigs.repartition(F.col("sp"))
+         .write.mode("overwrite").partitionBy("sp").parquet(sigs_tmp))
+    posts = (
+        _bands_from_sigs(spark.read.schema(sigs.schema).parquet(sigs_tmp),
+                         p["num_hashes"], p["bands"], p["hash_fn"])
+        .withColumn("pq", _pq(p["n_parts"]))
+    )
+    (posts.repartition(F.col("pq"))
+          .write.mode("overwrite").partitionBy("pq").parquet(posts_tmp))
+    tmps = {"sigs": (sigs_tmp, "sp", sigs.schema),
+            "postings": (posts_tmp, "pq", posts.schema)}
     # stage the params restore BEFORE anything destructive happens
     params_tmp = _params_path(index_path) + ".tmp"
     _fs_write_small(spark, params_tmp, params_raw)

@@ -34,7 +34,7 @@ BPE_TOKEN_RE = r"[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]"
 def norm_text(col: Column) -> Column:
     """THE text normalization of the dedup family (lowercase, trim,
     whitespace-collapse). One definition — ``md5(norm_text(text))`` is the
-    cross-engine fingerprint contract shared by quality.fingerprint, the
+    cross-engine fingerprint contract shared by quality_suite's ``fp``, the
     winnowing sketch, and every operator in ``dedup.py``; a second copy
     drifting would silently desync fingerprint-keyed joins."""
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
@@ -49,10 +49,10 @@ def tokens(col: Column) -> Column:
 
 
 def token_count_cols(text_col: Column) -> list:
-    """The aliased column set behind ``token_count`` — exposed so the fused
-    ``quality_suite`` can project the identical expressions without a
-    self-join (one definition, no drift between the per-signal operator and
-    the suite)."""
+    """Whitespace token count, a BPE-ish regex token count (GPT-style
+    pre-tokenizer pieces), and a 4-chars/token subword estimate — all
+    native expressions, aliased so ``quality_suite`` (or any projection)
+    can use them without a self-join."""
     t = F.trim(text_col)
     nospace = F.length(F.regexp_replace(t, r"\s+", ""))
     return [
@@ -62,15 +62,10 @@ def token_count_cols(text_col: Column) -> list:
     ]
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace token count, a BPE-ish regex token count (GPT-style
-    pre-tokenizer pieces), and a 4-chars/token subword estimate — all
-    native expressions."""
-    return df.select(F.col("doc_id"), *token_count_cols(F.col(text_col)))
-
-
 def lang_id_cols(text_col: Column) -> list:
-    """Column set behind ``lang_id`` (see ``token_count_cols``)."""
+    """Marker-word-ratio language heuristic over 5 fixed banks: per-language
+    marker-hit ratio → argmax (ties broken by language code order); 'other'
+    when no bank clears 2%. Narrow map, no shuffle."""
     toks = tokens(F.lower(text_col))
     total = F.size(toks)
     def _marker_ratio(markers):
@@ -101,15 +96,10 @@ def lang_id_cols(text_col: Column) -> list:
     ]
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Marker-word-ratio language heuristic over 5 fixed banks: per-language
-    marker-hit ratio → argmax (ties broken by language code order); 'other'
-    when no bank clears 2%. One narrow map, no shuffle."""
-    return df.select(F.col("doc_id"), *lang_id_cols(F.col(text_col)))
-
-
 def quality_score_cols(text_col: Column, with_n_tokens: bool = True) -> list:
-    """Column set behind ``quality_score``. ``with_n_tokens=False`` drops
+    """Composite quality features: length, mean word length, punctuation
+    ratio, stopword ratio — the standard cheap pre-training filters.
+    ``with_n_tokens=False`` drops
     the ``n_tokens`` column for callers (the suite) that already project it
     via ``token_count_cols`` — same expression, so nothing is lost."""
     t = text_col
@@ -138,21 +128,6 @@ def quality_score_cols(text_col: Column, with_n_tokens: bool = True) -> list:
     return cols
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Composite quality features: length, mean word length, punctuation
-    ratio, stopword ratio — the standard cheap pre-training filters."""
-    return df.select(F.col("doc_id"), *quality_score_cols(F.col(text_col)))
-
-
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Deterministic document fingerprint: md5 of the whitespace-normalised
-    lowercased text (md5 chosen because it is bit-identical across Spark,
-    DuckDB, and Python — the cross-engine contract for dedup joins)."""
-    return df.select(
-        F.col("doc_id"), F.md5(norm_text(F.col(text_col))).alias("fp")
-    )
-
-
 def winnowing_sketch(df: DataFrame, text_col: str = "text", n: int = 3,
                      k: int = 8) -> DataFrame:
     """Rolling-window document fingerprint sketch (winnowing-style): hash
@@ -173,8 +148,12 @@ def winnowing_sketch(df: DataFrame, text_col: str = "text", n: int = 3,
 
 
 def ascii_scrub_col(text_col: Column, n_chars: int = None) -> Column:
-    """The scrub expression behind ``ascii_scrub`` (see
-    ``token_count_cols``), aliased ``scrubbed_text``."""
+    """Reference F11 (finders.py:844-852): non-ASCII → space, fold
+    newline/CR/tab to space, truncate to the first ``n_chars`` characters —
+    fully native (regexp_replace + translate + substring), aliased
+    ``scrubbed_text``. ``n_chars`` defaults to the reference's
+    ``N_characters_in_pdf`` setting (1000), overridable via
+    ``pdf2doi_spark.config``."""
     if n_chars is None:
         from pdf2doi_spark.config import config
 
@@ -184,23 +163,12 @@ def ascii_scrub_col(text_col: Column, n_chars: int = None) -> Column:
     return F.substring(folded, 1, n_chars).alias("scrubbed_text")
 
 
-def ascii_scrub(df: DataFrame, text_col: str = "text", n_chars: int = None) -> DataFrame:
-    """Reference F11 (finders.py:844-852): non-ASCII → space, fold
-    newline/CR/tab to space, truncate to the first ``n_chars`` characters —
-    fully native (regexp_replace + translate + substring). ``n_chars``
-    defaults to the reference's ``N_characters_in_pdf`` setting (1000),
-    overridable via ``pdf2doi_spark.config``."""
-    return df.select(
-        F.col("doc_id"), ascii_scrub_col(F.col(text_col), n_chars)
-    )
-
-
 def quality_suite(df: DataFrame, text_col: str = "text",
                   scrub_col: Column = None,
                   scrub_chars: int = None) -> DataFrame:
     """Every narrow-map quality signal in ONE projection over ONE scan:
     token counts, language-ID, quality score, document fingerprint, and the
-    ASCII scrub. The per-signal operators stay the composable units; this
+    ASCII scrub. The ``*_cols`` functions stay the composable units; this
     fused form is what a production pipeline runs (and what the driver
     gate checks) — no self-joins, no shuffle, one whole-stage-codegen span.
 
@@ -249,7 +217,7 @@ def hash_sample(df: DataFrame, pct: float = 20.0,
     so a 20% subset drawn today equals the one drawn in next month's rerun
     and a downstream join against the sample is consistent by
     construction. md5 keeps it bit-identical across Spark/DuckDB/Python
-    (same contract as ``fingerprint``). Narrow map, no shuffle."""
+    (same contract as the ``fp`` fingerprint). Narrow map, no shuffle."""
     return df.filter(_hash_bucket(key_col) < F.lit(pct))
 
 
@@ -270,28 +238,14 @@ def stratified_hash_sample(df: DataFrame, fractions: dict,
     return df.filter(_hash_bucket(key_col) < pct)
 
 
-def compression_ratio(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """zlib compression ratio per document — the classic gibberish/
-    boilerplate detector from published curation pipelines: highly
-    repetitive text compresses far below natural prose, random noise
-    barely compresses at all.
-
-    zlib is C-speed but not expressible in SQL, so this is the quality
-    family's one Arrow-batched pandas UDF (vectorized over the batch, one
-    JVM↔Python crossing per batch). The driver oracle compares against
-    ratios precomputed by the SAME ``zlib_ratio`` function outside Spark
-    (see queries._q_compression_ratio), which pins the distributed plumbing
-    exactly; a tolerance pytest pins the discrimination property.
-    """
-    return df.select(
-        F.col("doc_id"),
-        zlib_ratio_col(F.col(text_col)).alias("compression_ratio"),
-    )
-
-
 def zlib_ratio_col(text_col: Column) -> Column:
-    """The Arrow-batched zlib-ratio column behind ``compression_ratio``
-    (see ``token_count_cols`` for why the column form is exposed)."""
+    """zlib compression ratio per document — the classic gibberish/
+    boilerplate detector: highly repetitive text compresses far below
+    natural prose, random noise barely compresses at all. zlib is C-speed
+    but not expressible in SQL, so this is the quality family's one
+    Arrow-batched pandas UDF; the driver oracle compares against ratios
+    precomputed by the SAME ``zlib_ratio`` outside Spark (see
+    queries._q_doc_signals)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -314,7 +268,12 @@ def zlib_ratio(t) -> float:
 
 
 def repetition_cols(text_col: Column) -> list:
-    """Column set behind ``repetition_signals`` (see ``token_count_cols``)."""
+    """Repetition-based quality signals (Gopher-style), all native:
+
+    * ``dup_line_frac``   — 1 − distinct/total over newline-split lines;
+    * ``top_word_frac``   — share of tokens taken by the most frequent
+      token (boilerplate pages repeat one token heavily);
+    * ``dup_word_frac``   — 1 − distinct/total over tokens."""
     lines = F.split(text_col, "\n")
     n_lines = F.size(lines)
     toks = tokens(F.lower(text_col))
@@ -349,19 +308,6 @@ def repetition_cols(text_col: Column) -> list:
             .otherwise(F.lit(0.0)), 6
         ).alias("dup_word_frac"),
     ]
-
-
-def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Repetition-based quality signals (Gopher-style), all native:
-
-    * ``dup_line_frac``   — 1 − distinct/total over newline-split lines;
-    * ``top_word_frac``   — share of tokens taken by the most frequent
-      token (boilerplate pages repeat one token heavily);
-    * ``dup_word_frac``   — 1 − distinct/total over tokens.
-
-    Narrow map, exact SQL oracle.
-    """
-    return df.select(F.col("doc_id"), *repetition_cols(F.col(text_col)))
 
 
 def doc_signals(df: DataFrame, text_col: str = "text",

@@ -149,19 +149,22 @@ def run_stream_with_index_dedup(spark: SparkSession, landing_dir: str,
                                 out_dir: str, index_path: str,
                                 threshold: float = 0.5) -> None:
     """Streaming corpus ingestion against the persisted near-dup index
-    (operators/dedup_index.py): each micro-batch of documents is probed
-    against everything ingested so far (plus itself), written with its
-    dup verdicts, and its survivors merged into the index — so a document
-    near-duplicated in a LATER batch is flagged against the accumulated
-    corpus, the streaming form of examples/incremental_ingest.py's dump
-    cadence.
+    (operators/dedup_index.py): each micro-batch of documents runs one
+    ``ingest_dump`` step — probed against everything ingested so far (plus
+    itself), its flagged docs written as verdicts, its survivors merged
+    into the index — so a document near-duplicated in a LATER batch is
+    flagged against the accumulated corpus, the streaming form of
+    examples/incremental_ingest.py's dump cadence.
+
+    ``<out_dir>/verdicts`` holds FLAGGED docs only, one row per dup
+    (doc_id, dup_of, est_jaccard, source), partitioned by ``_batch``; a
+    survivor has no row.
 
     Idempotence under foreachBatch's at-least-once contract mirrors
-    run_stream_with_cache_merge: results are written partitioned by
-    ``_batch`` with dynamic overwrite (a retried batch replaces its own
-    partition), and the index merge consumes the batch's WRITTEN
-    partition; merge_minhash_index itself anti-joins already-indexed
-    doc_ids, so a replayed merge is a no-op.
+    run_stream_with_cache_merge: each batch overwrites its own
+    ``_batch=<id>`` partition (a retried batch replaces it), the index
+    merge excludes that WRITTEN partition, and merge_minhash_index
+    anti-joins already-indexed doc_ids, so a replayed merge is a no-op.
 
     The first batch bootstraps an EMPTY index and then flows through the
     same probe→write→merge path as every later batch — so batch 0's
@@ -171,20 +174,14 @@ def run_stream_with_index_dedup(spark: SparkSession, landing_dir: str,
     empty index is deterministic; a batch-0-builds-the-full-index shape
     would instead report different verdicts on any retry, once its own
     docs were indexed). One residual asymmetry, shared by every batch,
-    not just the bootstrap: a crash AFTER merge_minhash_index but before
-    the streaming checkpoint commits replays the probe against the
+    not just the bootstrap: a crash AFTER the merge but before the
+    streaming checkpoint commits replays the probe against the
     now-merged index, so a pair first reported source='batch' can be
     re-reported source='index' — dup_of, est_jaccard, and the index
     contents are stable either way (the merge itself replays to a
     no-op); only the source label upgrades.
     """
-    from pyspark.sql import functions as F
-
-    from pdf2doi_spark.operators.dedup_index import (
-        bootstrap_index_if_absent,
-        incremental_near_dups,
-        merge_minhash_index,
-    )
+    from pdf2doi_spark.operators.dedup_index import ingest_dump
 
     docs_stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -192,30 +189,9 @@ def run_stream_with_index_dedup(spark: SparkSession, landing_dir: str,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", "text")
-        # bootstrap iff genuinely absent — a populated index dir without
-        # _params is a crashed compaction and is REFUSED, never wiped
-        bootstrap_index_if_absent(spark, index_path, batch)
-        dups, batch_sigs = incremental_near_dups(
-            spark, index_path, batch, threshold=threshold,
-            return_sigs=True,
-        )
-        verdicts = batch.select("doc_id").join(dups, "doc_id", "left")
-        (verdicts.withColumn("_batch", F.lit(int(batch_id)))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("_batch").parquet(f"{out_dir}/verdicts"))
-        written = (
-            spark.read.parquet(f"{out_dir}/verdicts")
-            .filter(F.col("_batch") == int(batch_id))
-        )
-        # probe's checkpointed sigs reused: one signature pass per batch
-        merge_minhash_index(
-            spark, index_path, batch,
-            exclude=written.filter(F.col("dup_of").isNotNull())
-            .select("doc_id"),
-            sigs=batch_sigs,
-        )
+        ingest_dump(spark, index_path, batch_df.select("doc_id", "text"),
+                    f"{out_dir}/verdicts/_batch={int(batch_id)}",
+                    threshold=threshold)
 
     q = (
         docs_stream.writeStream.foreachBatch(sink)

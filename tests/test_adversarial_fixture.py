@@ -33,17 +33,15 @@ ROWS = [
     (9, "a b", "en", "src3"),                        # 2 words: below shingle floor
 ]
 
+# Driver queries over the documents table only (the fixture has no
+# embeddings/events views). doc_signals is checked separately below: its
+# compression oracle inlines sf0.01 values that don't apply to these rows.
 CHECKED = [
-    "title_select", "ngram_jaccard", "token_count", "lang_id",
-    "quality_score", "doc_fingerprint", "exact_dup_groups", "simhash",
-    "simhash_near_dups", "line_dedup", "winnowing_sketch",
-    "minhash_bands", "minhash_near_dups", "repetition_signals",
-    "corpus_pipeline", "doi_tier0", "ascii_scrub", "hash_sample",
+    "title_select", "ngram_jaccard", "quality_suite", "exact_dedup",
+    "simhash", "simhash_near_dups", "line_dedup", "winnowing_sketch",
+    "minhash_near_dups", "corpus_pipeline", "doi_tier0", "hash_sample",
     "metrics_cube", "distinct_counts", "pack_sequences", "mixture_sample",
-    # round-3 consolidated driver queries (documents-table only — the
-    # fixture has no embeddings/events views, and doc_signals' compression
-    # oracle inlines sf0.01 values that don't apply to these rows)
-    "quality_suite", "exact_dedup", "approx_stats",
+    "approx_stats",
 ]
 
 
@@ -86,6 +84,22 @@ def test_adversarial_query_vs_oracle(spark, adv_dir, adv_duck, name):
         raise AssertionError(
             f"{name}: value mismatch\nspark:\n{g[bad].head(5)}\nduck:\n{w[bad].head(5)}"
         )
+
+
+def test_adversarial_doc_signals_repetition(spark, adv_dir, adv_duck):
+    """doc_signals' repetition columns vs their SQL oracle on the
+    adversarial rows (empty, whitespace-only, highly repetitive text); the
+    zlib column is pinned at the oracle scale and by
+    test_operators.py::test_compression_ratio_discriminates."""
+    from pdf2doi_spark.queries import _BUILDERS, _REPETITION_SQL
+
+    got = _BUILDERS["doc_signals"]()[0](spark, adv_dir) \
+        .drop("compression_ratio").toPandas()
+    want = adv_duck.execute(_REPETITION_SQL).df()
+    assert len(got) == len(want) == len(ROWS)
+    assert sorted(got.columns) == sorted(want.columns)
+    g, w = _canon(got), _canon(want)
+    assert g.equals(w), f"doc_signals repetition mismatch:\n{g}\n{w}"
 
 
 # ------------------------------------------------------ adversarial events

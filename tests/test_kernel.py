@@ -482,12 +482,12 @@ def test_config_registry_parity():
 
 def test_ascii_scrub_honors_config_truncation(spark):
     from pdf2doi_spark.config import config
-    from pdf2doi_spark.operators.quality import ascii_scrub
+    from pdf2doi_spark.operators.quality import quality_suite
 
     df = spark.createDataFrame([(1, "y" * 500)], "doc_id long, text string")
     try:
         config.set("N_characters_in_pdf", 100)
-        out = ascii_scrub(df).collect()[0]["scrubbed_text"]
+        out = quality_suite(df).collect()[0]["scrubbed_text"]
         assert len(out) == 100
     finally:
         config.reset()

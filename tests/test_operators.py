@@ -27,9 +27,12 @@ def emb(spark, sf_dir):
 # ---------------------------------------------------------------- quality
 
 def test_token_count_matches_duckdb(docs, sf_dir):
-    from pdf2doi_spark.operators.quality import token_count
+    from pdf2doi_spark.operators.quality import token_count_cols
 
-    got = token_count(docs).toPandas().sort_values("doc_id").reset_index(drop=True)
+    got = (
+        docs.select("doc_id", *token_count_cols(F.col("text"))).toPandas()
+        .sort_values("doc_id").reset_index(drop=True)
+    )
     want = duckdb.sql(
         f"""
         SELECT doc_id,
@@ -44,25 +47,25 @@ def test_token_count_matches_duckdb(docs, sf_dir):
 
 
 def test_quality_and_lang(docs):
-    from pdf2doi_spark.operators.quality import lang_id, quality_score
+    from pdf2doi_spark.operators.quality import lang_id_cols, quality_score_cols
 
-    q = quality_score(docs).toPandas()
+    q = docs.select(*quality_score_cols(F.col("text"))).toPandas()
     assert (q["quality_score"] >= 0).all() and (q["quality_score"] <= 1).all()
     assert (q["n_tokens"] > 0).all()
 
-    l = lang_id(docs).toPandas()
+    l = docs.select(*lang_id_cols(F.col("text"))).toPandas()
     assert set(l["lang_pred"].unique()) <= {"en", "other"}
     # synthetic corpus contains 'the'/'a' words -> at least some 'en'
     assert (l["lang_pred"] == "en").any()
 
 
 def test_ascii_scrub_semantics(spark):
-    from pdf2doi_spark.operators.quality import ascii_scrub
+    from pdf2doi_spark.operators.quality import ascii_scrub_col
 
     df = spark.createDataFrame(
         [(1, "héllo\tworld\nrésumé " + "x" * 2000)], "doc_id long, text string"
     )
-    out = ascii_scrub(df).collect()[0]["scrubbed_text"]
+    out = df.select(ascii_scrub_col(F.col("text"))).collect()[0]["scrubbed_text"]
     assert len(out) == 1000
     assert "\t" not in out and "\n" not in out
     # non-ASCII replaced by spaces (reference finders.py:844)
@@ -422,14 +425,22 @@ def test_ann_ivf_full_probe_equals_exact(spark, sf_dir):
 
 def test_approx_stats_tolerance(spark, sf_dir):
     """HLL distinct counts within 10% of exact; approx median within the
-    exact p25-p75 band (both per source)."""
-    from pdf2doi_spark.queries import build_all_queries
+    exact p25-p75 band (both per source) — tighter than the driver's
+    approx_stats verdicts, which must all hold too."""
+    from pdf2doi_spark.queries import _BUILDERS
 
+    verdicts = _BUILDERS["approx_stats"]()[0](spark, sf_dir).toPandas()
+    assert verdicts[["hll_texts_ok", "hll_ids_ok", "approx_median_ok"]].all().all()
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     approx = (
-        build_all_queries()["approx_stats_sketch"](spark, sf_dir)
+        d.groupBy("source")
+        .agg(
+            F.approx_count_distinct("text").alias("approx_distinct_texts"),
+            F.percentile_approx(F.length("text"), F.lit(0.5), F.lit(1000))
+            .alias("approx_median_len"),
+        )
         .toPandas().set_index("source")
     )
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     exact = (
         d.groupBy("source")
         .agg(
@@ -693,7 +704,7 @@ def test_compression_ratio_discriminates(spark):
     compresses — the discrimination property the operator exists for."""
     import hashlib
 
-    from pdf2doi_spark.operators.quality import compression_ratio
+    from pdf2doi_spark.operators.quality import zlib_ratio_col
 
     repetitive = "the same phrase over and over " * 40
     prose = ("Identifier extraction over web crawls requires regex tiers, "
@@ -704,7 +715,10 @@ def test_compression_ratio_discriminates(spark):
     df = spark.createDataFrame(
         [(1, repetitive), (2, prose), (3, noise)], "doc_id long, text string"
     )
-    r = compression_ratio(df).toPandas().set_index("doc_id")["compression_ratio"]
+    r = (
+        df.select("doc_id", zlib_ratio_col(F.col("text")).alias("r"))
+        .toPandas().set_index("doc_id")["r"]
+    )
     assert r[1] < r[2] < r[3]
     assert r[1] < 0.1 and r[3] > 0.5
 

@@ -64,10 +64,10 @@ def test_cache_join_is_broadcast(spark, pages_parquet):
 
 
 def test_native_ops_stay_in_codegen(spark, sf_dir):
-    from pdf2doi_spark.operators.quality import quality_score
+    from pdf2doi_spark.operators.quality import quality_score_cols
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = _plan(quality_score(docs))
+    plan = _plan(docs.select("doc_id", *quality_score_cols(docs["text"])))
     # JVM-side end-to-end: no Python evaluation nodes in the native path.
     # (Array higher-order functions evaluate interpreted inside the Project
     # — still JVM — so we assert absence of Python nodes, not full codegen.)

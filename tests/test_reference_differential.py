@@ -13,6 +13,7 @@ This is evidence of parity, not a copy: the reference module is imported
 read-only at test time and never shipped.
 """
 import importlib.util
+import os
 import random
 import re
 
@@ -22,6 +23,13 @@ from hypothesis import given, settings, strategies as st
 import pdf2doi_spark.core.patterns as ours
 
 REF_PATH = "/root/reference/pdf2doi/patterns.py"
+
+if not os.path.exists(REF_PATH):
+    pytest.skip(
+        f"reference pattern module not found at {REF_PATH}; parity stays "
+        "pinned by the ported corpora in tests/test_pattern_parity.py",
+        allow_module_level=True,
+    )
 
 
 @pytest.fixture(scope="module")

@@ -223,11 +223,12 @@ def test_stream_index_dedup_flags_cross_batch_dup(spark, tmp_path):
 
     v = spark.read.parquet(f"{out}/verdicts")
     rows = {r.doc_id: (r.dup_of, r.source) for r in v.collect()}
-    assert rows[1] == (None, None) and rows[2] == (None, None)  # bootstrap
+    assert 1 not in rows and 2 not in rows  # survivors have no verdict row
     assert rows[3] == (1, "batch")  # batch-0 intra-batch dup IS flagged
     assert rows[10] == (1, "index")
-    assert rows[11] == (None, None)
+    assert 11 not in rows
     assert rows[20] == (11, "index")
+    assert set(rows) == {3, 10, 20}
     # index holds exactly the survivors (3 never entered)
     ids = {r.doc_id for r in
            spark.read.parquet(index + "/sigs").select("doc_id").collect()}
