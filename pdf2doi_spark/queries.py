@@ -1202,9 +1202,23 @@ def _compression_oracle_values() -> str | None:
     return _COMPRESSION_ORACLE_CACHE[_ORACLE_SF_DIR]
 
 
-# Repetition-signal oracle over the same synthesized multi-line input as
-# _q_doc_signals; also run on its own over tests/test_adversarial_fixture.py
-# (the compression values below only hold at the oracle scale).
+def _rep_text() -> F.Column:
+    """Synthesized multi-line text: every third doc repeats its own head
+    line (a known duplicate-line fraction). ``_REPETITION_SQL``'s ``inp``
+    CTE is its DuckDB mirror."""
+    seg = F.substring(F.col("text"), 1, 60)
+    return F.concat(
+        F.col("text"), F.lit("\n"),
+        F.when(F.col("doc_id") % 3 == 0, seg).otherwise(
+            F.concat(F.lit("tail "), F.col("doc_id").cast("string"))
+        ),
+        F.lit("\n"), seg,
+    )
+
+
+# Repetition-signal oracle over ``_rep_text``; also run on its own over
+# tests/test_adversarial_fixture.py (the compression values below only
+# hold at the oracle scale).
 _REPETITION_SQL = r"""
         WITH inp AS (
           SELECT doc_id,
@@ -1242,22 +1256,13 @@ _REPETITION_SQL = r"""
 
 def _q_doc_signals():
     """Repetition signals + compression ratio fused into one projection
-    (quality.doc_signals) — repetition over a synthesized multi-line
-    variant (every third doc repeats its own head line: a known
+    (quality.doc_signals) — repetition over ``_rep_text`` (a known
     duplicate-line fraction), compression over the plain text (so the
     precomputed zlib oracle values still apply)."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pdf2doi_spark.operators.quality import doc_signals
 
-        seg = F.substring(F.col("text"), 1, 60)
-        rep_inp = F.concat(
-            F.col("text"), F.lit("\n"),
-            F.when(F.col("doc_id") % 3 == 0, seg).otherwise(
-                F.concat(F.lit("tail "), F.col("doc_id").cast("string"))
-            ),
-            F.lit("\n"), seg,
-        )
-        return doc_signals(_docs(spark, sf_dir), rep_col=rep_inp)
+        return doc_signals(_docs(spark, sf_dir), rep_col=_rep_text())
 
     vals = _compression_oracle_values()
     if vals is None:
@@ -1580,29 +1585,34 @@ def _q_sketch_overlap():
     return q, sql
 
 
+def _dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic near-dup candidate graph: chain edges doc→doc+1 where
+    doc%5<2, long-range edges doc→doc+7 where doc%11==0 — components that
+    genuinely merge across edge kinds."""
+    d = _docs(spark, sf_dir).select("doc_id")
+    ids = d.select(F.col("doc_id").alias("b"))
+    chain = (
+        d.filter(F.col("doc_id") % 5 < 2)
+        .select(F.col("doc_id").alias("a"), (F.col("doc_id") + 1).alias("b"))
+        .join(ids, "b")
+    )
+    longr = (
+        d.filter(F.col("doc_id") % 11 == 0)
+        .select(F.col("doc_id").alias("a"), (F.col("doc_id") + 7).alias("b"))
+        .join(ids, "b")
+    )
+    return chain.unionByName(longr)
+
+
 def _q_dup_components_star():
-    """Connected components over a deterministic near-dup candidate graph
-    (chain edges doc→doc+1 where doc%5<2, long-range edges doc→doc+7 where
-    doc%11==0 — components that genuinely merge across edge kinds).
-    Spark: large-star/small-star alternating rounds (O(log diameter));
-    oracle: DuckDB recursive CTE computing min reachable id — the same
-    min-label fixpoint by definition."""
+    """Connected components over ``_dup_graph``. Spark: large-star/
+    small-star alternating rounds (O(log diameter)); oracle: DuckDB
+    recursive CTE computing min reachable id — the same min-label fixpoint
+    by definition."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pdf2doi_spark.operators.dedup import connected_components_star
 
-        d = _docs(spark, sf_dir).select("doc_id")
-        ids = d.select(F.col("doc_id").alias("b"))
-        chain = (
-            d.filter(F.col("doc_id") % 5 < 2)
-            .select(F.col("doc_id").alias("a"), (F.col("doc_id") + 1).alias("b"))
-            .join(ids, "b")
-        )
-        longr = (
-            d.filter(F.col("doc_id") % 11 == 0)
-            .select(F.col("doc_id").alias("a"), (F.col("doc_id") + 7).alias("b"))
-            .join(ids, "b")
-        )
-        return connected_components_star(chain.unionByName(longr))
+        return connected_components_star(_dup_graph(spark, sf_dir))
 
     sql = """
         WITH RECURSIVE d AS (SELECT doc_id FROM documents),

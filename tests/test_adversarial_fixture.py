@@ -33,15 +33,18 @@ ROWS = [
     (9, "a b", "en", "src3"),                        # 2 words: below shingle floor
 ]
 
-# Driver queries over the documents table only (the fixture has no
-# embeddings/events views). doc_signals is checked separately below: its
+# Queries over the documents table only (the fixture has no
+# embeddings/events views): driver queries plus the per-operator pairs of
+# tests/operator_oracles.py. doc_signals is checked separately below: its
 # compression oracle inlines sf0.01 values that don't apply to these rows.
 CHECKED = [
-    "title_select", "ngram_jaccard", "quality_suite", "exact_dedup",
-    "simhash", "simhash_near_dups", "line_dedup", "winnowing_sketch",
-    "minhash_near_dups", "corpus_pipeline", "doi_tier0", "hash_sample",
+    "title_select", "ngram_jaccard", "token_count", "lang_id",
+    "quality_score", "doc_fingerprint", "exact_dup_groups", "simhash",
+    "simhash_near_dups", "line_dedup", "winnowing_sketch",
+    "minhash_bands", "minhash_near_dups", "repetition_signals",
+    "corpus_pipeline", "doi_tier0", "ascii_scrub", "hash_sample",
     "metrics_cube", "distinct_counts", "pack_sequences", "mixture_sample",
-    "approx_stats",
+    "quality_suite", "exact_dedup", "approx_stats",
 ]
 
 
@@ -68,9 +71,9 @@ def adv_duck(adv_dir):
 
 @pytest.mark.parametrize("name", CHECKED)
 def test_adversarial_query_vs_oracle(spark, adv_dir, adv_duck, name):
-    from pdf2doi_spark.queries import _BUILDERS
+    from tests.test_driver_contract import ALL_BUILDERS
 
-    q, sql = _BUILDERS[name]()
+    q, sql = ALL_BUILDERS[name]()
     if sql is None:
         pytest.skip("rows-only query")
     got = q(spark, adv_dir).toPandas()

@@ -52,13 +52,15 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 # The full builder set (driver registry + the pytest-only oracles of
-# operators no driver query covers): every registered oracle comparison
-# runs here, whether or not the name occupies one of the driver gate's
-# 50 rows.
+# operators no driver query covers + the per-operator pairs in
+# tests/operator_oracles.py): every oracle comparison runs here, whether
+# or not the name occupies one of the driver gate's 50 rows.
 from pdf2doi_spark.queries import _BUILDERS
+from tests.operator_oracles import OPERATOR_BUILDERS
 
-QUERIES = {name: builder()[0] for name, builder in _BUILDERS.items()}
-ORACLES = {name: sql for name, builder in _BUILDERS.items()
+ALL_BUILDERS = {**_BUILDERS, **OPERATOR_BUILDERS}
+QUERIES = {name: builder()[0] for name, builder in ALL_BUILDERS.items()}
+ORACLES = {name: sql for name, builder in ALL_BUILDERS.items()
            if (sql := builder()[1]) is not None}
 PYTEST_ONLY = {"incremental_near_dups", "latest_capture", "chunk_documents",
                "domain_curation"}
@@ -75,6 +77,7 @@ def test_driver_registry_fits_gate_cap():
     assert len(drv_q) <= 50
     assert set(_BUILDERS) == set(drv_q) | PYTEST_ONLY
     assert not set(drv_q) & PYTEST_ONLY
+    assert not set(_BUILDERS) & set(OPERATOR_BUILDERS)
     assert set(drv_o) <= set(drv_q)
     for name, sql in drv_o.items():
         assert ORACLES[name] == sql
