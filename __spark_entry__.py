@@ -25,11 +25,11 @@ if _REPO not in sys.path:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: identifier + main-content extraction over the
     sf0.001 pages table; one fused Arrow kernel, no driver-side loops."""
-    from pdf2doi_spark.queries import _ensure_shipped
     from pdf2doi_spark.operators.extract import extract_identifiers
     from pdf2doi_spark.pages import pages_from_documents
+    from pdf2doi_spark.session import ship_package
 
-    _ensure_shipped(spark)
+    ship_package(spark)
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     return extract_identifiers(pages)
 

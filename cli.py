@@ -102,18 +102,10 @@ def main() -> None:
             print(f"{id_type:<15s} {ident:<40s} {tag_url:<10s}")
             return
 
-        from pdf2doi_spark.sources.io import resolve_pages_source
+        from pdf2doi_spark.sources.io import read_cache, resolve_pages_source
 
         pages = resolve_pages_source(spark, args.target, glob=args.glob)
-
-        cache_df = None
-        # fs_exists, not os.path.exists: an hdfs://s3a:// cache path is
-        # invisible to os.path and would silently skip the method-#1 fast
-        # path (the exact failure mode io.py's fs layer exists to prevent)
-        from pdf2doi_spark.sources.io import fs_exists
-
-        if args.cache and fs_exists(spark, args.cache):
-            cache_df = spark.read.parquet(args.cache)
+        cache_df = read_cache(spark, args.cache)
         counters = None
         if args.verbose:
             from pdf2doi_spark.operators.extract import ExtractionCounters

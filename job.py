@@ -96,6 +96,7 @@ def main() -> None:
     )
     from pdf2doi_spark.sources.io import (
         merge_cache,
+        read_cache,
         resolve_pages_source,
         run_resumable,
     )
@@ -135,16 +136,7 @@ def main() -> None:
         if args.salt_partitions > 0:
             pages = repartition_salted(pages, args.salt_partitions)
 
-        cache = None
-        if args.cache:
-            # Hadoop FS probe, not os.path: the production cache lives on
-            # hdfs://ized storage where a driver-local exists() is silently
-            # False — that would skip the fast path AND make merge_cache
-            # treat the populated cache as brand-new.
-            from pdf2doi_spark.sources.io import fs_exists
-
-            if fs_exists(spark, args.cache):
-                cache = spark.read.parquet(args.cache)
+        cache = read_cache(spark, args.cache)
 
         # Write-once contract: --output belongs to ONE logical input. A
         # sealed output dir (all shards done) short-circuits to the stored

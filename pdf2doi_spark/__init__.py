@@ -37,20 +37,14 @@ def pdf2doi(target: str, spark=None, cache: str = None,
     """
     from pdf2doi_spark.operators.extract import extract_identifiers
     from pdf2doi_spark.session import build_session
-    from pdf2doi_spark.sources.io import fs_exists, resolve_pages_source
+    from pdf2doi_spark.sources.io import read_cache, resolve_pages_source
 
     if replace_arxiv is None:  # fall back to the reference-parity registry
         replace_arxiv = bool(config.get("replace_arxivID_by_DOI_when_available"))
     if spark is None:
         spark = build_session()
     pages = resolve_pages_source(spark, target)
-
-    cache_df = None
-    # Hadoop FS probe (io.py:30-36): os.path.exists is silently False on
-    # hdfs:///s3a:// caches, which would drop the method-#1 fast path.
-    if cache is not None and fs_exists(spark, cache):
-        cache_df = spark.read.parquet(cache)
     return extract_identifiers(
         pages, replace_arxiv=replace_arxiv, with_text=with_text,
-        cache=cache_df,
+        cache=read_cache(spark, cache),
     )

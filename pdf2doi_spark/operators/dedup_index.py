@@ -36,9 +36,9 @@ Scale shape of a batch probe (``incremental_near_dups``):
 
 ``merge_minhash_index`` appends the batch's survivors idempotently
 (anti-join on doc_id against the touched ``sp`` partitions first, the
-merge_cache pattern) and hash-distributes on the partition key before the
-partitioned write, so each merge adds at most ONE file per touched
-partition (see sources/io.py on the tasks×shards explosion).
+merge_cache pattern). Every table write goes through
+``sources.io.write_sharded``, so each merge adds at most ONE file per
+touched partition.
 
 Reference: the reference tool has no incremental mode (pdf2doi processes
 files one-shot, reference main.py:222-260); this family is part of the
@@ -61,6 +61,9 @@ from pdf2doi_spark.sources.io import (
     _fs_read_small,
     _fs_write_small,
     fs_exists,
+    read_sharded,
+    shard_of,
+    write_sharded,
 )
 
 _PARAMS_FILE = "_params"
@@ -78,32 +81,23 @@ def load_index_params(spark: SparkSession, index_path: str) -> dict:
     return json.loads(_fs_read_small(spark, _params_path(index_path)))
 
 
-def _sp(n_parts: int):
-    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_parts)).cast("int")
-
-
-def _pq(n_parts: int):
-    return F.pmod(
-        F.xxhash64(F.col("band_idx"), F.col("band_hash")), F.lit(n_parts)
-    ).cast("int")
-
-
-def _read_index_table(spark: SparkSession, root: str, table: str,
-                      params: dict) -> DataFrame:
+def _index_table(spark: SparkSession, root: str, params: dict,
+                 table: str) -> DataFrame:
     """Read ``sigs``/``postings`` with the schema captured at build time
-    (stored in ``_params``). An explicit schema makes a ZERO-ROW table
-    readable: a partitionBy write of an empty frame leaves only _SUCCESS,
-    and schema inference over that raises UNABLE_TO_INFER_SCHEMA — so an
+    (stored in ``_params``), which keeps a ZERO-ROW table readable: an
     index bootstrapped from a batch with no signaturable docs (all short /
-    NULL ids) would otherwise wedge every later probe and merge. Pre-schema
-    indexes (no stored schema) fall back to inference."""
-    schema_json = params.get(f"{table}_schema")
-    reader = spark.read
-    if schema_json is not None:
-        from pyspark.sql.types import StructType
+    NULL ids) would otherwise wedge every later probe and merge. Indexes
+    built before schemas were stored fall back to inference. A missing
+    table raises: read as empty, it would silently drop every collision."""
+    from pyspark.sql.types import StructType
 
-        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
-    return reader.parquet(f"{root}/{table}")
+    path = f"{root}/{table}"
+    if not fs_exists(spark, path):
+        raise ValueError(f"minhash index {root!r} has no {table} table")
+    schema_json = params.get(f"{table}_schema")
+    schema = (StructType.fromJson(json.loads(schema_json))
+              if schema_json is not None else None)
+    return read_sharded(spark, path, schema)
 
 
 def build_minhash_index(spark: SparkSession, docs: DataFrame,
@@ -121,28 +115,23 @@ def build_minhash_index(spark: SparkSession, docs: DataFrame,
             f"num_hashes ({num_hashes}) must divide evenly into "
             f"bands ({bands})"
         )
+    root = index_path.rstrip("/")
     sigs = _sig_df(docs, text_col, num_hashes, hash_fn) \
         .dropDuplicates(["doc_id"]) \
-        .withColumn("sp", _sp(n_parts))
-    (sigs.repartition(F.col("sp"))
-         .write.mode("overwrite").partitionBy("sp")
-         .parquet(index_path.rstrip("/") + "/sigs"))
+        .withColumn("sp", shard_of(n_parts, "doc_id"))
+    write_sharded(sigs, root + "/sigs", "sp", "overwrite")
+    # bands from the JUST-WRITTEN sigs: one signature pass total, and the
+    # postings are derived from exactly the rows the sigs table stores
+    posts = _bands_from_sigs(read_sharded(spark, root + "/sigs", sigs.schema),
+                             num_hashes, bands, hash_fn) \
+        .withColumn("pq", shard_of(n_parts, "band_idx", "band_hash"))
+    write_sharded(posts, root + "/postings", "pq", "overwrite")
     params = {"num_hashes": num_hashes, "bands": bands,
               "hash_fn": hash_fn, "n_parts": n_parts,
               # the build-time schemas make zero-row tables readable later
-              # (_read_index_table) — an empty corpus is a VALID index
-              "sigs_schema": sigs.schema.json()}
-    # bands from the JUST-WRITTEN sigs: one signature pass total, and the
-    # postings are derived from exactly the rows the sigs table stores
-    stored = _read_index_table(
-        spark, index_path.rstrip("/"), "sigs", params
-    )
-    posts = _bands_from_sigs(stored, num_hashes, bands, hash_fn) \
-        .withColumn("pq", _pq(n_parts))
-    params["postings_schema"] = posts.schema.json()
-    (posts.repartition(F.col("pq"))
-          .write.mode("overwrite").partitionBy("pq")
-          .parquet(index_path.rstrip("/") + "/postings"))
+              # (_index_table) — an empty corpus is a VALID index
+              "sigs_schema": sigs.schema.json(),
+              "postings_schema": posts.schema.json()}
     # params last: their presence marks the index complete (load refuses
     # a half-written index)
     _fs_write_small(spark, _params_path(index_path), json.dumps(params))
@@ -247,15 +236,13 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
         _sig_df(new_docs, text_col, num_hashes, hash_fn)
     )
     new_bands = _bands_from_sigs(new_sigs, num_hashes, bands_n, hash_fn) \
-        .withColumn("pq", _pq(n_parts))
+        .withColumn("pq", shard_of(n_parts, "band_idx", "band_hash"))
     if max_bucket is not None:
         new_bands = cap_buckets(new_bands, ["band_idx", "band_hash"],
                                 max_bucket)
     touched = [r.pq for r in new_bands.select("pq").distinct().collect()]
 
-    posts = _pruned(
-        _read_index_table(spark, root, "postings", p), "pq", touched
-    )
+    posts = _pruned(_index_table(spark, root, p, "postings"), "pq", touched)
     if max_bucket is not None:
         posts = cap_buckets(posts, ["band_idx", "band_hash"], max_bucket)
     coll = (
@@ -271,12 +258,12 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
     )
 
     old_ids = coll.select(F.col("dup_of").alias("doc_id")).distinct() \
-        .withColumn("sp", _sp(n_parts))
+        .withColumn("sp", shard_of(n_parts, "doc_id"))
     sp_touched = [r.sp for r in old_ids.select("sp").distinct().collect()]
     # rename the historical side up front: unqualified column refs
     # after a chain of joins on like-named columns are ambiguous
     old_sigs = (
-        _pruned(_read_index_table(spark, root, "sigs", p), "sp", sp_touched)
+        _pruned(_index_table(spark, root, p, "sigs"), "sp", sp_touched)
         .join(old_ids.select("doc_id"), "doc_id", "left_semi")
         .select(F.col("doc_id").alias("_oid"),
                 *[F.col(f"mh{i}").alias(f"omh{i}")
@@ -349,10 +336,10 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
     re-merges to a no-op. ``exclude``'s plan is evaluated lazily inside
     this call — build it from the index BEFORE merging (the normal
     probe-then-merge order); its parquet reads keep their pre-append file
-    listing, so the self-reference is safe in that order. Appends are hash-distributed on the partition
-    key → at most one new file per touched partition per merge; compact
-    with ``build_minhash_index`` over the full corpus when file counts
-    warrant (one rewrite, offline).
+    listing, so the self-reference is safe in that order. Each merge adds
+    at most one file per touched partition; compact with
+    ``compact_minhash_index`` when file counts warrant (one rewrite,
+    offline).
 
     Crash ordering (ADVICE r4): **postings are appended BEFORE sigs.**
     Sigs is the idempotency key — a doc is "in the index" iff its sigs
@@ -407,11 +394,11 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
     # url in the same dump): two sig rows for one id would double its
     # postings and break the postings == sigs × bands invariant
     sigs = base.dropDuplicates(["doc_id"]) \
-        .withColumn("sp", _sp(n_parts)).persist()
+        .withColumn("sp", shard_of(n_parts, "doc_id")).persist()
     try:
         sp_touched = [r.sp for r in sigs.select("sp").distinct().collect()]
         existing = _pruned(
-            _read_index_table(spark, root, "sigs", p), "sp", sp_touched
+            _index_table(spark, root, p, "sigs"), "sp", sp_touched
         ).select("doc_id")
         # EAGER lineage cut, not persist(): fresh's plan reads the very
         # sigs path the first write appends to, and that write's commit
@@ -428,14 +415,10 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
         # indexed, so it must be the LAST thing that happens).
         posts = (
             _bands_from_sigs(fresh, num_hashes, bands_n, hash_fn)
-            .withColumn("pq", _pq(n_parts))
+            .withColumn("pq", shard_of(n_parts, "band_idx", "band_hash"))
         )
-        (posts.repartition(F.col("pq"))
-              .write.mode("append").partitionBy("pq")
-              .parquet(root + "/postings"))
-        (fresh.repartition(F.col("sp"))
-              .write.mode("append").partitionBy("sp")
-              .parquet(root + "/sigs"))
+        write_sharded(posts, root + "/postings", "pq", "append")
+        write_sharded(fresh, root + "/sigs", "sp", "append")
     finally:
         sigs.unpersist()
 
@@ -517,16 +500,14 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     root = index_path.rstrip("/")
     params_raw = json.dumps(p)
     sigs_tmp, posts_tmp = f"{root}/sigs.cmp", f"{root}/postings.cmp"
-    sigs = _read_index_table(spark, root, "sigs", p)
-    (sigs.repartition(F.col("sp"))
-         .write.mode("overwrite").partitionBy("sp").parquet(sigs_tmp))
+    sigs = _index_table(spark, root, p, "sigs")
+    write_sharded(sigs, sigs_tmp, "sp", "overwrite")
     posts = (
-        _bands_from_sigs(spark.read.schema(sigs.schema).parquet(sigs_tmp),
+        _bands_from_sigs(read_sharded(spark, sigs_tmp, sigs.schema),
                          p["num_hashes"], p["bands"], p["hash_fn"])
-        .withColumn("pq", _pq(p["n_parts"]))
+        .withColumn("pq", shard_of(p["n_parts"], "band_idx", "band_hash"))
     )
-    (posts.repartition(F.col("pq"))
-          .write.mode("overwrite").partitionBy("pq").parquet(posts_tmp))
+    write_sharded(posts, posts_tmp, "pq", "overwrite")
     tmps = {"sigs": (sigs_tmp, "sp", sigs.schema),
             "postings": (posts_tmp, "pq", posts.schema)}
     # stage the params restore BEFORE anything destructive happens
@@ -535,10 +516,8 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     # both compacted copies exist: mark the index incomplete, swap, re-mark
     _rmtree(_params_path(index_path), spark)
     for table, (tmp, part_col, schema) in tmps.items():
-        (spark.read.schema(schema).parquet(tmp)
-             .repartition(F.col(part_col))
-             .write.mode("overwrite").partitionBy(part_col)
-             .parquet(f"{root}/{table}"))
+        write_sharded(read_sharded(spark, tmp, schema), f"{root}/{table}",
+                      part_col, "overwrite")
     _fs_rename(spark, params_tmp, _params_path(index_path))
     for tmp, _pc, _s in tmps.values():
         _rmtree(tmp, spark)
@@ -555,5 +534,5 @@ def minhash_index_profile(spark: SparkSession, index_path: str) -> DataFrame:
     from pdf2doi_spark.operators.dedup import bucket_histogram
 
     p = load_index_params(spark, index_path)
-    posts = _read_index_table(spark, index_path.rstrip("/"), "postings", p)
+    posts = _index_table(spark, index_path.rstrip("/"), p, "postings")
     return bucket_histogram(posts, ["band_idx", "band_hash"])

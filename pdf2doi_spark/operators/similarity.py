@@ -23,6 +23,8 @@ from typing import List, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pdf2doi_spark.sources.io import write_sharded
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -223,7 +225,7 @@ def build_ivf_index(df: DataFrame, path: str, id_col: str = "vec_id",
     (partition-pruned probes) and ``{path}/codebook`` (the centroids the
     cells were assigned against)."""
     assigned, rows = assign_ivf_cells(df, id_col, vec_col, label_col)
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/cells")
+    write_sharded(assigned, f"{path}/cells", "cell", "overwrite")
     spark = df.sparkSession
     spark.createDataFrame(
         [(int(lab), c) for lab, c in rows], "cell int, centroid array<double>"

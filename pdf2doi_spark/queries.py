@@ -34,10 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from pdf2doi_spark.core.patterns import arxiv_regexp, doi_regexp
+from pdf2doi_spark.session import ship_package
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-_SHIPPED = set()
 
 
 def _log_lsh_params(query: str, n_bands: int, planes_per_band: int) -> None:
@@ -52,17 +51,6 @@ def _log_lsh_params(query: str, n_bands: int, planes_per_band: int) -> None:
         "%s: derived embedding LSH params n_bands=%d planes_per_band=%d",
         query, n_bands, planes_per_band,
     )
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    from pdf2doi_spark.session import ship_package
-
-    # applicationId is unique per context; id() of a GC'd-and-reallocated
-    # SparkContext can collide and silently skip the ship
-    key = spark.sparkContext.applicationId
-    if key not in _SHIPPED:
-        ship_package(spark)
-        _SHIPPED.add(key)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +228,7 @@ def _q_arxiv_tier0():
 
 def _q_standardise():
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
 
         @pandas_udf("string")
         def std(s: pd.Series) -> pd.Series:
@@ -351,7 +339,7 @@ _CASCADE_EXPECT_SQL = f"""
 
 def _q_extract_cascade():
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.extract import extract_identifiers
         from pdf2doi_spark.pages import pages_from_documents
 
@@ -367,7 +355,7 @@ def _q_extract_cascade_noarxiv():
     """Strict reference-offline parity mode (``-no_arxiv2doi``): arXiv IDs
     are kept, never rewritten to synthetic DOIs (SURVEY.md V4)."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.extract import extract_identifiers
         from pdf2doi_spark.pages import pages_from_documents
 
@@ -389,7 +377,7 @@ def _q_extract_cascade_noarxiv():
 
 def _q_method_metrics():
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.extract import extract_identifiers, method_metrics
         from pdf2doi_spark.pages import pages_from_documents
 
@@ -417,7 +405,7 @@ def _q_main_content():
     trim; the document texts contain no entities or control whitespace,
     asserted in the fixtures)."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.extract import extract_identifiers
         from pdf2doi_spark.pages import pages_from_documents
 
@@ -465,7 +453,7 @@ def _q_main_content():
 
 def _q_report_format():
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.extract import (
             extract_identifiers,
             format_report,
@@ -611,33 +599,42 @@ _DUP_INPUT_SQL = (
 )
 
 
-_SHINGLE_SQL = r"""
-        WITH words AS (
+def _shingle_sql(src: str = "documents") -> str:
+    """CTEs ``words`` and ``sh``: each doc's distinct word 2-shingles (docs
+    of at least 3 words) over ``src``'s (doc_id, text)."""
+    return rf"""
+        words AS (
           SELECT doc_id,
                  string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-          FROM documents
+          FROM {src}
         ), sh AS (
           SELECT doc_id,
                  list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS s
           FROM words WHERE len(w) >= 3
-        )
-"""
+        )"""
 
 
-def _q_simhash():
-    """64-bit SimHash. The numpy bit-vote kernel IS SQL-expressible after
-    all — per token the hash is the big-endian first 8 md5 bytes, so the
-    oracle unnests (token × bit) pairs, majority-votes each bit, and
-    reassembles the signed 64-bit value (two's-complement conversion via
-    HUGEINT)."""
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
-        from pdf2doi_spark.operators.dedup import simhash
+def _minhash_sql(src: str = "documents") -> str:
+    """``_shingle_sql`` plus ``sig`` (12 keyed-min md5 minhashes) and
+    ``bands`` (doc_id, band_idx, band_hash: 4 md5 band hashes of 3 rows) —
+    the oracle twin of ``dedup._sig_df``/``_bands_from_sigs`` (md5)."""
+    return _shingle_sql(src) + r""", sig AS (
+          SELECT doc_id,
+                 [list_aggregate(list_transform(s, x -> md5(CAST(k AS VARCHAR) || ':' || x)), 'min')
+                  for k in range(0, 12)] AS mh
+          FROM sh
+        ), bands AS (
+          SELECT doc_id, CAST(b.band_idx AS INT) AS band_idx,
+                 md5(array_to_string(mh[3*b.band_idx + 1 : 3*b.band_idx + 3], '|')) AS band_hash
+          FROM sig, (SELECT unnest(range(0, 4)) AS band_idx) b
+        )"""
 
-        return simhash(_docs(spark, sf_dir))
 
-    sql = r"""
-        WITH toks AS (
+# CTEs toks/th/bits/v: SimHash's per-bit majority vote over the documents
+# table; ``v.val`` is the unsigned 64-bit value as HUGEINT (NULL for docs
+# without tokens).
+_SIMHASH_VOTE_SQL = r"""
+        toks AS (
           -- empty tokens filtered instead of a trim() gate: DuckDB trim()
           -- strips spaces only, so whitespace-only text would otherwise
           -- contribute a bogus '' token the Python kernel never sees
@@ -657,7 +654,54 @@ def _q_simhash():
           SELECT doc_id,
                  sum(CASE WHEN 2 * ones > n THEN CAST(1::UBIGINT << j AS HUGEINT) ELSE 0 END) AS val
           FROM bits GROUP BY doc_id
+        )"""
+
+
+def _planes_sql(n_planes: int, dim: int = 64) -> str:
+    """CTEs ``planes`` and ``pl``: the md5-parity ±1 hyperplanes of the
+    embedding LSH (similarity.py), one ordered vector ``sv`` per plane."""
+    return f"""
+        planes AS (
+          SELECT p, d,
+                 CASE WHEN ('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 2))::INT & 1 = 1
+                      THEN 1.0 ELSE -1.0 END AS s
+          FROM (SELECT unnest(range(0, {n_planes})) AS p), (SELECT unnest(range(0, {dim})) AS d)
+        ), pl AS (
+          -- ordered plane vectors: projections are an ORDERED
+          -- list_dot_product, matching Spark's left-to-right fold exactly
+          -- (an unordered GROUP BY sum could land a near-zero projection on
+          -- the other side of >= 0 and flip a signature bit)
+          SELECT p, list(s ORDER BY d) AS sv FROM planes GROUP BY p
+        )"""
+
+
+# Min-label connected components of the undirected graph in CTE
+# ``edges(a, b)``; the query must open with WITH RECURSIVE.
+_COMPONENTS_SQL = """
+        sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
+        reach(node, r) AS (
+          SELECT DISTINCT a AS node, a AS r FROM sym
+          UNION
+          SELECT s.b, reach.r FROM reach JOIN sym s ON s.a = reach.node
         )
+        SELECT node, min(r) AS component FROM reach GROUP BY node ORDER BY node
+"""
+
+
+def _q_simhash():
+    """64-bit SimHash. The numpy bit-vote kernel IS SQL-expressible after
+    all — per token the hash is the big-endian first 8 md5 bytes, so the
+    oracle unnests (token × bit) pairs, majority-votes each bit, and
+    reassembles the signed 64-bit value (two's-complement conversion via
+    HUGEINT)."""
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ship_package(spark)
+        from pdf2doi_spark.operators.dedup import simhash
+
+        return simhash(_docs(spark, sf_dir))
+
+    sql = rf"""
+        WITH {_SIMHASH_VOTE_SQL}
         SELECT d.doc_id,
                CAST(coalesce(CASE WHEN v.val >= 9223372036854775808
                                   THEN v.val - 18446744073709551616
@@ -680,7 +724,7 @@ def _q_simhash_near_dups():
     MAX_BUCKET = 50
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.dedup import simhash_near_duplicates
 
         return simhash_near_duplicates(
@@ -688,27 +732,7 @@ def _q_simhash_near_dups():
         )
 
     sql = rf"""
-        WITH toks AS (
-          -- empty tokens filtered instead of a trim() gate: DuckDB trim()
-          -- strips spaces only, so whitespace-only text would otherwise
-          -- contribute a bogus '' token the Python kernel never sees
-          SELECT doc_id,
-                 list_distinct(list_filter(
-                   regexp_split_to_array(lower(coalesce(text, '')), '\s+'),
-                   x -> x <> '')) AS tk
-          FROM documents
-        ), th AS (
-          SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h, len(tk) AS n
-          FROM toks, unnest(tk) AS u(tok)
-        ), bits AS (
-          SELECT doc_id, j, sum(CAST((h >> j) & 1 AS INT)) AS ones, any_value(n) AS n
-          FROM th, (SELECT unnest(range(0, 64)) AS j)
-          GROUP BY doc_id, j
-        ), v AS (
-          SELECT doc_id,
-                 sum(CASE WHEN 2 * ones > n THEN CAST(1::UBIGINT << j AS HUGEINT) ELSE 0 END) AS val
-          FROM bits GROUP BY doc_id
-        ), sh AS (
+        WITH {_SIMHASH_VOTE_SQL}, sh AS (
           SELECT d.doc_id, CAST(coalesce(v.val, 0) AS UBIGINT) AS u
           FROM documents d LEFT JOIN v ON d.doc_id = v.doc_id
         ), bands AS (
@@ -744,25 +768,7 @@ def _q_minhash_near_dups():
         return minhash_near_duplicates(_dup_input(spark, sf_dir), threshold=0.99)
 
     sql = rf"""
-        WITH inp AS ({_DUP_INPUT_SQL}),
-        words AS (
-          SELECT doc_id,
-                 string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-          FROM inp
-        ), sh AS (
-          SELECT doc_id,
-                 list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS s
-          FROM words WHERE len(w) >= 3
-        ), sig AS (
-          SELECT doc_id,
-                 [list_aggregate(list_transform(s, x -> md5(CAST(k AS VARCHAR) || ':' || x)), 'min')
-                  for k in range(0, 12)] AS mh
-          FROM sh
-        ), bands AS (
-          SELECT doc_id, b.band_idx,
-                 md5(array_to_string(mh[3*b.band_idx + 1 : 3*b.band_idx + 3], '|')) AS band_hash
-          FROM sig, (SELECT unnest(range(0, 4)) AS band_idx) b
-        ), cand AS (
+        WITH inp AS ({_DUP_INPUT_SQL}), {_minhash_sql("inp")}, cand AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM bands a
           JOIN bands b ON a.band_idx = b.band_idx
@@ -792,55 +798,40 @@ def _q_incremental_near_dups():
     banding, index/batch collision arms, agreement estimate, best-match
     ranking) on the same split."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import hashlib
-        import os
+        import shutil
         import tempfile
 
+        from pdf2doi_spark.operators.dedup import _truncate_lineage
         from pdf2doi_spark.operators.dedup_index import (
             build_minhash_index,
             incremental_near_dups,
         )
 
         docs = _docs(spark, sf_dir)
-        # deterministic per-(input, user) dir, NOT mkdtemp and NOT
-        # pid-keyed (ADVICE r4): build overwrites it, so every process —
-        # each pytest run, each bench invocation — reuses ONE index tree
-        # per input instead of leaking a near-full copy per pid into /tmp
-        # on long-lived hosts. The user in the key keeps two users on a
-        # shared host from racing one tree; two processes of the SAME
-        # user probing the same sf_dir concurrently would race the
-        # overwrite — the same documented operating contract as the
-        # bench/soak rituals (never run them beside another Spark job).
-        tag = hashlib.md5(
-            f"{sf_dir}|{os.environ.get('USER', '')}".encode("utf-8")
-        ).hexdigest()[:12]
-        idx = os.path.join(tempfile.gettempdir(), "pdf2doi_incr_idx_" + tag)
-        build_minhash_index(
-            spark, docs.filter(F.col("doc_id") % 3 != 0), idx
-        )
-        out = incremental_near_dups(
-            spark, idx, docs.filter(F.col("doc_id") % 3 == 0), threshold=0.5
-        )
-        return out.orderBy("doc_id")
+        # a private index per call, gone before the frame is returned: the
+        # probe output is cut from its lineage first, so collecting it
+        # later never reads the deleted dir, and concurrent callers never
+        # share (or race) one index tree
+        idx = tempfile.mkdtemp(prefix="pdf2doi_incr_idx_")
+        try:
+            build_minhash_index(
+                spark, docs.filter(F.col("doc_id") % 3 != 0), idx
+            )
+            return _truncate_lineage(incremental_near_dups(
+                spark, idx, docs.filter(F.col("doc_id") % 3 == 0),
+                threshold=0.5,
+            ).orderBy("doc_id"))
+        finally:
+            shutil.rmtree(idx, ignore_errors=True)
 
-    sql = _SHINGLE_SQL + r"""
-        , sig AS (
-          SELECT doc_id,
-                 [list_aggregate(list_transform(s, x -> md5(CAST(k AS VARCHAR) || ':' || x)), 'min')
-                  for k in range(0, 12)] AS mh
-          FROM sh
-        ), bands AS (
-          SELECT doc_id, (doc_id % 3 = 0) AS is_batch, CAST(b AS INT) AS band_idx,
-                 md5(array_to_string(mh[b*3+1 : b*3+3], '|')) AS band_hash
-          FROM sig, (SELECT unnest(range(0, 4)) AS b)
-        ), coll AS (
+    sql = "WITH " + _minhash_sql() + r""", coll AS (
           SELECT n.doc_id AS doc_id, o.doc_id AS dup_of, 'index' AS source
           FROM bands n JOIN bands o USING (band_idx, band_hash)
-          WHERE n.is_batch AND NOT o.is_batch
+          WHERE n.doc_id % 3 = 0 AND o.doc_id % 3 <> 0
           UNION
           SELECT n.doc_id, o.doc_id, 'batch'
           FROM bands n JOIN bands o USING (band_idx, band_hash)
-          WHERE n.is_batch AND o.is_batch AND o.doc_id < n.doc_id
+          WHERE n.doc_id % 3 = 0 AND o.doc_id % 3 = 0 AND o.doc_id < n.doc_id
         ), est AS (
           SELECT c.doc_id, c.dup_of, c.source,
                  list_sum([CASE WHEN sn.mh[k+1] = so.mh[k+1] THEN 1 ELSE 0 END
@@ -920,7 +911,7 @@ def _q_dedup_bucket_profile():
             embedding_lsh_params, lsh_bucket_profile,
         )
 
-        _ensure_shipped(spark)
+        ship_package(spark)
         mh = minhash_bucket_profile(_dup_input(spark, sf_dir))
         sh = simhash_bucket_profile(_docs(spark, sf_dir))
         base = _emb(spark, sf_dir).select(
@@ -944,46 +935,10 @@ def _q_dedup_bucket_profile():
         return q, None  # testdata absent: rows-only fallback
     nb, ppb = emb_params
     sql = rf"""
-        WITH inp AS ({_DUP_INPUT_SQL}),
-        words AS (
-          SELECT doc_id,
-                 string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-          FROM inp
-        ), sh AS (
-          SELECT doc_id,
-                 list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS s
-          FROM words WHERE len(w) >= 3
-        ), sig AS (
-          SELECT doc_id,
-                 [list_aggregate(list_transform(s, x -> md5(CAST(k AS VARCHAR) || ':' || x)), 'min')
-                  for k in range(0, 12)] AS mh
-          FROM sh
-        ), mh_bands AS (
-          SELECT doc_id, b.band_idx,
-                 md5(array_to_string(mh[3*b.band_idx + 1 : 3*b.band_idx + 3], '|')) AS band_hash
-          FROM sig, (SELECT unnest(range(0, 4)) AS band_idx) b
-        ), mh_sizes AS (
+        WITH inp AS ({_DUP_INPUT_SQL}), {_minhash_sql("inp")}, mh_sizes AS (
           SELECT band_idx, band_hash, count(*) AS bucket_size
-          FROM mh_bands GROUP BY band_idx, band_hash
-        ),
-        toks AS (
-          SELECT doc_id,
-                 list_distinct(list_filter(
-                   regexp_split_to_array(lower(coalesce(text, '')), '\s+'),
-                   x -> x <> '')) AS tk
-          FROM documents
-        ), th AS (
-          SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h, len(tk) AS n
-          FROM toks, unnest(tk) AS u(tok)
-        ), bits AS (
-          SELECT doc_id, j, sum(CAST((h >> j) & 1 AS INT)) AS ones, any_value(n) AS n
-          FROM th, (SELECT unnest(range(0, 64)) AS j)
-          GROUP BY doc_id, j
-        ), v AS (
-          SELECT doc_id,
-                 sum(CASE WHEN 2 * ones > n THEN CAST(1::UBIGINT << j AS HUGEINT) ELSE 0 END) AS val
-          FROM bits GROUP BY doc_id
-        ), sh_vals AS (
+          FROM bands GROUP BY band_idx, band_hash
+        ), {_SIMHASH_VOTE_SQL}, sh_vals AS (
           SELECT d.doc_id, CAST(coalesce(v.val, 0) AS UBIGINT) AS u
           FROM documents d LEFT JOIN v ON d.doc_id = v.doc_id
         ), sh_bands AS (
@@ -997,14 +952,7 @@ def _q_dedup_bucket_profile():
         ebase AS (
           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings
-        ), planes AS (
-          SELECT p, d,
-                 CASE WHEN ('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 2))::INT & 1 = 1
-                      THEN 1.0 ELSE -1.0 END AS s
-          FROM (SELECT unnest(range(0, {nb * ppb})) AS p), (SELECT unnest(range(0, 64)) AS d)
-        ), pl AS (
-          SELECT p, list(s ORDER BY d) AS sv FROM planes GROUP BY p
-        ), esig AS (
+        ), {_planes_sql(nb * ppb)}, esig AS (
           SELECT a.vec_id, CAST(pl.p // {ppb} AS INT) AS band_idx,
                  string_agg(CASE WHEN list_dot_product(a.v, pl.sv) >= 0
                                  THEN '1' ELSE '0' END, '' ORDER BY pl.p) AS sig
@@ -1376,7 +1324,7 @@ def _q_domain_profile():
     lengths): numpy's linear-interpolation percentile equals DuckDB's
     quantile_cont, giving the grouped-map plumbing an exact oracle."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.quality import grouped_percentile_profile
 
         d = _docs(spark, sf_dir).select(
@@ -1539,14 +1487,7 @@ def _q_near_dup_clusters():
           FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id
           WHERE a.nw >= 3
         ),
-        sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-        reach(node, r) AS (
-          SELECT DISTINCT a AS node, a AS r FROM sym
-          UNION
-          SELECT s.b, reach.r FROM reach JOIN sym s ON s.a = reach.node
-        )
-        SELECT node, min(r) AS component FROM reach GROUP BY node ORDER BY node
-    """
+        {_COMPONENTS_SQL}"""
     return q, sql
 
 
@@ -1614,7 +1555,7 @@ def _q_dup_components_star():
 
         return connected_components_star(_dup_graph(spark, sf_dir))
 
-    sql = """
+    sql = f"""
         WITH RECURSIVE d AS (SELECT doc_id FROM documents),
         edges AS (
           SELECT doc_id AS a, doc_id + 1 AS b FROM d
@@ -1623,14 +1564,7 @@ def _q_dup_components_star():
           SELECT doc_id AS a, doc_id + 7 AS b FROM d
           WHERE doc_id % 11 = 0 AND doc_id + 7 IN (SELECT doc_id FROM d)
         ),
-        sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-        reach(node, r) AS (
-          SELECT DISTINCT a AS node, a AS r FROM sym
-          UNION
-          SELECT s.b, reach.r FROM reach JOIN sym s ON s.a = reach.node
-        )
-        SELECT node, min(r) AS component FROM reach GROUP BY node ORDER BY node
-    """
+        {_COMPONENTS_SQL}"""
     return q, sql
 
 
@@ -1644,7 +1578,7 @@ def _q_media_features():
     exactly without tripping the 3-of-256 byte cases where float32 and
     double round differently at 6 dp."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.multimodal import extract_features
 
         kind = (
@@ -1754,17 +1688,8 @@ def _q_ann_lsh_topk():
     # The hash-derived hyperplanes are md5-deterministic, so even this is
     # exactly SQL-expressible: rebuild the ±1 planes from md5 parity, sign
     # the projections into signature strings, bucket-match, cosine-rerank.
-    sql = r"""
-        WITH planes AS (
-          SELECT p, d,
-                 CASE WHEN ('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 2))::INT & 1 = 1
-                      THEN 1.0 ELSE -1.0 END AS s
-          FROM (SELECT unnest(range(0, 6)) AS p), (SELECT unnest(range(0, 64)) AS d)
-        ), pl AS (
-          -- ordered plane vectors -> ORDERED list_dot_product projection,
-          -- matching Spark's left-to-right fold (see embedding_near_dups)
-          SELECT p, list(s ORDER BY d) AS sv FROM planes GROUP BY p
-        ), sig AS (
+    sql = f"""
+        WITH {_planes_sql(6)}, sig AS (
           SELECT e.vec_id,
                  string_agg(CASE WHEN list_dot_product(
                                      list_transform(e.embedding, x -> CAST(x AS DOUBLE)), pl.sv) >= 0
@@ -2012,7 +1937,7 @@ def _q_ngram_jaccard():
         return jaccard_pairs(d, pairs.select("doc_a", "doc_b"), threshold=0.0)
 
     sql = rf"""
-        {_SHINGLE_SQL}
+        WITH {_shingle_sql()}
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                round(len(list_intersect(a.s, b.s)) * 1.0
                      / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
@@ -2083,18 +2008,7 @@ def _emb_near_dups_sql(nb: int, ppb: int, dim: int = 64,
                  [v[i] * (CASE WHEN (i-1)%2 = 0 THEN 1.02 ELSE 0.98 END)
                   for i in range(1, len(v)+1)] AS v
           FROM base WHERE vec_id % 10 = 0
-        ), planes AS (
-          SELECT p, d,
-                 CASE WHEN ('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 2))::INT & 1 = 1
-                      THEN 1.0 ELSE -1.0 END AS s
-          FROM (SELECT unnest(range(0, {nb * ppb})) AS p), (SELECT unnest(range(0, {dim})) AS d)
-        ), pl AS (
-          -- ordered plane vectors: the projection below is an ORDERED
-          -- list_dot_product, matching Spark's left-to-right fold exactly
-          -- (an unordered GROUP BY sum could land a near-zero projection on
-          -- the other side of >= 0 and flip a signature bit)
-          SELECT p, list(s ORDER BY d) AS sv FROM planes GROUP BY p
-        ), sig AS (
+        ), {_planes_sql(nb * ppb, dim)}, sig AS (
           SELECT a.vec_id, CAST(pl.p // {ppb} AS INT) AS band_idx,
                  string_agg(CASE WHEN list_dot_product(a.v, pl.sv) >= 0
                                  THEN '1' ELSE '0' END, '' ORDER BY pl.p) AS sig
@@ -2571,7 +2485,7 @@ def _q_topk_per_group():
 
 def _q_domain_counts():
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         from pdf2doi_spark.operators.extract import domain_counts_salted
         from pdf2doi_spark.pages import pages_from_documents
 

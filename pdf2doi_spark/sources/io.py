@@ -1,4 +1,5 @@
-"""Pages sources, identifier-cache table, and the resumable result sink.
+"""Pages sources, the sharded parquet table, the identifier cache, and the
+resumable result sink.
 
 North-rule requirements covered here:
 
@@ -6,6 +7,10 @@ North-rule requirements covered here:
   Catalyst predicate/partition pushdown; ``read_pages`` keeps the scan
   declarative so filters like ``lang = 'en'`` or ``warc_ts`` ranges reach
   the file reader (check ``PushedFilters`` in ``.explain``).
+* **Sharded table**: ``shard_of`` / ``write_sharded`` / ``read_sharded``
+  are the one implementation of the hash-sharded parquet layout that the
+  results, the cache and the near-dup index (operators/dedup_index.py)
+  all use: one file per shard per write, explicit-schema reads.
 * **Identifier cache** (the reference's metadata write-back memoization,
   finders.py:587-608 / main.py:98-100, re-expressed): a small side table
   ``(url, identifier, identifier_type, method)`` merged after each run and
@@ -13,9 +18,10 @@ North-rule requirements covered here:
   without touching the kernel. Source rows are never mutated.
 * **Resumability** ("resumable from checkpoint with per-partition lineage
   + metrics"): results are written partitioned by a deterministic shard
-  ``pmod(xxhash64(url), n_shards)``; a manifest records per-shard status +
-  row counters. A restarted job reads the manifest and processes only
-  missing shards — per-partition lineage without any driver state.
+  ``pmod(xxhash64(url), n_shards)``; each run appends its per-shard status
+  + row counters to a manifest. A restarted job reads the manifest and
+  processes only missing shards — per-partition lineage without any
+  driver state.
 """
 from __future__ import annotations
 
@@ -23,7 +29,6 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 
 # ---------------------------------------------------------------- fs layer
@@ -98,15 +103,11 @@ def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
         raise IOError(f"rename {src!r} -> {dst!r} refused by filesystem")
 
 
-def _rmtree(path: str, spark: SparkSession = None) -> None:
-    if spark is not None:
-        fs, hp = _fs(spark, path)
-        if fs.exists(hp):
-            fs.delete(hp, True)
-        return
-    import shutil
+def _rmtree(path: str, spark: SparkSession) -> None:
+    fs, hp = _fs(spark, path)
+    if fs.exists(hp):
+        fs.delete(hp, True)
 
-    shutil.rmtree(path, ignore_errors=True)
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -140,22 +141,90 @@ def read_raw_files(spark: SparkSession, path: str,
     )
 
 
-def shard_column(n_shards: int, url_col: str = "url") -> F.Column:
-    """Deterministic shard id: pmod(xxhash64(url), n). xxhash64 is JVM-side
-    (whole-stage codegen) and stable across runs/executors."""
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_shards)).alias("shard")
+# --------------------------------------------------- sharded parquet table
+# Every table the package persists (the resumable results and their
+# manifest, the identifier cache, the near-dup index's sigs/postings) is a
+# parquet table partitioned by a deterministic hash shard. The three
+# functions below are its one implementation.
+
+def shard_of(n: int, *cols: str) -> F.Column:
+    """Deterministic shard id ``pmod(xxhash64(cols), n)`` as int, the type
+    partition discovery gives the column on read-back. xxhash64 is JVM-side
+    (whole-stage codegen) and stable across runs and executors."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
+
+
+def write_sharded(df: DataFrame, path: str, col: str, mode: str) -> None:
+    """Write ``df`` partitioned by ``col``, one file per shard.
+
+    ``mode`` is ``"append"``, ``"overwrite"`` (the whole table) or
+    ``"dynamic"``: replace only the shard directories present in ``df``,
+    which makes the write idempotent per shard — a recomputed shard
+    replaces its directory instead of appending duplicates.
+
+    Rows are hash-distributed on ``col`` before the partitioned write (what
+    Iceberg's write.distribution-mode=hash does). Without it every task
+    opens a writer in every shard directory it touches — tasks × shards
+    files: measured 11,010 files for a 43-task × 256-shard 10M-page run
+    with ~90 s of driver-side commit/listing, and 2,048 for a 64-shard
+    8.7M-row cache merge (BENCH §6); at the design point (65k shards,
+    thousands of tasks) hundreds of millions of files, which no metastore
+    survives. After the repartition each shard lands wholly in one task,
+    so a write adds exactly one file per shard and commit is O(shards).
+    On a ``shard_of`` key the shuffle is uniform by construction.
+    """
+    writer = df.repartition(F.col(col)).write
+    if mode == "dynamic":
+        writer = writer.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic")
+    else:
+        writer = writer.mode(mode)
+    writer.partitionBy(col).parquet(path)
+
+
+def read_sharded(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Read a table at ``path`` with an explicit ``schema`` (DDL string or
+    StructType, partition column included); an absent path reads as a
+    typed empty frame.
+
+    The schema makes a table with no data files readable — a partitioned
+    write of an empty frame leaves only _SUCCESS, and inference over that
+    raises UNABLE_TO_INFER_SCHEMA — and it spares every read the footer-
+    inference job. ``schema=None`` infers (indexes built before their
+    schemas were stored)."""
+    if schema is None:
+        return spark.read.parquet(path)
+    if not fs_exists(spark, path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 CACHE_N_SHARDS = 64
+CACHE_SCHEMA = ("url string, identifier string, identifier_type string, "
+                "method string, shard int")
+MANIFEST_SCHEMA = "shard int, status string, n_docs long, n_hits long"
+
+
+def read_cache(spark: SparkSession,
+               path: Optional[str]) -> Optional[DataFrame]:
+    """The identifier cache at ``path``, or None when no path is given or
+    no cache exists there. The probe goes through the Hadoop FS API: an
+    hdfs:///s3a:// cache is invisible to os.path, which would silently
+    drop the method-#1 fast path (and make a merge treat a populated cache
+    as brand-new)."""
+    if not path or not fs_exists(spark, path):
+        return None
+    return read_sharded(spark, path, CACHE_SCHEMA)
 
 
 def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
-                n_shards: int = CACHE_N_SHARDS) -> DataFrame:
+                n_shards: int = CACHE_N_SHARDS) -> None:
     """Incremental upsert of found identifiers into the cache table (parquet
     stand-in for Iceberg ``MERGE INTO``): new results win over prior rows
     on url. Only rows NOT resolved from the cache/metadata fast path are
     written, mirroring the reference's gate (main.py:98-100: no write-back
-    when found by method #1 or disabled).
+    when found by method #1 or disabled). Returns nothing: read the cache
+    with ``read_cache`` when the merged table is needed.
 
     Scale shape: the cache is stored partitioned by a deterministic url
     shard (``pmod(xxhash64(url), n_shards)`` — the parquet analogue of
@@ -172,10 +241,13 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
     wins. Recomputing shards under a different modulus would anti-join
     against the wrong shard set, leaving a url's stale row alive under its
     old shard id — two rows per url would then fan out every matching page
-    in the downstream broadcast join.
+    in the downstream broadcast join. The marker is written BEFORE the
+    merge's first data write (only the one-time flat-layout migration
+    precedes it), so a crash can never leave merged shards unpinned.
     """
     marker = cache_path.rstrip("/") + "/_pdf2doi_n_shards"
-    if fs_exists(spark, marker):
+    pinned = fs_exists(spark, marker)
+    if pinned:
         n_shards = int(_fs_read_small(spark, marker).strip())
 
     new = (
@@ -183,132 +255,92 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
         .filter(F.col("tier").isNull() | (F.col("tier") >= 0))
         .select("url", "identifier", "identifier_type", "method")
         .dropDuplicates(["url"])
-        .withColumn("shard", shard_column(n_shards))
+        .withColumn("shard", shard_of(n_shards, "url"))
     )
     # The merge evaluates the batch up to three times (touched-shard
     # collect, post-anti-join collect, the write). If ``results`` is an
     # unmaterialized extraction plan, each evaluation would re-run the
     # whole kernel — persist so every caller pays ONE extraction pass.
     new = new.persist()
-    pinned = [new]
+    persisted = [new]
 
-    def _is_sharded(path: str) -> bool:
-        return any(
-            e.startswith("shard=") for e in _fs_child_names(spark, path)
+    def touched_shards(df: DataFrame) -> list:
+        # the (small) distinct-shard set of the batch, collected on the
+        # driver to build a partition-pruning filter for the old-side scan
+        # (bounded by n_shards values, never row data)
+        return sorted(
+            r["shard"] for r in df.select("shard").distinct().collect()
         )
-
-    if fs_exists(spark, cache_path) and not _is_sharded(cache_path):
-        # one-time migration of a flat (round-1 layout) cache
-        flat = spark.read.parquet(cache_path).withColumn(
-            "shard", shard_column(n_shards)
-        )
-        flat.write.mode("overwrite").parquet(cache_path + ".mig")
-        spark.read.parquet(cache_path + ".mig") \
-            .repartition(F.col("shard")) \
-            .write.mode("overwrite") \
-            .partitionBy("shard").parquet(cache_path)
-        _rmtree(cache_path + ".mig", spark)
 
     try:
-        if fs_exists(spark, cache_path):
-            # pin the modulus NOW, not only after a successful write: the
-            # idempotent-re-merge early returns below skip the write path,
-            # and a freshly-migrated (or crash-recovered) cache would
-            # otherwise stay unpinned — a later merge under a different
-            # n_shards would then anti-join against the wrong shard set.
+        children = (_fs_child_names(spark, cache_path)
+                    if fs_exists(spark, cache_path) else None)
+        if children and any(not c.startswith(("_", ".", "shard="))
+                            for c in children):
+            # one-time migration of a flat (round-1 layout) cache; flat
+            # caches predate the marker, which is written right after
+            flat = spark.read.parquet(cache_path).withColumn(
+                "shard", shard_of(n_shards, "url")
+            )
+            flat.write.mode("overwrite").parquet(cache_path + ".mig")
+            write_sharded(spark.read.parquet(cache_path + ".mig"),
+                          cache_path, "shard", "overwrite")
+            _rmtree(cache_path + ".mig", spark)
+        if not pinned:
+            if children is None and new.isEmpty():
+                # no cache and nothing to write: leave no directory behind
+                return
             _fs_write_small(spark, marker, str(n_shards))
-            # touched shards = the (small) distinct-shard set of the new
-            # batch; collected on the driver to build a partition-pruning
-            # filter for the old-side scan (bounded by n_shards values,
-            # never row data).
-            touched = sorted(
-                r["shard"] for r in new.select("shard").distinct().collect()
-            )
-            if not touched:
-                return spark.read.parquet(cache_path)
-            old_touched = spark.read.parquet(cache_path).filter(
-                F.col("shard").isin(touched)
-            ).select("url", "identifier", "identifier_type", "method",
-                     "shard")
-            # Rows ALREADY in the cache with identical values are no-ops —
-            # dropping them first makes an idempotent re-merge (job restart,
-            # recrawl of an unchanged corpus) rewrite ZERO shards instead of
-            # re-churning every shard its hits map into. Null-safe equality:
-            # identifier_type/method can be NULL, and NULL = NULL is never
-            # true under plain equality, so such rows would count as "new"
-            # and re-churn their shard on every merge forever.
-            old_cmp = old_touched.select(
-                *[F.col(c).alias(f"_old_{c}") for c in
-                  ("url", "identifier", "identifier_type", "method",
-                   "shard")]
-            )
-            same = [
-                new[c].eqNullSafe(old_cmp[f"_old_{c}"])
-                for c in ("url", "identifier", "identifier_type", "method",
-                          "shard")
-            ]
-            cond = same[0]
-            for c in same[1:]:
-                cond = cond & c
-            new = new.join(old_cmp, cond, "left_anti").persist()
-            pinned.append(new)
-            touched = sorted(
-                r["shard"] for r in new.select("shard").distinct().collect()
-            )
-            if not touched:
-                return spark.read.parquet(cache_path)
-            old_touched = old_touched.filter(F.col("shard").isin(touched))
-            survivors = old_touched.join(
-                new.select("url"), on="url", how="left_anti"
-            )
-            merged = survivors.unionByName(new)
-        elif new.isEmpty():
-            # no prior cache AND nothing to write: materializing an empty
-            # partitioned parquet leaves a schema-less directory that the
-            # read-back would reject — return the empty batch as-is instead
-            return new
-        else:
-            merged = new
 
-        # Materialize before the overwrite (the merged plan reads the very
-        # partitions being replaced); dynamic mode rewrites ONLY the shard
-        # directories present in the batch.
-        merged.write.mode("overwrite").parquet(cache_path + ".tmp")
-        (
-            spark.read.parquet(cache_path + ".tmp")
-            # co-locate each shard in one task before the partitioned
-            # write (Iceberg hash distribution): without this, every
-            # tmp-scan task opens a writer per shard it touches —
-            # tasks × touched-shards files (measured 2,048 for a 64-shard
-            # 8.7M-row merge, BENCH §6) instead of exactly one per shard
-            .repartition(F.col("shard"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("shard")
-            .parquet(cache_path)
+        touched = touched_shards(new)
+        if not touched:
+            return
+        old_touched = read_sharded(spark, cache_path, CACHE_SCHEMA).filter(
+            F.col("shard").isin(touched)
         )
-        # The dynamic-overwrite write above already materialized every
-        # merged row into cache_path; the returned frame is a FRESH scan of
-        # cache_path with no lineage through the tmp dir, so the tmp source
-        # can be dropped immediately. (Round-2 review: the full-cache
-        # ``result.count()`` that used to sit here was a pointless O(cache)
-        # scan per merge at a billions-row cache —
-        # tests/test_operators.py::test_merge_cache_never_counts pins its
-        # absence.)
-        _rmtree(cache_path + ".tmp", spark)
-        # pin the modulus for every later merge
-        _fs_write_small(spark, marker, str(n_shards))
-        return spark.read.parquet(cache_path)
+        # Rows ALREADY in the cache with identical values are no-ops —
+        # dropping them first makes an idempotent re-merge (job restart,
+        # recrawl of an unchanged corpus) rewrite ZERO shards instead of
+        # re-churning every shard its hits map into. Null-safe equality:
+        # identifier_type/method can be NULL, and NULL = NULL is never
+        # true under plain equality, so such rows would count as "new"
+        # and re-churn their shard on every merge forever.
+        cols = ("url", "identifier", "identifier_type", "method", "shard")
+        old_cmp = old_touched.select(
+            *[F.col(c).alias(f"_old_{c}") for c in cols]
+        )
+        same = [new[c].eqNullSafe(old_cmp[f"_old_{c}"]) for c in cols]
+        cond = same[0]
+        for c in same[1:]:
+            cond = cond & c
+        new = new.join(old_cmp, cond, "left_anti").persist()
+        persisted.append(new)
+        touched = touched_shards(new)
+        if not touched:
+            return
+        survivors = old_touched.filter(F.col("shard").isin(touched)).join(
+            new.select("url"), on="url", how="left_anti"
+        )
+        # Materialize before the overwrite (the merged plan reads the very
+        # partitions being replaced); the dynamic write then rewrites ONLY
+        # the shard directories present in the batch. A failed write
+        # leaves the tmp copy for recovery.
+        tmp = cache_path + ".tmp"
+        survivors.unionByName(new).write.mode("overwrite").parquet(tmp)
+        write_sharded(read_sharded(spark, tmp, CACHE_SCHEMA), cache_path,
+                      "shard", "dynamic")
+        _rmtree(tmp, spark)
     finally:
-        for df in pinned:
+        for df in persisted:
             df.unpersist()
 
 
 def completed_shards(spark: SparkSession, manifest_path: str) -> set:
     if not fs_exists(spark, manifest_path):
         return set()
-    rows = spark.read.parquet(manifest_path).filter(F.col("status") == "done")
-    return {r["shard"] for r in rows.select("shard").distinct().collect()}
+    rows = read_sharded(spark, manifest_path, MANIFEST_SCHEMA)
+    return {r["shard"] for r in rows.filter(F.col("status") == "done")
+            .select("shard").distinct().collect()}
 
 
 def run_resumable(
@@ -327,6 +359,11 @@ def run_resumable(
     n_hits). On restart, shards already marked done are filtered out of the
     *input* (a pushed-down pmod filter), so completed work is never
     recomputed — the sandbox stand-in for Iceberg snapshot-based restart.
+    Each run APPENDS one manifest file holding only its own shards, after
+    its data write: the shards it wrote, plus zero-count rows for the
+    not-yet-done shards no input url hashed into. A run that dies before
+    that append leaves its shards pending, and the restart's dynamic
+    overwrite recomputes them idempotently.
 
     ``n_shards`` applies on the FIRST run; a restart always resumes under
     the modulus pinned in ``{out_dir}/_n_shards``. A restart under a
@@ -351,27 +388,14 @@ def run_resumable(
 
     results_path = os.path.join(out_dir, "results")
     manifest_path = os.path.join(out_dir, "manifest")
+    # "shard int" matches partition discovery, so a typed empty frame and
+    # a stored table never disagree on the schema
+    results_schema = RESULT_SCHEMA + ", shard int"
     marker = out_dir.rstrip("/") + "/_n_shards"
     if fs_exists(spark, marker):
         n_shards = int(_fs_read_small(spark, marker).strip())
     else:
         _fs_write_small(spark, marker, str(n_shards))
-
-    def _has_result_data() -> bool:
-        return fs_exists(spark, results_path) and any(
-            name.startswith("shard=")
-            for name in _fs_child_names(spark, results_path)
-        )
-
-    def _read_results() -> DataFrame:
-        # an all-empty input writes no parquet part files, so a plain
-        # read-back would die on schema inference — return a typed empty
-        # frame instead ("shard int" to match what parquet partition-column
-        # inference yields on the non-empty branch, so the two branches
-        # never disagree on the schema)
-        if not _has_result_data():
-            return spark.createDataFrame([], RESULT_SCHEMA + ", shard int")
-        return spark.read.parquet(results_path)
 
     done = completed_shards(spark, manifest_path)
     if len(done) >= n_shards:
@@ -392,8 +416,8 @@ def run_resumable(
         import warnings
 
         warnings.warn(msg, stacklevel=2)
-        return _read_results()
-    sharded = pages.withColumn("shard", shard_column(n_shards))
+        return read_sharded(spark, results_path, results_schema)
+    sharded = pages.withColumn("shard", shard_of(n_shards, "url"))
     if done:
         sharded = sharded.filter(~F.col("shard").isin(*sorted(done)))
 
@@ -416,80 +440,44 @@ def run_resumable(
             "rerun.",
             stacklevel=2,
         )
-        return _read_results()
+        return read_sharded(spark, results_path, results_schema)
 
     pending = extract_identifiers(
         sharded.select("url", "html", "text"), replace_arxiv=replace_arxiv, cache=cache
-    ).withColumn("shard", shard_column(n_shards))
+    ).withColumn("shard", shard_of(n_shards, "url"))
+    # The kernel runs pre-shuffle at the input's parallelism; the shard
+    # shuffle moves RESULT rows (post-kernel, ≤ input bytes).
+    write_sharded(pending, results_path, "shard", "dynamic")
+    results = read_sharded(spark, results_path, results_schema)
 
-    # Hash-distribute RESULTS on the write partition key before the
-    # partitioned write (what Iceberg's write.distribution-mode=hash does).
-    # Without it every extraction task opens a writer in every shard
-    # directory it touches — tasks × shards files: measured 11,010 files
-    # for a 43-task × 256-shard 10M-page run, with ~90 s of driver-side
-    # commit/listing (BENCH §6), and at the design point (65k shards,
-    # thousands of tasks) hundreds of millions of files, which no metastore
-    # survives. After the repartition each shard lands wholly in one task,
-    # so the layout is exactly n_shards files and commit is O(n_shards).
-    # The shuffle moves RESULT rows (post-kernel, ≤ input bytes) and keys
-    # on pmod(xxhash64(url)) — uniform by construction, no skew. The
-    # kernel itself still runs pre-shuffle at the input's parallelism.
-    pending = pending.repartition(F.col("shard"))
-
-    # Dynamic partition overwrite makes the write idempotent PER SHARD: a
-    # run that died after writing some shards but before the manifest can
-    # be restarted safely — recomputed shards REPLACE their partition
-    # directories instead of appending duplicates.
-    (
-        pending.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard")
-        .parquet(results_path)
-    )
-
-    # Manifest derived from the data itself (never ahead of it); counters =
-    # the per-partition lineage metrics the north rule asks for. Only the
-    # shards processed THIS run are re-counted — the shard filter prunes to
-    # their partition directories, so a restart never re-scans the results
-    # of shards whose manifest rows already exist (at 100 TB that re-scan
-    # would dominate every incremental run).
-    written = _read_results().withColumn(
-        "status", F.lit("done")
-    )
-    fresh = written.filter(~F.col("shard").isin(*sorted(done))) if done else written
-    manifest = (
-        fresh.groupBy("shard", "status")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count("identifier").alias("n_hits"),
-        )
-    )
+    # Manifest derived from the data itself, after it (never ahead of it);
+    # counters = the per-partition lineage metrics the north rule asks for.
+    # Only this run's shards are counted — the shard filter prunes to their
+    # partition directories, so a restart never re-scans the results of
+    # shards whose manifest rows already exist (at 100 TB that re-scan
+    # would dominate every incremental run). This run covered every
+    # not-yet-done shard, so one with no rows had no input urls hashing
+    # into it — record it done (n_docs 0) too, or the O(1) restart
+    # short-circuit above would never fire for inputs that leave some of
+    # the n_shards buckets empty.
+    todo = spark.range(n_shards).select(F.col("id").cast("int").alias("shard"))
+    fresh = results
     if done:
-        manifest = manifest.unionByName(
-            spark.read.parquet(manifest_path).filter(
-                F.col("shard").isin(*sorted(done))
-            )
-        )
-    # This run covered every not-yet-done shard, so shards with no rows in
-    # the manifest simply had no input urls hashing into them — record them
-    # done (n_docs 0) too, or the O(1) restart short-circuit above would
-    # never fire for inputs that leave some of the n_shards buckets empty.
-    manifest = manifest.unionByName(
-        spark.range(n_shards)
-        .select(F.col("id").cast("int").alias("shard"))
-        .join(manifest.select("shard"), "shard", "left_anti")
-        .select(
-            "shard",
-            F.lit("done").alias("status"),
-            F.lit(0).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_hits"),
-        )
+        todo = todo.filter(~F.col("shard").isin(*sorted(done)))
+        fresh = results.filter(~F.col("shard").isin(*sorted(done)))
+    counts = fresh.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.count("identifier").alias("n_hits"),
     )
-    tmp = manifest_path + ".tmp"
-    manifest.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(manifest_path)
-    _rmtree(tmp, spark)
-    return _read_results()
+    (
+        todo.join(counts, "shard", "left")
+        .select("shard", F.lit("done").alias("status"),
+                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
+                F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"))
+        .coalesce(1)
+        .write.mode("append").parquet(manifest_path)
+    )
+    return results
 
 
 def write_bucketed(df: DataFrame, table: str, n_buckets: int = 256,

@@ -549,11 +549,11 @@ def _parse_cdx_ts(value: str, *, round_up: bool = False):
 
     Digit and tz-less ISO forms return NAIVE datetimes on purpose:
     ``read_cdx_index`` parses ``capture_ts`` with ``try_to_timestamp``
-    (session timezone), so the bound must be interpreted in the SAME
-    zone or the window shifts by the session offset whenever
-    ``spark.sql.session.timeZone`` is overridden away from UTC. An ISO
-    string with an explicit offset/Z stays aware (the user stated a
-    zone)."""
+    in the session timezone, and ``_ts_bound`` evaluates a naive bound in
+    that SAME zone — otherwise the window shifts by the offset between
+    ``spark.sql.session.timeZone`` and the zone the bound was read in. An
+    ISO string with an explicit offset or Z returns an aware datetime and
+    keeps its instant (the user stated a zone)."""
     v = value.strip()
     if v.isdigit() and len(v) <= 14:
         if not round_up:
@@ -583,6 +583,17 @@ def _parse_cdx_ts(value: str, *, round_up: bool = False):
         return hi - timedelta(seconds=1)
     dt = datetime.fromisoformat(v.replace("Z", "+00:00"))
     return dt  # aware iff the user wrote an offset/Z
+
+
+def _ts_bound(value: str, *, round_up: bool = False) -> F.Column:
+    """A ``_parse_cdx_ts`` bound as a timestamp column. A naive bound is
+    parsed from its wall-clock string in the session timezone, exactly as
+    ``capture_ts`` is; ``F.lit`` of a naive datetime would use the driver
+    process's local zone instead."""
+    dt = _parse_cdx_ts(value, round_up=round_up)
+    if dt.tzinfo is None:
+        return F.to_timestamp(F.lit(dt.isoformat(sep=" ")))
+    return F.lit(dt)
 
 
 def scope_cdx_index(index: DataFrame, *, host: Optional[str] = None,
@@ -619,12 +630,9 @@ def scope_cdx_index(index: DataFrame, *, host: Optional[str] = None,
             | F.col("urlkey").startswith(key + ",")
         )
     if ts_from:
-        out = out.filter(
-            F.col("capture_ts") >= F.lit(_parse_cdx_ts(ts_from))
-        )
+        out = out.filter(F.col("capture_ts") >= _ts_bound(ts_from))
     if ts_to:
         out = out.filter(
-            F.col("capture_ts")
-            <= F.lit(_parse_cdx_ts(ts_to, round_up=True))
+            F.col("capture_ts") <= _ts_bound(ts_to, round_up=True)
         )
     return out

@@ -107,21 +107,17 @@ def run_stream_with_cache_merge(spark: SparkSession, landing_dir: str,
     race the cache overwrite."""
     from pyspark.sql import functions as F
 
-    from pdf2doi_spark.sources.io import fs_exists, merge_cache
+    from pdf2doi_spark.sources.io import merge_cache, read_cache
 
     stream = read_pages_stream(spark, landing_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Hadoop FS probe, not os.path.exists: on hdfs:///s3a:// cache
-        # paths the latter is silently False, which would drop the
-        # method-#1 cache fast path from EVERY micro-batch (io.py:30-36).
-        cache_df = (
-            spark.read.parquet(cache_path)
-            if fs_exists(spark, cache_path) else None
-        )
         res = extract_identifiers(
-            batch_df.select("url", "html", "text"), cache=cache_df
+            batch_df.select("url", "html", "text"),
+            cache=read_cache(spark, cache_path),
         )
+        # not write_sharded: every row carries the one _batch value, so a
+        # hash distribution would put the whole micro-batch in one task
         (
             res.withColumn("_batch", F.lit(int(batch_id)))
             .write.mode("overwrite")

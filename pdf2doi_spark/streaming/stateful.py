@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pdf2doi_spark.sources.io import shard_of
+
 N_STATE_SHARDS = 64
 
 DEDUP_OUTPUT_SCHEMA = "url string, warc_ts timestamp, first_seen boolean"
@@ -139,7 +141,8 @@ def first_seen_urls(pages_stream: DataFrame,
         "url",
         "warc_ts",
         F.xxhash64("url").alias("url_hash"),
-        F.pmod(F.xxhash64("url"), F.lit(N_STATE_SHARDS)).alias("shard"),
+        # long, as the grouping key of existing state checkpoints
+        shard_of(N_STATE_SHARDS, "url").cast("long").alias("shard"),
     )
     if ttl_seconds is None:
         return keyed.groupBy("shard").applyInPandasWithState(

@@ -10,9 +10,9 @@ each returns ``(query_fn, oracle_sql_or_None)``.
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdf2doi_spark.queries import (
-    _BUILDERS, _DOI_SQL, _DUP_INPUT_SQL, _REPETITION_SQL, _SHINGLE_SQL,
-    _compression_oracle_values, _docs, _dup_graph, _dup_input, _rep_text,
-    _tier_query,
+    _BUILDERS, _DOI_SQL, _DUP_INPUT_SQL, _REPETITION_SQL,
+    _compression_oracle_values, _docs, _dup_graph, _dup_input, _minhash_sql,
+    _rep_text, _tier_query,
 )
 
 
@@ -245,27 +245,13 @@ def _q_dedup_survivors():
     return q, sql
 
 
-_MINHASH_BANDS_SQL = r"""
-        , sig AS (
-          SELECT doc_id,
-                 [list_aggregate(list_transform(s, x -> md5(CAST(k AS VARCHAR) || ':' || x)), 'min')
-                  for k in range(0, 12)] AS mh
-          FROM sh
-        ), bands AS (
-          SELECT doc_id, CAST(b AS INT) AS band_idx,
-                 md5(array_to_string(mh[b*3+1 : b*3+3], '|')) AS band_hash
-          FROM sig, (SELECT unnest(range(0, 4)) AS b)
-        )
-"""
-
-
 def _q_minhash_bands():
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pdf2doi_spark.operators.dedup import minhash_bands
 
         return minhash_bands(_docs(spark, sf_dir))
 
-    sql = _SHINGLE_SQL + _MINHASH_BANDS_SQL + "SELECT * FROM bands"
+    sql = "WITH " + _minhash_sql() + " SELECT * FROM bands"
     return q, sql
 
 
@@ -277,11 +263,7 @@ def _q_minhash_bucket_profile():
 
         return minhash_bucket_profile(_dup_input(spark, sf_dir))
 
-    shingles = _SHINGLE_SQL.replace(
-        "FROM documents", f"FROM ({_DUP_INPUT_SQL})", 1
-    )
-    sql = shingles + _MINHASH_BANDS_SQL + r"""
-        , sizes AS (
+    sql = "WITH " + _minhash_sql(f"({_DUP_INPUT_SQL})") + r""", sizes AS (
           SELECT band_idx, band_hash, count(*) AS bucket_size
           FROM bands GROUP BY band_idx, band_hash
         )

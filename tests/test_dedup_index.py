@@ -233,6 +233,21 @@ def test_probe_of_missing_index_refuses(spark, tmp_path):
         )
 
 
+def test_probe_of_index_missing_a_table_refuses(spark, tmp_path):
+    """A built index whose postings table is gone fails loudly instead of
+    probing an empty table (every collision silently lost)."""
+    import shutil
+
+    idx_path = str(tmp_path / "mh_index")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string")
+    build_minhash_index(spark, docs, idx_path, num_hashes=NUM_HASHES,
+                        bands=BANDS, n_parts=N_PARTS)
+    shutil.rmtree(os.path.join(idx_path, "postings"))
+    with pytest.raises(ValueError, match="no postings table"):
+        incremental_near_dups(spark, idx_path, docs)
+
+
 def test_compact_minhash_index(spark, sf_dir, tmp_path):
     """After two merges a partition may hold several files; compaction
     rewrites to exactly one file per partition with values (and probe

@@ -116,3 +116,20 @@ def test_query_vs_oracle(spark, ducks, name):
         raise AssertionError(
             f"{name}: value mismatch\nspark:\n{g[bad].head(5)}\nduck:\n{w[bad].head(5)}"
         )
+
+
+def test_incremental_near_dups_frames_outlive_their_index(spark, ducks):
+    """The ``incremental_near_dups`` builder indexes into a private temp
+    dir and removes it before returning: two frames built back to back
+    both collect to the oracle rows, and no index dir is left behind."""
+    import glob
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "pdf2doi_incr_idx_*")
+    before = set(glob.glob(pattern))
+    query, sql = _BUILDERS["incremental_near_dups"]()
+    first, second = query(spark, SF01), query(spark, SF01)
+    want = _canon(ducks.execute(sql).df())
+    for df in (first, second):
+        assert _canon(df.toPandas()).equals(want)
+    assert set(glob.glob(pattern)) <= before, "index dir left behind"

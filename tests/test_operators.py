@@ -308,14 +308,15 @@ def test_merge_cache_roundtrip(spark, tmp_path):
         [("u1", "10.1/a", "DOI", "document_text", 1)],
         "url string, identifier string, identifier_type string, method string, tier int",
     )
-    c1 = merge_cache(spark, cache_path, r1)
-    assert c1.count() == 1
+    merge_cache(spark, cache_path, r1)
+    assert spark.read.parquet(cache_path).count() == 1
     # second run: new result for u1 wins, u2 added
     r2 = spark.createDataFrame(
         [("u1", "10.1/b", "DOI", "filename", 0), ("u2", "10.2/x", "DOI", "document_text", 1)],
         "url string, identifier string, identifier_type string, method string, tier int",
     )
-    c2 = merge_cache(spark, cache_path, r2).toPandas().set_index("url")
+    merge_cache(spark, cache_path, r2)
+    c2 = spark.read.parquet(cache_path).toPandas().set_index("url")
     assert c2.loc["u1"]["identifier"] == "10.1/b"
     assert c2.loc["u2"]["identifier"] == "10.2/x"
 
@@ -348,8 +349,8 @@ def test_merge_cache_is_shard_incremental(spark, tmp_path):
         [("https://new-a.org/p", "10.9/a", "DOI", "filename", 0),
          ("https://new-b.org/p", "10.9/b", "DOI", "filename", 0)], schema,
     )
-    merged = merge_cache(spark, cache_path, delta, n_shards=16)
-    assert merged.count() == 402
+    merge_cache(spark, cache_path, delta, n_shards=16)
+    assert spark.read.parquet(cache_path).count() == 402
 
     touched = {
         str(r["shard"]) for r in
@@ -873,8 +874,8 @@ def test_minhash_bucket_cap_drops_only_giant_buckets(spark):
 
 
 def test_merge_cache_empty_batch_no_prior_cache(spark, tmp_path):
-    """All-miss first run: no crash, no schema-less parquet dir, empty
-    result."""
+    """All-miss first run: no crash, no schema-less parquet dir, nothing
+    written."""
     from pdf2doi_spark.sources.io import merge_cache
 
     cache_path = str(tmp_path / "cache.parquet")
@@ -882,8 +883,7 @@ def test_merge_cache_empty_batch_no_prior_cache(spark, tmp_path):
         [], "url string, identifier string, identifier_type string, "
             "method string, tier int",
     )
-    out = merge_cache(spark, cache_path, empty)
-    assert out.count() == 0
+    assert merge_cache(spark, cache_path, empty) is None
     assert not os.path.exists(cache_path)  # nothing was materialized
 
 
@@ -929,7 +929,8 @@ def test_merge_cache_pins_shard_count(spark, tmp_path):
     update = spark.createDataFrame(
         [("https://h3.org/p", "10.9/NEW", "DOI", "filename", 0)], schema,
     )
-    merged = merge_cache(spark, cache_path, update, n_shards=16)  # wrong arg
+    merge_cache(spark, cache_path, update, n_shards=16)  # wrong arg
+    merged = spark.read.parquet(cache_path)
     rows = merged.filter(F.col("url") == "https://h3.org/p").collect()
     assert len(rows) == 1, rows  # exactly one row per url
     assert rows[0]["identifier"] == "10.9/NEW"
@@ -959,10 +960,11 @@ def test_merge_cache_sequence_matches_dict_model(spark, tmp_path):
         for url, ident, *_ in rows:
             if ident is not None:
                 model[url] = ident  # dropDuplicates keeps one of equal rows
-        merged = merge_cache(
+        merge_cache(
             spark, cache_path, spark.createDataFrame(rows, schema), n_shards=8
         )
-        got = {r["url"]: r["identifier"] for r in merged.collect()}
+        got = {r["url"]: r["identifier"]
+               for r in spark.read.parquet(cache_path).collect()}
         assert got == model, (got, model)
 
 
@@ -1109,8 +1111,8 @@ def test_merge_cache_idempotent_remerge_rewrites_nothing(spark, tmp_path):
         f: os.stat(f).st_mtime_ns
         for f in glob.glob(f"{cache_path}/shard=*/*.parquet")
     }
-    out = merge_cache(spark, cache_path, base, n_shards=16)  # identical
-    assert out.count() == 100
+    merge_cache(spark, cache_path, base, n_shards=16)  # identical
+    assert spark.read.parquet(cache_path).count() == 100
     after = {
         f: os.stat(f).st_mtime_ns
         for f in glob.glob(f"{cache_path}/shard=*/*.parquet")
@@ -1319,10 +1321,10 @@ def test_merge_cache_never_counts(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "count", counting)
     r2 = spark.createDataFrame([("u2", "10.2/b", "DOI", "filename", 0)], ddl)
-    merged = merge_cache(spark, cache_path, r2)
+    merge_cache(spark, cache_path, r2)
     assert calls == [], f"merge_cache ran {len(calls)} DataFrame.count() calls"
     monkeypatch.undo()
-    assert merged.count() == 2
+    assert spark.read.parquet(cache_path).count() == 2
 
 
 def test_run_resumable_empty_input_and_sealed_warning(spark, tmp_path):
@@ -1405,6 +1407,146 @@ def test_run_resumable_partial_crash_then_empty_input_not_sealed(
     man = spark.read.parquet(f"{out}/manifest")
     assert man.count() == 4
     assert man.agg(F.sum("n_docs")).first()[0] == 6
+
+
+def _record_parquet_reads(monkeypatch) -> list:
+    """Paths passed to ``DataFrameReader.parquet`` from now on."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    paths, orig = [], DataFrameReader.parquet
+
+    def recording(self, *ps, **kw):
+        paths.extend(ps)
+        return orig(self, *ps, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    return paths
+
+
+def _tiny_pages(spark, n: int):
+    return spark.createDataFrame(
+        [(f"https://h{i}.org/p", bytearray(b"<html></html>"), "t")
+         for i in range(n)],
+        "url string, html binary, text string",
+    )
+
+
+def test_run_resumable_reads_results_once(spark, tmp_path, monkeypatch):
+    """The manifest is built from the same results frame the run returns,
+    so a run lists ``<out>/results`` once, not once per consumer."""
+    from pdf2doi_spark.sources.io import run_resumable
+
+    out = str(tmp_path / "run")
+    pages = _tiny_pages(spark, 12)
+    reads = _record_parquet_reads(monkeypatch)
+    res = run_resumable(spark, pages, out, n_shards=4)
+    assert reads.count(os.path.join(out, "results")) == 1, reads
+    monkeypatch.undo()
+    assert res.count() == 12
+
+
+def test_merge_cache_reads_cache_once(spark, tmp_path, monkeypatch):
+    """A merge with changes into an existing cache reads the cache once:
+    no fresh read-back of the merged table after the write."""
+    from pdf2doi_spark.sources.io import merge_cache
+
+    cache_path = str(tmp_path / "cache")
+    ddl = ("url string, identifier string, identifier_type string, "
+           "method string, tier int")
+    merge_cache(spark, cache_path, spark.createDataFrame(
+        [("u1", "10.1/a", "DOI", "document_text", 1)], ddl))
+    reads = _record_parquet_reads(monkeypatch)
+    merge_cache(spark, cache_path, spark.createDataFrame(
+        [("u1", "10.1/b", "DOI", "filename", 0),
+         ("u2", "10.2/x", "DOI", "filename", 0)], ddl))
+    assert reads.count(cache_path) == 1, reads
+    monkeypatch.undo()
+    got = {r["url"]: r["identifier"]
+           for r in spark.read.parquet(cache_path).collect()}
+    assert got == {"u1": "10.1/b", "u2": "10.2/x"}
+
+
+def test_run_resumable_manifest_one_row_per_shard_after_restart(
+        spark, tmp_path, monkeypatch):
+    """Each run appends manifest rows for its not-yet-done shards only, so
+    after a crash (data written, manifest append failed) and restarts the
+    manifest holds exactly one row per shard."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pdf2doi_spark.sources.io import MANIFEST_SCHEMA, run_resumable
+
+    out = str(tmp_path / "run")
+    manifest = os.path.join(out, "manifest")
+    pages = _tiny_pages(spark, 40)
+    orig = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        if path == manifest:
+            raise IOError("injected crash before the manifest append")
+        return orig(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(IOError):
+        run_resumable(spark, pages, out, n_shards=8)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(out, "results"))
+    assert not os.path.exists(manifest)
+
+    def check():
+        man = spark.read.parquet(manifest)
+        assert man.count() == 8
+        assert man.select("shard").distinct().count() == 8
+        assert man.agg(F.sum("n_docs")).first()[0] == 40
+
+    res = run_resumable(spark, pages, out, n_shards=8)
+    check()
+    assert res.count() == 40
+
+    # a manifest that records only half the shards: the restart appends
+    # rows for the other half and nothing else
+    half = spark.read.parquet(manifest).filter(F.col("shard") < 4).collect()
+    shutil.rmtree(manifest)
+    spark.createDataFrame(half, MANIFEST_SCHEMA).write.parquet(manifest)
+    res = run_resumable(spark, pages, out, n_shards=8)
+    check()
+    assert res.count() == 40
+    assert res.select("url").distinct().count() == 40
+
+
+def test_merge_cache_pins_modulus_before_data(spark, tmp_path, monkeypatch):
+    """A new-cache merge that dies writing its shard-count marker must not
+    leave committed data behind unpinned: a later merge under the default
+    modulus would otherwise keep the url's row under its old shard id and
+    add a second one."""
+    import pdf2doi_spark.sources.io as io
+
+    probe = spark.createDataFrame(
+        [(f"https://h{i}.org/p",) for i in range(64)], "url string")
+    url = (probe.filter(F.pmod(F.xxhash64("url"), F.lit(16))
+                        != F.pmod(F.xxhash64("url"), F.lit(64)))
+           .orderBy("url").first()["url"])
+    ddl = ("url string, identifier string, identifier_type string, "
+           "method string, tier int")
+    cache_path = str(tmp_path / "cache")
+    real = io._fs_write_small
+
+    def failing(spark_, path, content):
+        if path.endswith("_pdf2doi_n_shards"):
+            raise IOError("injected marker-write failure")
+        real(spark_, path, content)
+
+    monkeypatch.setattr(io, "_fs_write_small", failing)
+    with pytest.raises(IOError):
+        io.merge_cache(spark, cache_path, spark.createDataFrame(
+            [(url, "10.1/old", "DOI", "document_text", 1)], ddl), n_shards=16)
+    monkeypatch.undo()
+    io.merge_cache(spark, cache_path, spark.createDataFrame(
+        [(url, "10.1/new", "DOI", "filename", 0)], ddl))
+    rows = spark.read.parquet(cache_path).filter(F.col("url") == url).collect()
+    assert len(rows) == 1, rows
+    assert rows[0]["identifier"] == "10.1/new"
 
 
 def test_approx_stats_two_doc_group_verdict_true(spark, tmp_path):
@@ -1760,7 +1902,8 @@ def test_merge_cache_migrates_flat_layout(spark, tmp_path):
     new = spark.createDataFrame(
         [("https://new.org/p", "10.9/z", "DOI", "filename", 0)], schema
     )
-    merged = merge_cache(spark, cache_path, new, n_shards=4)
+    merge_cache(spark, cache_path, new, n_shards=4)
+    merged = spark.read.parquet(cache_path)
     assert merged.count() == 41
     assert merged.filter(F.col("url") == "https://new.org/p").count() == 1
     shard_dirs = glob.glob(f"{cache_path}/shard=*")

@@ -374,6 +374,40 @@ def test_scope_cdx_index_host_and_window(spark):
         2024, 2, 29, 23, 59, 59)
 
 
+def test_scope_cdx_window_uses_session_timezone(spark, monkeypatch):
+    """Naive CDX bounds are wall-clock times in the SESSION timezone, like
+    ``capture_ts``, whatever the driver process's own zone is; a bound
+    with an explicit offset keeps its instant."""
+    import time
+
+    from pdf2doi_spark.sources.warc import scope_cdx_index
+
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        idx = spark.createDataFrame(
+            [("first", "2024-06-15 00:00:00"),
+             ("second", "2024-06-14 23:59:59")],
+            "urlkey string, ts string",
+        ).select("urlkey", F.to_timestamp("ts").alias("capture_ts"))
+
+        def keys(**bounds):
+            return sorted(
+                r.urlkey for r in scope_cdx_index(idx, **bounds).collect())
+
+        assert keys(ts_from="20240615") == ["first"]
+        assert keys(ts_to="20240614") == ["second"]
+        # 04:00Z is midnight in New York (EDT)
+        assert keys(ts_from="2024-06-15T04:00:00Z") == ["first"]
+        assert keys(ts_to="2024-06-15T03:59:59+00:00") == ["second"]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_job_entrypoint_ingests_cdx_index(tmp_path):
     """The production entry point must run straight off CC-published
     artifacts: --cdx-index (CDXJ lines) + --warc-base, no pages table —
