@@ -3,20 +3,24 @@
 The reference exposes a tiny static settings registry
 (``config.get/set/update_params``) that library users tweak before calling
 ``pdf2doi.pdf2doi(...)``. This mirrors the surface and the default values
-for every key that has an offline meaning; the web-only keys are accepted
-for drop-in compatibility but have no effect (this engine is permanently
-offline — equivalent to the reference run with ``websearch`` and
-``webvalidation`` disabled, its own gates at finders.py:802-804,829-831).
+for every reference key. Two keys are read:
 
-Offline-meaningful keys:
-
-* ``verbose``                                 — CLI counter printing default;
-* ``save_identifier_metadata``                — write-back gate: the cache
-  merge (the Spark analogue of writing into PDF metadata) is skipped when
-  False, reference main.py:98-100;
 * ``replace_arxivID_by_DOI_when_available``   — default for the V4 rewrite;
 * ``N_characters_in_pdf``                     — default truncation length of
   the F11 ascii scrub (reference finders.py:844-852).
+
+The rest are accepted for drop-in compatibility but have no effect:
+
+* the web-only keys (``method_dxdoiorg``, ``webvalidation``,
+  ``websearch``, ``numb_results_google_search``): this engine is
+  permanently offline — equivalent to the reference run with
+  ``websearch`` and ``webvalidation`` disabled, its own gates at
+  finders.py:802-804,829-831;
+* ``verbose``: the extraction counters print only under ``cli.py -v``;
+* ``save_identifier_metadata``: the write-back (the cache merge, the
+  Spark analogue of writing into PDF metadata, reference main.py:98-100)
+  is decided by ``cli.py -nostore`` and by whether a cache path is given;
+  the library entry ``pdf2doi()`` never writes.
 """
 from __future__ import annotations
 

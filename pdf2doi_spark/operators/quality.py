@@ -135,15 +135,11 @@ def winnowing_sketch(df: DataFrame, text_col: str = "text", n: int = 3,
     hashes as the document's sketch. Two documents sharing most content
     share most of their sketch, so sketch overlap is a cheap containment
     signal. md5 keeps it cross-engine; all native, no shuffle."""
-    words = F.split(norm_text(F.col(text_col)), " ")
-    m = F.size(words) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(m - 1, F.lit(-1))),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, n))),
-    )
-    sketch = F.when(
-        m >= 1, F.slice(F.array_sort(F.array_distinct(grams)), 1, k)
-    ).otherwise(F.array().cast("array<string>"))
+    # imported here: dedup imports this module at module level
+    from pdf2doi_spark.operators.dedup import word_shingles
+
+    grams = F.transform(word_shingles(F.col(text_col), n), lambda g: F.md5(g))
+    sketch = F.slice(F.array_sort(grams), 1, k)
     return df.select(F.col("doc_id"), sketch.alias("sketch"))
 
 

@@ -199,6 +199,14 @@ def read_sharded(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def touched_shards(df: DataFrame, col: str) -> list:
+    """Sorted distinct values of the shard column ``col`` in ``df``: the
+    shards a batch touches, collected on the driver (bounded by the
+    modulus, never row data) so that a read of the stored table can prune
+    its scan to them with ``isin``."""
+    return sorted(r[0] for r in df.select(col).distinct().collect())
+
+
 CACHE_N_SHARDS = 64
 CACHE_SCHEMA = ("url string, identifier string, identifier_type string, "
                 "method string, shard int")
@@ -263,15 +271,6 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
     # whole kernel — persist so every caller pays ONE extraction pass.
     new = new.persist()
     persisted = [new]
-
-    def touched_shards(df: DataFrame) -> list:
-        # the (small) distinct-shard set of the batch, collected on the
-        # driver to build a partition-pruning filter for the old-side scan
-        # (bounded by n_shards values, never row data)
-        return sorted(
-            r["shard"] for r in df.select("shard").distinct().collect()
-        )
-
     try:
         children = (_fs_child_names(spark, cache_path)
                     if fs_exists(spark, cache_path) else None)
@@ -292,7 +291,7 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
                 return
             _fs_write_small(spark, marker, str(n_shards))
 
-        touched = touched_shards(new)
+        touched = touched_shards(new, "shard")
         if not touched:
             return
         old_touched = read_sharded(spark, cache_path, CACHE_SCHEMA).filter(
@@ -315,7 +314,7 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
             cond = cond & c
         new = new.join(old_cmp, cond, "left_anti").persist()
         persisted.append(new)
-        touched = touched_shards(new)
+        touched = touched_shards(new, "shard")
         if not touched:
             return
         survivors = old_touched.filter(F.col("shard").isin(touched)).join(

@@ -114,42 +114,50 @@ def _parse_ts(warc_date: Optional[str]):
         return None
 
 
+def _record_spans(data: bytes) -> Iterator[Tuple[int, dict, int, int]]:
+    """``(start, headers, body_start, end)`` of every WARC record in the
+    uncompressed ``data``, framed by its Content-Length: the one record
+    walk of the parser and the member indexer."""
+    offset = 0
+    while True:
+        start = data.find(b"WARC/", offset)
+        if start < 0:
+            return
+        head_end = data.find(_CRLF2, start)
+        if head_end < 0:
+            return
+        headers = _parse_headers(data[start:head_end])
+        try:
+            length = int(headers.get("content-length", ""))
+            if length < 0:
+                # negative length would step the scan offset BACKWARD
+                # (bytes.find clamps negative starts to 0), re-finding
+                # this same record forever
+                raise ValueError("negative Content-Length")
+        except ValueError:
+            # Framing is unrecoverable without Content-Length: scanning
+            # onward for the next 'WARC/' would re-parse this record's
+            # BODY, letting page content that happens to embed WARC
+            # header text fabricate records with attacker-controlled
+            # provenance. Drop the rest of the data instead.
+            return
+        body_start = head_end + len(_CRLF2)
+        offset = body_start + length
+        yield start, headers, body_start, offset
+
+
 def iter_warc_records(payload: bytes) -> Iterator[Tuple[str, object, bytes]]:
     """Yield ``(target_uri, warc_ts, body_bytes)`` for every WARC
     ``response`` record in ``payload`` (any of the three compressions)."""
     for chunk in _gzip_members(payload or b""):
-        offset = 0
-        while True:
-            start = chunk.find(b"WARC/", offset)
-            if start < 0:
-                break
-            head_end = chunk.find(_CRLF2, start)
-            if head_end < 0:
-                break
-            headers = _parse_headers(chunk[start:head_end])
-            try:
-                length = int(headers.get("content-length", ""))
-                if length < 0:
-                    # negative length would step the scan offset BACKWARD
-                    # (bytes.find clamps negative starts to 0), re-finding
-                    # this same record forever
-                    raise ValueError("negative Content-Length")
-            except ValueError:
-                # Framing is unrecoverable without Content-Length: scanning
-                # onward for the next 'WARC/' would re-parse this record's
-                # BODY, letting page content that happens to embed WARC
-                # header text fabricate records with attacker-controlled
-                # provenance. Drop the rest of this chunk instead.
-                break
-            body_start = head_end + len(_CRLF2)
-            record = chunk[body_start : body_start + length]
-            offset = body_start + length
+        for _start, headers, body_start, end in _record_spans(chunk):
             if headers.get("warc-type") != "response":
                 continue
             uri = headers.get("warc-target-uri")
             if not uri:
                 continue
             # response payload is an HTTP message: strip its status+headers
+            record = chunk[body_start:end]
             http_end = record.find(_CRLF2)
             body = record[http_end + len(_CRLF2):] if http_end >= 0 else record
             yield uri, _parse_ts(headers.get("warc-date")), body
@@ -232,31 +240,12 @@ def index_warc_members(data: bytes) -> List[Tuple[int, int]]:
     Member accounting reuses the chunked ``_iter_gzip_spans`` walker
     (bounded memcpy — see its docstring); uncompressed archives are framed
     by the same Content-Length walk the parser uses."""
-    spans: List[Tuple[int, int]] = []
     if data[:2] == b"\x1f\x8b":
         return [
             (off, ln)
             for off, ln, _ in _iter_gzip_spans(data, want_payload=False)
         ]
-    offset = 0
-    while True:
-        start = data.find(b"WARC/", offset)
-        if start < 0:
-            break
-        head_end = data.find(_CRLF2, start)
-        if head_end < 0:
-            break
-        try:
-            length = int(_parse_headers(data[start:head_end]).get(
-                "content-length", ""))
-            if length < 0:
-                raise ValueError
-        except ValueError:
-            break
-        end = head_end + len(_CRLF2) + length
-        spans.append((start, end - start))
-        offset = end
-    return spans
+    return [(start, end - start) for start, _h, _b, end in _record_spans(data)]
 
 
 def build_warc_index(spark: SparkSession, path: str,

@@ -187,6 +187,25 @@ def test_incremental_merge_is_idempotent_and_compact(spark, sf_dir, tmp_path):
         assert len(glob.glob(os.path.join(d, "*.parquet"))) <= 2, d
 
 
+def test_probe_partner_in_index_and_batch_prefers_index(spark, sf_dir,
+                                                        tmp_path):
+    """900003 is merged, then probed again together with its exact copy
+    900004, so the partner 900003 sits in both the index and the batch.
+    900003 must not match itself in the index nor 900004 in the batch,
+    and 900004's tie between the two copies of 900003 goes to the
+    index."""
+    index_docs, batch_docs = _doc_maps(spark, sf_dir)
+    idx_path = str(tmp_path / "mh_index")
+    build_minhash_index(spark, _df(spark, index_docs), idx_path,
+                        num_hashes=NUM_HASHES, bands=BANDS, n_parts=N_PARTS)
+    merge_minhash_index(spark, idx_path,
+                        _df(spark, {900003: batch_docs[900003]}))
+    probe = {d: batch_docs[d] for d in (900003, 900004)}
+    got = incremental_near_dups(spark, idx_path, _df(spark, probe),
+                                threshold=0.5).collect()
+    assert [tuple(r) for r in got] == [(900004, 900003, 1.0, "index")]
+
+
 def test_incremental_probe_prunes_partitions(spark, sf_dir, tmp_path):
     """A one-doc probe must scan only the postings partitions its bands
     hash into — PartitionFilters on pq at the parquet scan."""
@@ -486,11 +505,9 @@ def test_merge_crash_between_appends_converges(spark, sf_dir, tmp_path,
     }
     got = incremental_near_dups(
         spark, idx_path, _df(spark, probe), threshold=0.5,
-        include_intra_batch=False,
     ).collect()
     want = incremental_near_dups(
         spark, ref_path, _df(spark, probe), threshold=0.5,
-        include_intra_batch=False,
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert {r.doc_id for r in got} == {999995, 999996}

@@ -19,7 +19,13 @@ def _events():
          "Stage Infos": [{"Stage ID": 0, "Stage Name": "map"},
                          {"Stage ID": 1, "Stage Name": "result"}],
          "Properties": {"spark.sql.execution.id": "0"}},
-        *[{"Event": "SparkListenerTaskEnd", "Stage ID": s} for s in (0, 0, 1)],
+        *[{"Event": "SparkListenerTaskEnd", "Stage ID": s,
+           "Task Metrics": {"Executor CPU Time": cpu,
+                            "Shuffle Write Metrics": {
+                                "Shuffle Bytes Written": shuf}}}
+          for s, cpu, shuf in ((0, 400_000_000, 1000),
+                               (0, 600_000_000, 24),
+                               (1, 250_000_000, 0))],
         {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 3500},
         # a later job lists the reused stage 0 again, but runs only stage 2
         {"Event": "SparkListenerJobStart", "Job ID": 1,
@@ -27,6 +33,7 @@ def _events():
          "Stage Infos": [{"Stage ID": 0, "Stage Name": "map"},
                          {"Stage ID": 2, "Stage Name": "parquet at x:0"}],
          "Properties": {}},
+        # a task end without metrics (a failed task) counts as zero
         {"Event": "SparkListenerTaskEnd", "Stage ID": 2},
         {"Event": "SparkListenerJobEnd", "Job ID": 1, "Completion Time": 4250},
     ]
@@ -37,10 +44,12 @@ def test_stage_report_rows_and_total(tmp_path, capsys):
     log.write_text("\n".join(json.dumps(e) for e in _events()) + "\n")
     rows = stage_report.job_rows(stage_report.read_events(str(log)))
     assert rows == [
-        {"id": 0, "start_ms": 1000, "tasks": 3,
-         "description": "save at job.py:1", "duration_ms": 2500},
-        {"id": 1, "start_ms": 4000, "tasks": 1,
-         "description": "parquet at x:0", "duration_ms": 250},
+        {"id": 0, "start_ms": 1000, "tasks": 3, "cpu_ns": 1_250_000_000,
+         "shuffle_bytes": 1024, "description": "save at job.py:1",
+         "duration_ms": 2500},
+        {"id": 1, "start_ms": 4000, "tasks": 1, "cpu_ns": 0,
+         "shuffle_bytes": 0, "description": "parquet at x:0",
+         "duration_ms": 250},
     ]
     # a rolling-log directory reads the same
     roll = tmp_path / "eventlog_v2_local-1"
@@ -49,6 +58,7 @@ def test_stage_report_rows_and_total(tmp_path, capsys):
     assert stage_report.main([str(roll)]) == 0
     out = capsys.readouterr().out.splitlines()
     assert len(out) == 4  # header, two jobs, total
-    assert out[1].split()[:4] == ["0", "0.00", "2.50", "3"]
-    assert out[2].split()[:4] == ["1", "3.00", "0.25", "1"]
-    assert out[-1] == "total: 2 jobs, 4 tasks, 2.75 s in jobs"
+    assert out[1].split()[:6] == ["0", "0.00", "2.50", "3", "1.25", "1024"]
+    assert out[2].split()[:6] == ["1", "3.00", "0.25", "1", "0.00", "0"]
+    assert out[-1] == ("total: 2 jobs, 4 tasks, 2.75 s in jobs, "
+                       "1.25 executor cpu-s, 1024 shuffle bytes written")

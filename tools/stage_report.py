@@ -3,9 +3,10 @@
 
 Reads one event-log file (plain or ``.zstd``) or a rolling
 ``eventlog_v2_*`` directory and prints one row per Spark job: start
-offset from the first job, duration, tasks run, and what submitted it
-(the SQL execution description, else the job description, else the
-name of its last stage). The last line is the total.
+offset from the first job, duration, tasks run, executor CPU seconds
+(the tasks' ``Executor CPU Time``), shuffle bytes written, and what
+submitted it (the SQL execution description, else the job description,
+else the name of its last stage). The last line is the total.
 
 Turn the log on for any session without touching the package:
 
@@ -46,7 +47,8 @@ def read_events(path: str):
 
 
 def job_rows(events) -> list:
-    """One dict per job: id, start_ms, duration_ms, tasks, description."""
+    """One dict per job: id, start_ms, duration_ms, tasks, cpu_ns,
+    shuffle_bytes, description."""
     jobs, stage_job, sql_desc = {}, {}, {}
     for e in events:
         kind = e["Event"]
@@ -63,7 +65,8 @@ def job_rows(events) -> list:
             jobs[e["Job ID"]] = {"id": e["Job ID"],
                                  "start_ms": e["Submission Time"],
                                  "end_ms": e["Submission Time"],
-                                 "tasks": 0, "description": desc}
+                                 "tasks": 0, "cpu_ns": 0, "shuffle_bytes": 0,
+                                 "description": desc}
             # a reused shuffle stage is listed again by later jobs but its
             # tasks ran under the first one
             for sid in e.get("Stage IDs", []):
@@ -71,7 +74,12 @@ def job_rows(events) -> list:
         elif kind == "SparkListenerTaskEnd":
             job = stage_job.get(e["Stage ID"])
             if job is not None:
+                m = e.get("Task Metrics") or {}
                 jobs[job]["tasks"] += 1
+                jobs[job]["cpu_ns"] += m.get("Executor CPU Time", 0)
+                jobs[job]["shuffle_bytes"] += (
+                    m.get("Shuffle Write Metrics") or {}
+                ).get("Shuffle Bytes Written", 0)
         elif kind == "SparkListenerJobEnd" and e["Job ID"] in jobs:
             jobs[e["Job ID"]]["end_ms"] = e["Completion Time"]
     rows = sorted(jobs.values(), key=lambda j: j["id"])
@@ -82,14 +90,20 @@ def job_rows(events) -> list:
 
 def report(rows: list) -> str:
     t0 = rows[0]["start_ms"] if rows else 0
-    lines = [f"{'job':>4} {'start_s':>8} {'dur_s':>7} {'tasks':>6}  description"]
+    lines = [f"{'job':>4} {'start_s':>8} {'dur_s':>7} {'tasks':>6} "
+             f"{'cpu_s':>7} {'shuffle_B':>11}  description"]
     for j in rows:
         desc = " ".join(j["description"].split())[:90]
         lines.append(f"{j['id']:>4} {(j['start_ms'] - t0) / 1e3:8.2f} "
-                     f"{j['duration_ms'] / 1e3:7.2f} {j['tasks']:>6}  {desc}")
+                     f"{j['duration_ms'] / 1e3:7.2f} {j['tasks']:>6} "
+                     f"{j['cpu_ns'] / 1e9:7.2f} {j['shuffle_bytes']:>11}  "
+                     f"{desc}")
     lines.append(f"total: {len(rows)} jobs, "
                  f"{sum(j['tasks'] for j in rows)} tasks, "
-                 f"{sum(j['duration_ms'] for j in rows) / 1e3:.2f} s in jobs")
+                 f"{sum(j['duration_ms'] for j in rows) / 1e3:.2f} s in jobs, "
+                 f"{sum(j['cpu_ns'] for j in rows) / 1e9:.2f} executor cpu-s, "
+                 f"{sum(j['shuffle_bytes'] for j in rows)} shuffle bytes "
+                 "written")
     return "\n".join(lines)
 
 
