@@ -472,8 +472,8 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     between its two appends (see ``merge_minhash_index``) are dropped and
     ``postings == sigs × bands`` holds again — stale duplicates would
     otherwise inflate ``minhash_index_profile`` and push a legitimate
-    bucket over ``max_bucket`` forever. Via a .cmp swap because Spark
-    (correctly) refuses to overwrite a path it is reading from.
+    bucket over ``max_bucket`` forever. The ``.cmp`` copies are complete,
+    so a swap that dies leaves a copy to recover from.
 
     Crash safety: ``_params`` is REMOVED before the destructive rewrite
     of the live tables and restored only after both complete — a job

@@ -28,6 +28,25 @@ ARROW_BATCH_ROWS = 2048
 _SHIPPED_APPS: set = set()
 
 
+def zip_package(prefix: str) -> str:
+    """Zip the package's ``*.py`` files (``ZIP_STORED``, no
+    ``__pycache__``) under ``pdf2doi_spark/`` into a new temp file named
+    ``<prefix>*.zip`` and return its path: the ``--py-files`` archive."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    fd, zip_path = tempfile.mkstemp(prefix=prefix, suffix=".zip")
+    os.close(fd)
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.join(
+                        "pdf2doi_spark", os.path.relpath(full, pkg_dir)))
+    return zip_path
+
+
 def ship_package(spark: SparkSession) -> None:
     """Ship the ``pdf2doi_spark`` package to executors.
 
@@ -45,23 +64,7 @@ def ship_package(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    fd, zip_path = tempfile.mkstemp(
-        prefix="pdf2doi_spark_pyfiles_", suffix=".zip"
-    )
-    os.close(fd)
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(root, fn)
-                rel = os.path.join(
-                    "pdf2doi_spark", os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
+    zip_path = zip_package("pdf2doi_spark_pyfiles_")
     spark.sparkContext.addPyFile(zip_path)
     # Executors (re-)fetch and content-check the zip from this local path
     # lazily at task-dependency update, so it must outlive the session —

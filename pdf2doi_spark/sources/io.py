@@ -109,9 +109,6 @@ def _rmtree(path: str, spark: SparkSession) -> None:
         fs.delete(hp, True)
 
 
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-
-
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Read a pages table (parquet dir or file). Projection stays lazy —
     downstream operators select only what they use, so column pruning
@@ -237,12 +234,23 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
     Scale shape: the cache is stored partitioned by a deterministic url
     shard (``pmod(xxhash64(url), n_shards)`` — the parquet analogue of
     Iceberg's ``bucket(N, url)`` transform), and a merge touches ONLY the
-    shards the new urls hash into: old rows of touched shards are anti-joined
-    against the new urls and rewritten together with the new rows via
-    dynamic partition overwrite; untouched shard directories are never read
-    or rewritten. At a billions-row cache a merge therefore costs
-    O(new + touched-shard rows), not a full shuffle + full rewrite per run
-    (the round-1 design).
+    shards the new urls hash into. One driver-side collect names those
+    shards; one relation holds the merged rows: the batch rows that differ
+    from their stored row (``changed``), plus the stored rows of the
+    touched shards whose url is not in ``changed``, restricted to the
+    shards that hold a changed row. One dynamic partition overwrite writes
+    it in place; untouched shard directories are never read or rewritten,
+    and an identical re-merge rewrites none. At a billions-row cache a
+    merge therefore costs O(new + touched-shard rows), not a full shuffle +
+    full rewrite per run (the round-1 design).
+
+    The in-place write may read the shards it replaces: dynamic overwrite
+    stages every task's output under ``<cache>/.spark-staging-<job>`` and
+    swaps a shard directory in only at job commit, after every task has
+    read. A crash before commit leaves the cache untouched; a crash during
+    commit leaves the not-yet-swapped shards in the staging directory for
+    recovery. Its leading ``.`` hides it from reads and from the
+    flat-layout check.
 
     ``n_shards`` applies when the cache is CREATED; an existing cache's
     stored shard count (pinned by a ``_pdf2doi_n_shards`` marker) always
@@ -265,12 +273,11 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
         .dropDuplicates(["url"])
         .withColumn("shard", shard_of(n_shards, "url"))
     )
-    # The merge evaluates the batch up to three times (touched-shard
-    # collect, post-anti-join collect, the write). If ``results`` is an
-    # unmaterialized extraction plan, each evaluation would re-run the
-    # whole kernel — persist so every caller pays ONE extraction pass.
+    # The merge evaluates the batch twice (touched-shard collect, the
+    # write). If ``results`` is an unmaterialized extraction plan, each
+    # evaluation would re-run the whole kernel — persist so every caller
+    # pays ONE extraction pass.
     new = new.persist()
-    persisted = [new]
     try:
         children = (_fs_child_names(spark, cache_path)
                     if fs_exists(spark, cache_path) else None)
@@ -285,16 +292,14 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
             write_sharded(spark.read.parquet(cache_path + ".mig"),
                           cache_path, "shard", "overwrite")
             _rmtree(cache_path + ".mig", spark)
-        if not pinned:
-            if children is None and new.isEmpty():
-                # no cache and nothing to write: leave no directory behind
-                return
-            _fs_write_small(spark, marker, str(n_shards))
-
         touched = touched_shards(new, "shard")
+        if not pinned and (touched or children is not None):
+            # no cache and nothing to write leaves no directory behind;
+            # otherwise the marker precedes the first data write
+            _fs_write_small(spark, marker, str(n_shards))
         if not touched:
             return
-        old_touched = read_sharded(spark, cache_path, CACHE_SCHEMA).filter(
+        old = read_sharded(spark, cache_path, CACHE_SCHEMA).filter(
             F.col("shard").isin(touched)
         )
         # Rows ALREADY in the cache with identical values are no-ops —
@@ -305,33 +310,23 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
         # true under plain equality, so such rows would count as "new"
         # and re-churn their shard on every merge forever.
         cols = ("url", "identifier", "identifier_type", "method", "shard")
-        old_cmp = old_touched.select(
-            *[F.col(c).alias(f"_old_{c}") for c in cols]
-        )
+        old_cmp = old.select(*[F.col(c).alias(f"_old_{c}") for c in cols])
         same = [new[c].eqNullSafe(old_cmp[f"_old_{c}"]) for c in cols]
         cond = same[0]
         for c in same[1:]:
             cond = cond & c
-        new = new.join(old_cmp, cond, "left_anti").persist()
-        persisted.append(new)
-        touched = touched_shards(new, "shard")
-        if not touched:
-            return
-        survivors = old_touched.filter(F.col("shard").isin(touched)).join(
-            new.select("url"), on="url", how="left_anti"
+        changed = new.join(old_cmp, cond, "left_anti")
+        # new rows win on url; only shards holding a changed row are kept,
+        # so the dynamic write below replaces exactly those directories
+        merged = (
+            old.join(changed.select("url"), on="url", how="left_anti")
+            .unionByName(changed)
+            .join(changed.select("shard").distinct(), on="shard",
+                  how="left_semi")
         )
-        # Materialize before the overwrite (the merged plan reads the very
-        # partitions being replaced); the dynamic write then rewrites ONLY
-        # the shard directories present in the batch. A failed write
-        # leaves the tmp copy for recovery.
-        tmp = cache_path + ".tmp"
-        survivors.unionByName(new).write.mode("overwrite").parquet(tmp)
-        write_sharded(read_sharded(spark, tmp, CACHE_SCHEMA), cache_path,
-                      "shard", "dynamic")
-        _rmtree(tmp, spark)
+        write_sharded(merged, cache_path, "shard", "dynamic")
     finally:
-        for df in persisted:
-            df.unpersist()
+        new.unpersist()
 
 
 def completed_shards(spark: SparkSession, manifest_path: str) -> set:

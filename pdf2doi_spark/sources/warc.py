@@ -26,7 +26,7 @@ import gzip
 import io
 import zlib
 from datetime import datetime, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 
@@ -202,24 +202,33 @@ def read_warc(spark: SparkSession, path: str,
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def records(batches: Iterator[pd.DataFrame]) -> Iterator[list]:
         for b in batches:
-            urls, tss, bodies = [], [], []
+            out: list = []
             for payload in b["content"]:
                 try:
-                    for uri, ts, body in iter_warc_records(
+                    out.extend(iter_warc_records(
                         bytes(payload) if payload is not None else b""
-                    ):
-                        urls.append(uri)
-                        tss.append(ts)
-                        bodies.append(body)
+                    ))
                 except Exception:
                     continue  # malformed archive: skip, never fail the task
-            yield pd.DataFrame(
-                {"url": urls, "warc_ts": tss, "html": bodies}
-            )
+            yield out
 
-    parsed = raw.mapInPandas(
+    return _pages_from_records(raw, records)
+
+
+def _pages_from_records(source: DataFrame, records: Callable) -> DataFrame:
+    """Pages-shaped frame from ``records(batches)``, which yields one list
+    of ``(uri, ts, body)`` per Arrow batch of ``source``: the one record
+    fan-out of ``read_warc`` and ``read_warc_indexed``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for recs in records(batches):
+            if recs:  # an empty frame infers float64 ts: Arrow cast error
+                yield pd.DataFrame.from_records(
+                    recs, columns=["url", "warc_ts", "html"])
+
+    parsed = source.mapInPandas(
         run, schema="url string, warc_ts timestamp, html binary"
     )
     return parsed.select(
@@ -431,13 +440,13 @@ def read_warc_indexed(spark: SparkSession, index: DataFrame,
         .sortWithinPartitions("path", "start")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def records(batches: Iterator[pd.DataFrame]) -> Iterator[list]:
         import sys as _sys
 
         n_ranges = n_failed = 0
         first_err: Optional[Exception] = None
         for b in batches:
-            urls, tss, bodies = [], [], []
+            out: list = []
             for p, start, n in zip(b["path"], b["start"], b["n_bytes"]):
                 n_ranges += 1
                 try:
@@ -456,14 +465,8 @@ def read_warc_indexed(spark: SparkSession, index: DataFrame,
                     n_failed += 1
                     first_err = first_err or e
                     continue
-                for uri, ts, body in iter_warc_records(payload):
-                    urls.append(uri)
-                    tss.append(ts)
-                    bodies.append(body)
-            if urls:  # empty frames infer float64 ts -> Arrow cast error
-                yield pd.DataFrame(
-                    {"url": urls, "warc_ts": tss, "html": bodies}
-                )
+                out.extend(iter_warc_records(payload))
+            yield out
         if n_failed:
             print(
                 f"read_warc_indexed: skipped {n_failed}/{n_ranges} "
@@ -471,14 +474,7 @@ def read_warc_indexed(spark: SparkSession, index: DataFrame,
                 file=_sys.stderr,
             )
 
-    parsed = ranges.mapInPandas(
-        run, schema="url string, warc_ts timestamp, html binary"
-    )
-    return parsed.select(
-        "url", "warc_ts", "html",
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("lang"),
-    )
+    return _pages_from_records(ranges, records)
 
 
 def read_cdx_index(spark: SparkSession, path: str, *,

@@ -1466,6 +1466,86 @@ def test_merge_cache_reads_cache_once(spark, tmp_path, monkeypatch):
     assert got == {"u1": "10.1/b", "u2": "10.2/x"}
 
 
+def test_merge_cache_writes_once_in_place(spark, tmp_path, monkeypatch):
+    """A merge with changes into an existing cache collects its touched
+    shards once and writes once, straight to the cache path (no staging
+    copy beside it)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import pdf2doi_spark.sources.io as io
+
+    cache_path = str(tmp_path / "cache")
+    ddl = ("url string, identifier string, identifier_type string, "
+           "method string, tier int")
+    io.merge_cache(spark, cache_path, spark.createDataFrame(
+        [("u1", "10.1/a", "DOI", "document_text", 1)], ddl))
+    writes, collects = [], []
+    orig_parquet, orig_touched = DataFrameWriter.parquet, io.touched_shards
+
+    def recording(self, path, *a, **kw):
+        writes.append(path)
+        return orig_parquet(self, path, *a, **kw)
+
+    def counting(df, col):
+        collects.append(col)
+        return orig_touched(df, col)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    monkeypatch.setattr(io, "touched_shards", counting)
+    io.merge_cache(spark, cache_path, spark.createDataFrame(
+        [("u1", "10.1/b", "DOI", "filename", 0),
+         ("u2", "10.2/x", "DOI", "filename", 0)], ddl))
+    monkeypatch.undo()
+    assert writes == [cache_path], writes
+    assert collects == ["shard"], collects
+    got = {r["url"]: r["identifier"]
+           for r in spark.read.parquet(cache_path).collect()}
+    assert got == {"u1": "10.1/b", "u2": "10.2/x"}
+
+
+def test_merge_cache_mixed_batch_rewrites_only_changed_shard(spark, tmp_path):
+    """Re-merging a cache with one identifier changed rewrites exactly that
+    row's shard file; every other shard file keeps its name and mtime, and
+    the cache holds the last write per url."""
+    import glob
+
+    from pdf2doi_spark.sources.io import merge_cache
+
+    cache_path = str(tmp_path / "cache")
+    schema = ("url string, identifier string, identifier_type string, "
+              "method string, tier int")
+    rows = [(f"https://h{i}.org/p", f"10.1/{i}", "DOI", "document_text", 1)
+            for i in range(100)]
+    merge_cache(spark, cache_path, spark.createDataFrame(rows, schema),
+                n_shards=16)
+
+    def files_by_shard():
+        out = {}
+        for f in glob.glob(f"{cache_path}/shard=*/*.parquet"):
+            shard = f.split("shard=")[1].split("/")[0]
+            out.setdefault(shard, {})[f] = os.stat(f).st_mtime_ns
+        return out
+
+    before = files_by_shard()
+    assert len(before) > 4
+    changed_url = rows[7][0]
+    rows[7] = (changed_url, "10.1/changed", "DOI", "filename", 0)
+    merge_cache(spark, cache_path, spark.createDataFrame(rows, schema),
+                n_shards=16)
+    after = files_by_shard()
+
+    changed_shard = str(spark.createDataFrame([(changed_url,)], "url string")
+                        .select(F.pmod(F.xxhash64("url"), F.lit(16)))
+                        .first()[0])
+    assert after.keys() == before.keys()
+    assert after[changed_shard] != before[changed_shard]
+    assert {k: v for k, v in after.items() if k != changed_shard} == \
+        {k: v for k, v in before.items() if k != changed_shard}
+    got = {r["url"]: r["identifier"]
+           for r in spark.read.parquet(cache_path).collect()}
+    assert got == {u: ident for u, ident, *_ in rows}
+
+
 def test_run_resumable_manifest_one_row_per_shard_after_restart(
         spark, tmp_path, monkeypatch):
     """Each run appends manifest rows for its not-yet-done shards only, so

@@ -60,6 +60,20 @@ def test_read_warc_extracts_identifiers(spark, tmp_path):
     assert out.loc["https://example.org/c"]["method"] == "document_text"
 
 
+def test_read_warc_skips_archive_without_records(spark, tmp_path):
+    """An archive that parses to no response records must not fail the
+    job: alone it reads as zero rows, and beside a good archive it leaves
+    exactly the good archive's records."""
+    d = tmp_path / "warcs"
+    d.mkdir()
+    (d / "bad.warc").write_bytes(
+        b"WARC/1.0\r\nContent-Length: zzz\r\n\r\n" + b"x" * 64)
+    assert read_warc(spark, str(d)).count() == 0
+    (d / "good.warc").write_bytes(build_warc_bytes(RECORDS, "none"))
+    got = sorted(r["url"] for r in read_warc(spark, str(d)).collect())
+    assert got == sorted(u for u, _t, _b in RECORDS)
+
+
 # ----------------------------------------------------------- property-based
 
 from hypothesis import given, settings, strategies as st

@@ -25,28 +25,10 @@ import os
 import shutil
 import subprocess
 import sys
-import tempfile
 import time
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def build_zip() -> str:
-    pkg_dir = os.path.join(REPO, "pdf2doi_spark")
-    fd, zip_path = tempfile.mkstemp(prefix="soak_pkg_", suffix=".zip")
-    os.close(fd)
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.join(
-                        "pdf2doi_spark", os.path.relpath(full, pkg_dir)))
-    return zip_path
 
 
 def materialize(n_million: float, sf_dir: str) -> str:
@@ -122,7 +104,9 @@ def main() -> None:
 
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     art = materialize(args.pages, args.sf_dir)
-    zip_path = build_zip()
+    from pdf2doi_spark.session import zip_package
+
+    zip_path = zip_package("soak_pkg_")
     n_pages = int(args.pages * 1e6)
 
     runs, outs = [], []

@@ -4,7 +4,8 @@
 Reads one event-log file (plain or ``.zstd``) or a rolling
 ``eventlog_v2_*`` directory and prints one row per Spark job: start
 offset from the first job, duration, tasks run, executor CPU seconds
-(the tasks' ``Executor CPU Time``), shuffle bytes written, and what
+(the tasks' ``Executor CPU Time``), shuffle bytes written, output bytes
+written (the tasks' ``Output Metrics`` ``Bytes Written``), and what
 submitted it (the SQL execution description, else the job description,
 else the name of its last stage). The last line is the total.
 
@@ -48,7 +49,7 @@ def read_events(path: str):
 
 def job_rows(events) -> list:
     """One dict per job: id, start_ms, duration_ms, tasks, cpu_ns,
-    shuffle_bytes, description."""
+    shuffle_bytes, out_bytes, description."""
     jobs, stage_job, sql_desc = {}, {}, {}
     for e in events:
         kind = e["Event"]
@@ -66,7 +67,7 @@ def job_rows(events) -> list:
                                  "start_ms": e["Submission Time"],
                                  "end_ms": e["Submission Time"],
                                  "tasks": 0, "cpu_ns": 0, "shuffle_bytes": 0,
-                                 "description": desc}
+                                 "out_bytes": 0, "description": desc}
             # a reused shuffle stage is listed again by later jobs but its
             # tasks ran under the first one
             for sid in e.get("Stage IDs", []):
@@ -80,6 +81,9 @@ def job_rows(events) -> list:
                 jobs[job]["shuffle_bytes"] += (
                     m.get("Shuffle Write Metrics") or {}
                 ).get("Shuffle Bytes Written", 0)
+                jobs[job]["out_bytes"] += (
+                    m.get("Output Metrics") or {}
+                ).get("Bytes Written", 0)
         elif kind == "SparkListenerJobEnd" and e["Job ID"] in jobs:
             jobs[e["Job ID"]]["end_ms"] = e["Completion Time"]
     rows = sorted(jobs.values(), key=lambda j: j["id"])
@@ -91,18 +95,19 @@ def job_rows(events) -> list:
 def report(rows: list) -> str:
     t0 = rows[0]["start_ms"] if rows else 0
     lines = [f"{'job':>4} {'start_s':>8} {'dur_s':>7} {'tasks':>6} "
-             f"{'cpu_s':>7} {'shuffle_B':>11}  description"]
+             f"{'cpu_s':>7} {'shuffle_B':>11} {'out_B':>11}  description"]
     for j in rows:
         desc = " ".join(j["description"].split())[:90]
         lines.append(f"{j['id']:>4} {(j['start_ms'] - t0) / 1e3:8.2f} "
                      f"{j['duration_ms'] / 1e3:7.2f} {j['tasks']:>6} "
-                     f"{j['cpu_ns'] / 1e9:7.2f} {j['shuffle_bytes']:>11}  "
-                     f"{desc}")
+                     f"{j['cpu_ns'] / 1e9:7.2f} {j['shuffle_bytes']:>11} "
+                     f"{j['out_bytes']:>11}  {desc}")
     lines.append(f"total: {len(rows)} jobs, "
                  f"{sum(j['tasks'] for j in rows)} tasks, "
                  f"{sum(j['duration_ms'] for j in rows) / 1e3:.2f} s in jobs, "
                  f"{sum(j['cpu_ns'] for j in rows) / 1e9:.2f} executor cpu-s, "
                  f"{sum(j['shuffle_bytes'] for j in rows)} shuffle bytes "
+                 f"written, {sum(j['out_bytes'] for j in rows)} output bytes "
                  "written")
     return "\n".join(lines)
 
