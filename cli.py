@@ -136,9 +136,10 @@ def main() -> None:
                          for r in format_report(results).collect()]
                 merge_cache(spark, args.cache, results)
             finally:
-                # merge_cache materialized its own copy; the snapshot must
-                # not leak a full results table into /tmp — on failure
-                # either (collect/merge raise included)
+                # merge_cache wrote the cache from the snapshot, which
+                # nothing reads after it; the snapshot must not leak a full
+                # results table into /tmp — on failure either
+                # (collect/merge raise included)
                 shutil.rmtree(snap_dir, ignore_errors=True)
         else:
             lines = [r["report_line"] for r in format_report(results).collect()]

@@ -38,17 +38,18 @@ from pdf2doi_spark.operators.quality import norm_text as _norm_text
 
 
 def cap_buckets(bands: DataFrame, keys: List[str], max_bucket: int) -> DataFrame:
-    """Skew guard shared by every banded candidate join (minhash, simhash,
-    embedding LSH): drop rows whose bucket (the ``keys`` group) has more
-    than ``max_bucket`` members — a bucket of B docs contributes B² pair
-    rows to the self-join, so one hot bucket would dominate the job.
+    """Skew guard of the banded candidate joins (``band_pairs``'
+    ``max_bucket`` and the incremental index probe): drop rows whose
+    bucket (the ``keys`` group) has more than ``max_bucket`` members — a
+    bucket of B docs contributes B² pair rows to the self-join, so one hot
+    bucket would dominate the job.
 
     Implemented as a count window over the banded key, NOT a separate
     groupBy+join: the window's Exchange partitions on exactly the key the
-    self-join needs, so Catalyst reuses ONE exchange for both join sides
-    and the (expensive) signature computation runs once instead of three
-    or four times (guard aggregate + each join side) — pinned by
-    tests/test_plans.py::test_minhash_guard_reuses_exchange and
+    ``band_pairs`` self-join needs, so Catalyst reuses ONE exchange for
+    both join sides and the (expensive) signature computation runs once
+    instead of three or four times (guard aggregate + each join side) —
+    pinned by tests/test_plans.py::test_minhash_guard_reuses_exchange and
     ::test_simhash_guard_reuses_exchange.
 
     Extreme-skew tradeoff (deliberate): unlike a groupBy count (map-side
@@ -90,6 +91,31 @@ def bucket_histogram(bands: DataFrame, keys: List[str]) -> DataFrame:
     )
 
 
+def band_pairs(bands: DataFrame, keys: List[str], max_bucket: int | None = None,
+               id_col: str = "doc_id", carry: tuple = ()) -> DataFrame:
+    """THE banded candidate self-join of the near-dup family: every pair
+    ``a < b`` (on ``id_col``) that shares at least one band row of
+    ``keys`` → ``(doc_a, doc_b, <c>_a, <c>_b …, shared)``, where
+    ``shared`` counts the agreeing band rows and each ``carry`` column
+    comes back once per side. The join shuffles on ``keys`` only — never
+    all-pairs. ``max_bucket`` applies ``cap_buckets`` first, whose window
+    exchange both join sides then reuse."""
+    if max_bucket is not None:
+        bands = cap_buckets(bands, keys, max_bucket)
+    a, b = bands.alias("a"), bands.alias("b")
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return (
+        a.join(b, cond)
+        .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
+                 F.col(f"b.{id_col}").alias("doc_b"),
+                 *[F.col(f"{side}.{c}").alias(f"{c}_{side}")
+                   for c in carry for side in "ab"])
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
 def auto_blocklist(bands: DataFrame, keys: List[str], max_bucket: int,
                    max_keys: int = 10_000):
     """Mechanized form of the ``cap_buckets`` operating contract's
@@ -112,8 +138,7 @@ def auto_blocklist(bands: DataFrame, keys: List[str], max_bucket: int,
     boilerplate collapses before it ever signatures). Compose as::
 
         bands, blocked = auto_blocklist(bands, KEYS, max_bucket)
-        bands = cap_buckets(bands, KEYS, max_bucket)   # residual guard
-        ... self-join ...
+        pairs = band_pairs(bands, KEYS, max_bucket)   # residual guard + join
 
     The residual window guard still rides the ONE reused exchange (the
     anti-join is broadcast — it adds no shuffle and leaves the banded
@@ -281,22 +306,16 @@ def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
     construction, shared by the one-shot join and the persisted index
     (which bands stored signatures without re-shingling the text)."""
     rows_per_band = num_hashes // bands
-    band_cols = []
+    band_hashes = []
     for b in range(bands):
         parts = [F.col(f"mh{b * rows_per_band + r}")
                  for r in range(rows_per_band)]
-        band_hash = (
+        band_hashes.append(
             F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
             else F.xxhash64(*parts)
         )
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), band_hash.alias("band_hash"))
-        )
-    return (
-        sigs.select(F.col("doc_id"),
-                    F.explode(F.array(*band_cols)).alias("band"))
-        .select("doc_id", F.col("band.band_idx").alias("band_idx"),
-                F.col("band.band_hash").alias("band_hash"))
+    return sigs.select(
+        "doc_id", F.posexplode(F.array(*band_hashes)).alias("band_idx", "band_hash")
     )
 
 
@@ -343,26 +362,12 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
     recall on degenerate near-identical blobs (which exact dedup catches
     far more cheaply first) for a bounded join; the cap is NOT silent —
     audit what it would drop with ``minhash_bucket_profile`` before
-    choosing it. The size pre-agg shuffles on the same banded key the join
-    does, so it adds no new exchange pattern.
+    choosing it. The self-join and the cap are ``band_pairs``.
     """
-    b = minhash_bands(df, text_col, num_hashes, bands, hash_fn)
-    if max_bucket is not None:
-        b = cap_buckets(b, ["band_idx", "band_hash"], max_bucket)
-    left = b.alias("l")
-    right = b.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    return band_pairs(
+        minhash_bands(df, text_col, num_hashes, bands, hash_fn),
+        ["band_idx", "band_hash"], max_bucket,
+    ).select("doc_a", "doc_b")
 
 
 def jaccard_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -475,23 +480,13 @@ _SIMHASH_BANDS = 4  # 4 × 16-bit chunks
 def _simhash_bands(s: DataFrame) -> DataFrame:
     """(doc_id, simhash) → (doc_id, simhash, band_idx, chunk): the 64-bit
     fingerprint split into four 16-bit pigeonhole chunks."""
+    chunks = [
+        F.shiftrightunsigned(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF))
+        for i in range(_SIMHASH_BANDS)
+    ]
     return s.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    (
-                        F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                    ).alias("chunk"),
-                )
-                for i in range(_SIMHASH_BANDS)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "simhash", F.col("b.band_idx").alias("band_idx"),
-             F.col("b.chunk").alias("chunk"))
+        "doc_id", "simhash", F.posexplode(F.array(*chunks)).alias("band_idx", "chunk")
+    )
 
 
 def simhash_bucket_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -526,20 +521,13 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     operator, and audit the cap against ``simhash_bucket_profile``. A pair
     sharing one capped and one surviving chunk is still found via the
     surviving band."""
-    bands = _simhash_bands(simhash(df, text_col))
-    if max_bucket is not None:
-        bands = cap_buckets(bands, ["band_idx", "chunk"], max_bucket)
-    a, b = bands.alias("a"), bands.alias("b")
+    pairs = band_pairs(_simhash_bands(simhash(df, text_col)),
+                       ["band_idx", "chunk"], max_bucket, carry=("simhash",))
     return (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.chunk") == F.col("b.chunk"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+        pairs.select(
+            "doc_a", "doc_b",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
         .orderBy("doc_a", "doc_b")
     )
@@ -751,14 +739,8 @@ def sketch_overlap_pairs(df: DataFrame, text_col: str = "text",
         winnowing_sketch(df, text_col)
         .select("doc_id", F.explode("sketch").alias("h"))
     )
-    a, b = posts.alias("a"), posts.alias("b")
     return (
-        a.join(b, (F.col("a.h") == F.col("b.h"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
+        band_pairs(posts, ["h"])
         .filter(F.col("shared") >= min_shared)
         .orderBy("doc_a", "doc_b")
     )

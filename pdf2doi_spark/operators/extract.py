@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdf2doi_spark.core.kernel import extract_one
-from pdf2doi_spark.core.webmeta import extract_main_content, extract_meta, page_text_units
+from pdf2doi_spark.core.webmeta import extract_main_content, extract_meta
 
 RESULT_SCHEMA = (
     "url string, identifier string, identifier_type string, "

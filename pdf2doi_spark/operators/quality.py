@@ -101,13 +101,20 @@ def quality_score_cols(text_col: Column, with_n_tokens: bool = True) -> list:
     ratio, stopword ratio — the standard cheap pre-training filters.
     ``with_n_tokens=False`` drops
     the ``n_tokens`` column for callers (the suite) that already project it
-    via ``token_count_cols`` — same expression, so nothing is lost."""
+    via ``token_count_cols`` — same expression, so nothing is lost.
+
+    The score feeds filters (``corpus_pipeline``'s quality gate), and a
+    higher-order-function expression inside a Filter evaluates ~60x slower
+    than in a projection on this build (see dedup.has_min_words) — so
+    every component is a codegen-able scalar form: stopword hits are a
+    whole-token ``regexp_count`` over the normalized text (provably equal
+    to counting the matching tokens)."""
     t = text_col
-    toks = tokens(F.lower(t))
-    n_tok = F.size(toks)
+    n_tok = F.size(tokens(F.lower(t)))
     n_chars = F.length(t)
     punct = F.length(t) - F.length(F.regexp_replace(t, PUNCT_CLASS, ""))
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin(*EN_MARKERS)))
+    stop_re = "(?:^| )(?:" + "|".join(EN_MARKERS) + ")(?= |$)"
+    stop_hits = F.regexp_count(norm_text(t), F.lit(stop_re))
     mean_wl = F.when(n_tok > 0, (F.length(F.regexp_replace(F.trim(t), r"\s+", "")) / n_tok)).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_tok > 0, stop_hits / n_tok).otherwise(F.lit(0.0))
     punct_ratio = F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0))

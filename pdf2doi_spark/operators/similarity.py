@@ -102,20 +102,14 @@ def banded_lsh_signatures(df: DataFrame, n_bands: int, planes_per_band: int,
     plane sequence). The downstream candidate join shuffles on
     (band_idx, sig) only — never all-pairs."""
     all_planes = _plane_signs(n_bands * planes_per_band, dim)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            lsh_signature_col(
-                F.col(vec_col),
-                all_planes[b * planes_per_band:(b + 1) * planes_per_band],
-            ).alias("sig"),
+    sigs = [
+        lsh_signature_col(
+            F.col(vec_col),
+            all_planes[b * planes_per_band:(b + 1) * planes_per_band],
         )
         for b in range(n_bands)
     ]
-    return df.select(
-        "*", F.explode(F.array(*band_structs)).alias("_b")
-    ).select(*df.columns, F.col("_b.band_idx").alias("band_idx"),
-             F.col("_b.sig").alias("sig"))
+    return df.select("*", F.posexplode(F.array(*sigs)).alias("band_idx", "sig"))
 
 
 def lsh_bucket_profile(df: DataFrame, n_bands: int, planes_per_band: int,

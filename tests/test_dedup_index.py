@@ -338,6 +338,61 @@ def test_incremental_index_xxhash64_lane(spark, sf_dir, tmp_path):
     assert [(r.dup_of, r.source) for r in re_probe] == [(900003, "index")]
 
 
+# _bands_from_sigs rows of _BAND_TEXTS (num_hashes=12, bands=4) — the
+# persisted postings layout. An index built by one version is probed and
+# merged by the next, so these values must never change.
+_BAND_TEXTS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "Lorem ipsum dolor sit amet, consectetur adipiscing elit"),
+    (3, "near duplicate detection with minhash and locality sensitive hashing"),
+]
+_GOLDEN_BANDS = {
+    "md5": [
+        (1, 0, "814e7ffacc834facbb2320a1a3ea196a"),
+        (1, 1, "0fdde7588b41c68365dd20d5193745c4"),
+        (1, 2, "57645a6e03fbfa44398e1bf5501da7ca"),
+        (1, 3, "b52e2b4795c348f0154e7a3b3027aaa9"),
+        (2, 0, "fcd56897fbc2708ba86a8386d26b2fdb"),
+        (2, 1, "a6727289a6ffa98fcc23faa1e34bcdf0"),
+        (2, 2, "8395bec35eb2793d7890653aa39ae6d7"),
+        (2, 3, "ce71ca94a5a9f64191581fa9755f9d34"),
+        (3, 0, "1d9c05ff821a3746a24a97b8d67722dd"),
+        (3, 1, "8f8758aec5a831845d7d6fb0f98d7060"),
+        (3, 2, "03d5a7e0e0a1781f0fd7c4e37685c943"),
+        (3, 3, "0094bd1feabcced314b14bfacdf5390c"),
+    ],
+    "xxhash64": [
+        (1, 0, -8295139899317001179),
+        (1, 1, 3923477495120433460),
+        (1, 2, 8195042665393700896),
+        (1, 3, -8962655512483533407),
+        (2, 0, -2381650199838786501),
+        (2, 1, 4078793570079037625),
+        (2, 2, 879325359265874183),
+        (2, 3, -948153551045554394),
+        (3, 0, 3159439667076722747),
+        (3, 1, 3284400184757133271),
+        (3, 2, 5951756507331662781),
+        (3, 3, 3006695967589017208),
+    ],
+}
+
+
+@pytest.mark.parametrize("hash_fn,key_type", [("md5", "string"),
+                                              ("xxhash64", "bigint")])
+def test_band_layout_is_pinned(spark, hash_fn, key_type):
+    from pdf2doi_spark.operators.dedup import _bands_from_sigs, _sig_df
+
+    docs = spark.createDataFrame(_BAND_TEXTS, "doc_id long, text string")
+    bands = _bands_from_sigs(_sig_df(docs, "text", NUM_HASHES, hash_fn),
+                             NUM_HASHES, BANDS, hash_fn)
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in bands.schema.fields] == [
+        ("doc_id", "bigint", True), ("band_idx", "int", False),
+        ("band_hash", key_type, False)]
+    assert sorted(map(tuple, bands.collect())) == _GOLDEN_BANDS[hash_fn]
+
+
 def test_minhash_index_profile(spark, sf_dir, tmp_path):
     """The persisted-index skew audit equals the one-shot bucket histogram
     over the same docs (same banding, same schema)."""

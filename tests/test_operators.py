@@ -873,6 +873,42 @@ def test_minhash_bucket_cap_drops_only_giant_buckets(spark):
     assert got == {(100, 101)}  # boilerplate pairs gone, real pair kept
 
 
+def test_band_pairs_contract(spark):
+    """band_pairs on a hand-built band table: one row per pair a < b with
+    the count of agreeing band rows, the over-cap key's pairs dropped and
+    nothing else, carried columns back once per side."""
+    from pdf2doi_spark.operators.dedup import band_pairs
+
+    rows = [
+        # 1 and 2 agree on two bands, 1 and 3 on one
+        (1, 0, "x", 10), (1, 1, "y", 10), (2, 0, "x", 20), (2, 1, "y", 20),
+        (3, 1, "y", 30), (3, 2, "z", 30),
+        # band 2 key "hot" holds four docs
+        (4, 2, "hot", 40), (5, 2, "hot", 50), (6, 2, "hot", 60),
+        (7, 2, "hot", 70), (7, 3, "w", 70), (6, 3, "w", 60),
+    ]
+    bands = spark.createDataFrame(
+        rows, "doc_id long, band_idx int, key string, fp long")
+    keys = ["band_idx", "key"]
+
+    got = {(r.doc_a, r.doc_b): r.shared
+           for r in band_pairs(bands, keys).collect()}
+    assert got[(1, 2)] == 2
+    assert all(a < b for a, b in got)
+    hot = {(a, b) for a in (4, 5, 6, 7) for b in (4, 5, 6, 7) if a < b}
+    assert set(got) == {(1, 2), (1, 3), (2, 3)} | hot
+
+    capped = {(r.doc_a, r.doc_b): r.shared
+              for r in band_pairs(bands, keys, max_bucket=3).collect()}
+    # only the "hot" key's pairs go; 6-7 survives through band 3
+    assert capped == {(1, 2): 2, (1, 3): 1, (2, 3): 1, (6, 7): 1}
+
+    carried = band_pairs(bands, keys, carry=("fp",))
+    assert carried.columns == ["doc_a", "doc_b", "fp_a", "fp_b", "shared"]
+    assert all(r.fp_a == 10 * r.doc_a and r.fp_b == 10 * r.doc_b
+               for r in carried.collect())
+
+
 def test_merge_cache_empty_batch_no_prior_cache(spark, tmp_path):
     """All-miss first run: no crash, no schema-less parquet dir, nothing
     written."""

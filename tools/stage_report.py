@@ -3,8 +3,9 @@
 
 Reads one event-log file (plain or ``.zstd``) or a rolling
 ``eventlog_v2_*`` directory and prints one row per Spark job: start
-offset from the first job, duration, tasks run, executor CPU seconds
-(the tasks' ``Executor CPU Time``), shuffle bytes written, output bytes
+offset from the first job, duration, tasks run, executor run seconds
+(the tasks' ``Executor Run Time``), executor CPU seconds (the tasks'
+``Executor CPU Time``), shuffle bytes written, output bytes
 written (the tasks' ``Output Metrics`` ``Bytes Written``), and what
 submitted it (the SQL execution description, else the job description,
 else the name of its last stage). The last line is the total.
@@ -48,7 +49,7 @@ def read_events(path: str):
 
 
 def job_rows(events) -> list:
-    """One dict per job: id, start_ms, duration_ms, tasks, cpu_ns,
+    """One dict per job: id, start_ms, duration_ms, tasks, run_ms, cpu_ns,
     shuffle_bytes, out_bytes, description."""
     jobs, stage_job, sql_desc = {}, {}, {}
     for e in events:
@@ -66,8 +67,9 @@ def job_rows(events) -> list:
             jobs[e["Job ID"]] = {"id": e["Job ID"],
                                  "start_ms": e["Submission Time"],
                                  "end_ms": e["Submission Time"],
-                                 "tasks": 0, "cpu_ns": 0, "shuffle_bytes": 0,
-                                 "out_bytes": 0, "description": desc}
+                                 "tasks": 0, "run_ms": 0, "cpu_ns": 0,
+                                 "shuffle_bytes": 0, "out_bytes": 0,
+                                 "description": desc}
             # a reused shuffle stage is listed again by later jobs but its
             # tasks ran under the first one
             for sid in e.get("Stage IDs", []):
@@ -77,6 +79,7 @@ def job_rows(events) -> list:
             if job is not None:
                 m = e.get("Task Metrics") or {}
                 jobs[job]["tasks"] += 1
+                jobs[job]["run_ms"] += m.get("Executor Run Time", 0)
                 jobs[job]["cpu_ns"] += m.get("Executor CPU Time", 0)
                 jobs[job]["shuffle_bytes"] += (
                     m.get("Shuffle Write Metrics") or {}
@@ -95,16 +98,19 @@ def job_rows(events) -> list:
 def report(rows: list) -> str:
     t0 = rows[0]["start_ms"] if rows else 0
     lines = [f"{'job':>4} {'start_s':>8} {'dur_s':>7} {'tasks':>6} "
-             f"{'cpu_s':>7} {'shuffle_B':>11} {'out_B':>11}  description"]
+             f"{'run_s':>7} {'cpu_s':>7} {'shuffle_B':>11} {'out_B':>11}  "
+             "description"]
     for j in rows:
         desc = " ".join(j["description"].split())[:90]
         lines.append(f"{j['id']:>4} {(j['start_ms'] - t0) / 1e3:8.2f} "
                      f"{j['duration_ms'] / 1e3:7.2f} {j['tasks']:>6} "
+                     f"{j['run_ms'] / 1e3:7.2f} "
                      f"{j['cpu_ns'] / 1e9:7.2f} {j['shuffle_bytes']:>11} "
                      f"{j['out_bytes']:>11}  {desc}")
     lines.append(f"total: {len(rows)} jobs, "
                  f"{sum(j['tasks'] for j in rows)} tasks, "
                  f"{sum(j['duration_ms'] for j in rows) / 1e3:.2f} s in jobs, "
+                 f"{sum(j['run_ms'] for j in rows) / 1e3:.2f} executor run-s, "
                  f"{sum(j['cpu_ns'] for j in rows) / 1e9:.2f} executor cpu-s, "
                  f"{sum(j['shuffle_bytes'] for j in rows)} shuffle bytes "
                  f"written, {sum(j['out_bytes'] for j in rows)} output bytes "
