@@ -266,7 +266,7 @@ def main() -> None:
         flag_dt, n_docs, _flag_runs = _timed(_flagship(spark, pages_path), runs=3)
         timings = {"extract_cascade": round(flag_dt, 3), "pages_synth": synth_sec}
         # One counted pass with in-kernel accumulators: live observability
-        # (docs seen / prefilter candidates / hits) straight from the
+        # (docs seen / page-gate candidates / hits) straight from the
         # canonical bench artifact, no extra shuffle.
         from pdf2doi_spark.operators.extract import (
             ExtractionCounters, extract_identifiers,
@@ -280,10 +280,11 @@ def main() -> None:
 
         # Miss-heavy regime: the synthetic table is hit-heavy by design
         # (14/16 categories carry identifiers), but real crawls run 1-5%
-        # hits — the regime the vectorized prefilter exists for. Time the
-        # miss-only categories (14/15) separately so both regimes are on
-        # record. ids-only (with_text=False) isolates the prefilter's
-        # effect from main-content extraction.
+        # hits — the regime the kernel's page gate
+        # (core.kernel.may_hold_identifier) exists for. Time the miss-only
+        # categories (14/15) separately so both regimes are on record.
+        # ids-only (with_text=False) isolates the gate's effect from
+        # main-content extraction (rejected rows are never decoded).
         from pyspark.sql import functions as _F
 
         miss_path = pages_path + "_miss"

@@ -32,18 +32,20 @@ north-rule invariant of byte-identical output per url.
 from __future__ import annotations
 
 from itertools import accumulate
-from typing import List, Optional, Sequence, Tuple
+from typing import Iterable, List, Optional, Sequence, Tuple
 from urllib.parse import unquote, urlsplit
 
 from pdf2doi_spark.core.patterns import (
     ARXIV2007_RE,
     ARXIV_GATE_RE as _ARXIV_GATE_RE,
+    ARXIV_GATE_RE_B as _ARXIV_GATE_RE_B,
     extract_arxivID_from_text,
     extract_doi_from_text,
     doi_regexp,
     arxiv_regexp,
     standardise_doi,
 )
+from pdf2doi_spark.core.webmeta import ascii_transparent
 
 # Metadata keys that are checked first when scanning document info / meta
 # tags (reference main.py:156 — '/doi', '/pdf2doi_identifier'; web analogue
@@ -171,22 +173,51 @@ def filename_candidates(url: Optional[str]) -> List[str]:
     return list(reversed(prefixes))
 
 
-def find_identifier_in_filename(url: Optional[str]):
-    """Stage 2 (``filename``): reference finders.py:735-761.
+def _filename_gate(url: Optional[str]) -> bool:
+    """False only when no filename candidate of ``url`` can validate.
 
-    Fast path: every filename candidate is a substring of the
-    percent-decoded url (valid ``%XX`` tokens never contain ``/``, so the
-    basename split cannot bisect one — decoding the whole url yields a
-    superstring of the decoded basename). If the decoded url lacks both the
-    ``10.`` DOI marker and any arXiv shape, no candidate can ever validate,
-    and the urlsplit/unquote/accumulate/tier-scan work is skipped outright.
+    Every filename candidate is a substring of the percent-decoded url
+    (valid ``%XX`` tokens never contain ``/``, so the basename split cannot
+    bisect one — decoding the whole url yields a superstring of the decoded
+    basename). If the decoded url lacks both the ``10.`` DOI marker and any
+    arXiv shape, the urlsplit/unquote/accumulate/tier-scan work of the
+    filename stage can be skipped outright.
     """
     if not url:
-        return None, None, None
+        return False
     decoded = unquote(url) if "%" in url else url
-    if "10." not in decoded and _ARXIV_GATE_RE.search(decoded) is None:
+    return "10." in decoded or _ARXIV_GATE_RE.search(decoded) is not None
+
+
+def find_identifier_in_filename(url: Optional[str]):
+    """Stage 2 (``filename``): reference finders.py:735-761."""
+    if not _filename_gate(url):
         return None, None, None
     return find_identifier_in_text(filename_candidates(url))
+
+
+def may_hold_identifier(url: Optional[str], text: Optional[str], html) -> bool:
+    """False only when no stage of ``extract_one`` can find an identifier
+    on the page ``(url, text, html)``; the one statement of the page gate.
+
+    Proved from the tier bank: every DOI tier needs the literal ``10.``,
+    every arXiv tier an ``ARXIV_GATE_RE`` shape. The url feeds only the
+    filename stage (its own gate); ``text`` is a text unit; metadata and
+    the main-content body both come from the decoded html, so the raw html
+    bytes are scanned for the same markers — sound whenever the page's
+    codec is ASCII-transparent, and a page whose codec is not is always a
+    candidate. The html is never decoded here. Over-matching costs time;
+    under-matching would silently drop hits.
+    """
+    if text and ("10." in text or _ARXIV_GATE_RE.search(text) is not None):
+        return True
+    if _filename_gate(url):
+        return True
+    if not html:
+        return False
+    if b"10." in html or _ARXIV_GATE_RE_B.search(html) is not None:
+        return True
+    return not ascii_transparent(html)
 
 
 def rewrite_arxiv_to_doi(identifier, desc, method):
@@ -200,7 +231,7 @@ def rewrite_arxiv_to_doi(identifier, desc, method):
 def extract_one(
     url: Optional[str],
     meta: Optional[Sequence[Tuple[str, str]]],
-    text_units: Optional[Sequence[str]],
+    text_units: Optional[Iterable[str]],
     cached_identifier: Optional[str] = None,
     replace_arxiv: bool = True,
     cached_identifier_type: Optional[str] = None,

@@ -116,11 +116,13 @@ ARXIV2007_RE = re.compile(arxiv2007_pattern, re.I)
 
 # NECESSARY condition for ANY arXiv tier to match a text: tier 0 carries
 # the literal 'arxiv', tiers 1/2 a 4-digit+dot+digit run. Single source of
-# truth for every fast-path gate (kernel stage gates, the Spark batch
-# prefilter) — if the tier bank above ever changes shape, update THIS
+# truth for every fast-path gate (the kernel's per-unit and per-stage gates
+# and its page gate ``kernel.may_hold_identifier``, whose byte form scans
+# raw html) — if the tier bank above ever changes shape, update THIS
 # pattern in the same commit; an under-matching gate silently drops hits.
 ARXIV_GATE_PATTERN = r"(?i)\d{4}\.\d|arxiv"
 ARXIV_GATE_RE = re.compile(ARXIV_GATE_PATTERN)
+ARXIV_GATE_RE_B = re.compile(ARXIV_GATE_PATTERN.encode("ascii"))
 
 
 def extract_doi_from_text(text: str, version: int = 0) -> list:

@@ -23,8 +23,10 @@ O(len(html)) per document, bounded per-row state (safe for Arrow batches).
 """
 from __future__ import annotations
 
+import functools
 import re
-from typing import List, Optional, Tuple
+import warnings
+from typing import Iterator, List, Optional, Tuple
 
 # Tags whose entire contents are never user-visible content.
 _STRIP_TAGS = ("script", "style", "noscript", "template", "svg", "head")
@@ -145,20 +147,13 @@ _BOMS = (
 )
 
 
-def _decode(html) -> str:
-    """Bytes → text: BOM first (authoritative; UTF-16/32 pages are
-    NUL-interleaved so the meta sniff could never see them), then the
-    declared charset, then UTF-8 with replacement. A wrong, unknown, or
-    non-text codec declaration can never raise — decoding falls through to
-    the lossy UTF-8 path (one bad row must never fail a task)."""
-    if html is None:
-        return ""
-    if not isinstance(html, (bytes, bytearray)):
-        return html
-    raw = bytes(html)
+def _codec(raw: bytes) -> Tuple[int, str]:
+    """``(BOM length, codec)`` that ``_decode`` reads ``raw`` with: BOM first
+    (authoritative; UTF-16/32 pages are NUL-interleaved so the meta sniff
+    could never see them), then the declared charset, then UTF-8."""
     for bom, codec in _BOMS:
         if raw.startswith(bom):
-            return raw[len(bom):].decode(codec, errors="replace")
+            return len(bom), codec
     cs = sniff_charset(raw)
     if cs:
         # WHATWG: a meta-declared UTF-16/32 is a lie by construction — the
@@ -178,14 +173,53 @@ def _decode(html) -> str:
         if canonical.replace("_", "-").startswith(("utf-16", "utf-32")) or \
                 cs in ("unicode",):
             cs = None
-    if cs and cs not in ("utf-8", "utf8"):
+    return 0, cs or "utf-8"
+
+
+def _decode(html) -> str:
+    """Bytes → text with the codec ``_codec`` picks. A wrong, unknown, or
+    non-text codec declaration can never raise — decoding falls through to
+    the lossy UTF-8 path (one bad row must never fail a task)."""
+    if html is None:
+        return ""
+    if not isinstance(html, (bytes, bytearray)):
+        return html
+    raw = bytes(html)
+    skip, cs = _codec(raw)
+    if cs not in ("utf-8", "utf8"):
         try:
-            return raw.decode(cs, errors="replace")
+            return raw[skip:].decode(cs, errors="replace")
         except (LookupError, ValueError):
             # LookupError: unknown codec name; ValueError/UnicodeError:
             # non-text codecs (idna, undefined) that reject errors='replace'
             pass
-    return raw.decode("utf-8", errors="replace")
+    return raw[skip:].decode("utf-8", errors="replace")
+
+
+# Decode-side transparency probe: every ASCII byte, then the escape forms
+# that make ASCII out of other bytes — utf-7 base64 ('+ADE-' is '1'),
+# unicode_escape/raw_unicode_escape ('\x31', '\u0031') and an ISO-2022
+# shift sequence, which decodes to nothing and so joins '1' and '0.'.
+_ASCII_PROBE = bytes(range(128)) + b" +ADE- \\x31 \\u0031 1\x1b(B0."
+
+
+@functools.lru_cache(maxsize=256)  # declared names come from the crawl
+def _codec_is_transparent(codec: str) -> bool:
+    try:
+        with warnings.catch_warnings():  # unicode_escape warns on '\]'
+            warnings.simplefilter("ignore", DeprecationWarning)
+            return _ASCII_PROBE.decode(codec, "replace") == _ASCII_PROBE.decode("ascii")
+    except (LookupError, ValueError):
+        return True  # _decode falls back to UTF-8 for these
+
+
+def ascii_transparent(raw: bytes) -> bool:
+    """True when ``_decode(raw)`` reads every ASCII byte as itself and makes
+    no ASCII text out of anything else — then an ASCII marker missing from
+    the raw bytes is missing from the decoded text too. False for UTF-16/32
+    BOM pages (NUL-interleaved), EBCDIC code pages (which re-map the digits)
+    and the escape-decoding codecs the probe above names."""
+    return _codec_is_transparent(_codec(raw)[1])
 
 
 def _unescape_basic(s: str) -> str:
@@ -292,8 +326,12 @@ def extract_main_content(html) -> str:
         return ""
 
 
-def page_text_units(html, pre_extracted_text: Optional[str]) -> List[str]:
-    """Ordered text units for the ``document_text`` stage of one page.
+def page_text_units(html, pre_extracted_text: Optional[str],
+                    body: Optional[str] = None) -> Iterator[str]:
+    """Ordered text units for the ``document_text`` stage of one page,
+    yielded lazily: the main-content body is only computed when the text
+    unit yields no validated hit, and a ``body`` the caller already holds
+    is reused, not recomputed.
 
     Mirrors the reference's ordered-extractor design (``__init__.py:18-19``:
     PyPdf before pdfminer — extractor order is correctness-affecting): the
@@ -301,10 +339,9 @@ def page_text_units(html, pre_extracted_text: Optional[str]) -> List[str]:
     derived from ``html`` plays extractor #2. First unit with a validated
     hit wins.
     """
-    units: List[str] = []
     if pre_extracted_text:
-        units.append(pre_extracted_text)
-    body = extract_main_content(html)
+        yield pre_extracted_text
+    if body is None:
+        body = extract_main_content(html)
     if body:
-        units.append(body)
-    return units
+        yield body

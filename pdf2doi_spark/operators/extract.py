@@ -10,13 +10,16 @@ Physical design (SURVEY.md §3/§4):
   it. Stage gating ("don't run stage N for resolved rows") is a plain
   Python ``if`` inside the batch loop, which Catalyst could never do for us
   across UDFs.
-* **Vectorized prefilter.** Before any per-row regex-tier work, a pandas
-  ``str.contains`` pass over the batch marks rows that cannot possibly hold
-  an identifier (no ``10.`` and no ``arxiv`` anywhere in url/text/html);
-  those rows skip the cascade entirely. On realistic crawls the vast
-  majority of pages are misses, so the kernel cost concentrates on the few
-  candidate rows. Main-content extraction still runs for every row (the
-  output contract includes ``extracted_text`` per url).
+* **Page gate before decode.** Each row first passes
+  ``core.kernel.may_hold_identifier`` over its url, text and RAW html
+  bytes; a row it rejects provably holds no identifier, skips the cascade
+  and, when ``extracted_text`` is not requested, is never decoded. On
+  realistic crawls the vast majority of pages are misses, so the kernel
+  cost concentrates on the few candidate rows. Main-content extraction
+  still runs for every row when ``with_text`` (the output contract
+  includes ``extracted_text`` per url). The batch is one plain loop over
+  Python lists: a pandas ``str.contains`` mask calls Python once per
+  element too, so it would save no time.
 * **Column pruning friendly.** The kernel consumes exactly
   ``url, html, text`` (+ optional ``cached_identifier``); callers select
   those columns first so the parquet/Iceberg scan prunes everything else
@@ -33,203 +36,58 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from pdf2doi_spark.core.kernel import extract_one
-from pdf2doi_spark.core.webmeta import extract_main_content, extract_meta
+from pdf2doi_spark.core.kernel import extract_one, may_hold_identifier
+from pdf2doi_spark.core.webmeta import (
+    _decode, extract_main_content, extract_meta, page_text_units,
+)
 
 RESULT_SCHEMA = (
     "url string, identifier string, identifier_type string, "
     "method string, tier int, validation_info string, extracted_text string"
 )
-
-# Candidate prefilter: a NECESSARY condition for any kernel hit, proved
-# from the tier bank — every DOI tier requires '10.' + 4 digits; arXiv
-# tier 0 requires the literal 'arxiv' (any case); arXiv tiers 1/2 require
-# a bare 'NNNN.d' shape. A row matching none of these can never produce an
-# identifier, so the cascade is skipped wholesale. (Over-matching is fine;
-# under-matching would silently drop hits — test_prefilter_necessity pins
-# the tier-1 arXiv case that a naive '10.|arxiv' filter misses.)
-import re as _re
-
-from pdf2doi_spark.core.patterns import ARXIV_GATE_PATTERN, ARXIV_GATE_RE
-
-# Stage 1: literal '10.' (C-speed memmem scan) — necessary for every DOI tier.
-# Stage 2 (only on rows stage 1 left unmarked): the arXiv shapes.
-# Byte variants run on the RAW html payload so non-candidate rows are never
-# even UTF-8-decoded (decode + meta scan is the kernel's dominant per-row
-# cost; real crawls are miss-heavy). The gate pattern has ONE definition
-# (core/patterns.py) shared with the kernel's stage gates, so prefilter and
-# kernel can never drift apart.
-_DOI_MARK = "10."
-_ARXIV_RE = ARXIV_GATE_RE
-_DOI_MARK_B = b"10."
-_ARXIV_RE_B = _re.compile(ARXIV_GATE_PATTERN.encode("ascii"))
-
-_ASCII_SUPERSET_CACHE: dict = {}
-_ASCII_PROBE = "10.aZ/: arXiv"
+_RESULT_COLUMNS = tuple(f.split()[0] for f in RESULT_SCHEMA.split(", "))
 
 
-def _is_ascii_superset(charset: str) -> bool:
-    """True iff encoding marker-relevant ASCII text under ``charset``
-    yields the identical ASCII bytes (so the raw-byte scan remains a sound
-    necessary condition). Unknown codecs count as supersets — the decoder
-    falls back to UTF-8 for them anyway."""
-    cached = _ASCII_SUPERSET_CACHE.get(charset)
-    if cached is None:
-        try:
-            cached = _ASCII_PROBE.encode(charset) == _ASCII_PROBE.encode("ascii")
-        except (LookupError, ValueError):
-            cached = True
-        _ASCII_SUPERSET_CACHE[charset] = cached
-    return cached
+def _column(batch: pd.DataFrame, name: str) -> list:
+    return batch[name].tolist() if name in batch.columns else [None] * len(batch)
 
 
 def _batch_extract(batch: pd.DataFrame, replace_arxiv: bool,
                    with_text: bool, counters=None,
                    passthrough=()) -> pd.DataFrame:
-    n = len(batch)
-    url = batch["url"]
-    html = batch["html"]
-    text = batch["text"]
-    cached = batch["cached_identifier"] if "cached_identifier" in batch.columns else None
-    cached_type = (
-        batch["cached_identifier_type"]
-        if "cached_identifier_type" in batch.columns else None
-    )
-
-    # ---- vectorized prefilter (JVM rows -> skip regex work wholesale) ----
-    # Candidate rows are decided WITHOUT decoding html: literal '10.' scans
-    # first (caseless, necessary for every DOI tier), then the arXiv shape
-    # regex only on still-unmarked rows. html stays raw bytes; only
-    # candidate rows (or all rows when extracted_text is requested) are
-    # UTF-8-decoded afterwards.
-    def _has_mark_bytes(b) -> bool:
-        if b is None:
-            return False
-        bb = bytes(b)
-        # UTF-16/32 payloads are NUL-interleaved: the ASCII byte scan can
-        # never see '10.' in them even though the decoder extracts it, so
-        # BOM'd rows are candidates unconditionally (rare on real crawls;
-        # correctness beats the skipped prefilter).
-        if bb[:2] in (b"\xff\xfe", b"\xfe\xff") or bb[:4] in (
-            b"\xff\xfe\x00\x00", b"\x00\x00\xfe\xff"
-        ):
-            return True
-        if _DOI_MARK_B in bb or _ARXIV_RE_B.search(bb) is not None:
-            return True
-        # Declared charsets are USUALLY ASCII supersets (the declaration
-        # itself is read as ASCII bytes, and declared utf-16/32 is remapped
-        # to utf-8 per WHATWG — see webmeta._decode), but not always:
-        # EBCDIC code pages (cp500/cp037/...) and utf-7 re-map the digits
-        # themselves, so the decoder could surface '10.' from bytes this
-        # scan cannot see. Probe the sniffed codec once (cached) and treat
-        # any non-ASCII-superset row as an unconditional candidate.
-        from pdf2doi_spark.core.webmeta import sniff_charset
-
-        cs = sniff_charset(bb)
-        return cs is not None and not _is_ascii_superset(cs)
-
-    cols = (url.fillna(""), text.fillna(""))
-    candidate = None
-    for col in cols:
-        c = col.str.contains(_DOI_MARK, regex=False)
-        candidate = c if candidate is None else (candidate | c)
-    todo = ~candidate
-    if todo.any():  # arXiv shapes in url/text for rows with no '10.'
-        for col in cols:
-            candidate.loc[todo] = col[todo].str.contains(_ARXIV_RE, regex=True)
-            todo = ~candidate
-            if not todo.any():
-                break
-    if todo.any():
-        # the kernel's filename stage percent-DECODES the url before its
-        # regex pass (core/kernel.py filename_candidates), so a marker can
-        # hide inside an escape ('10%2E...'); decode-and-rescan the few
-        # still-unmarked urls that contain '%' — without this the prefilter
-        # is not a necessary condition and batch output drifts from the
-        # per-row kernel oracle
-        from urllib.parse import unquote
-
-        esc = todo & url.fillna("").str.contains("%", regex=False)
-        if esc.any():
-            dec = url[esc].map(unquote)
-            candidate.loc[esc] = (
-                dec.str.contains(_DOI_MARK, regex=False)
-                | dec.str.contains(_ARXIV_RE, regex=True)
-            )
-            todo = ~candidate
-    if todo.any():  # raw-bytes scan of html, only where still unmarked
-        candidate.loc[todo] = html[todo].map(_has_mark_bytes)
-    if cached is not None:
-        candidate = candidate | cached.notna()
+    urls, htmls, texts = (batch[c].tolist() for c in ("url", "html", "text"))
+    cached = _column(batch, "cached_identifier")
+    cached_type = _column(batch, "cached_identifier_type")
+    n = len(urls)
+    out = {c: [None] * n for c in _RESULT_COLUMNS}
+    out["url"] = urls
+    n_candidates = 0
+    for i in range(n):
+        candidate = (cached[i] is not None
+                     or may_hold_identifier(urls[i], texts[i], htmls[i]))
+        if not (candidate or with_text):
+            continue  # provably no identifier material: never decoded
+        html = _decode(htmls[i])  # once per row: BOM → declared charset → UTF-8
+        body = extract_main_content(html) if with_text else None
+        out["extracted_text"][i] = body
+        if not candidate:
+            continue
+        n_candidates += 1
+        res = extract_one(
+            urls[i],
+            extract_meta(html),
+            page_text_units(html, texts[i], body),
+            cached_identifier=cached[i],
+            replace_arxiv=replace_arxiv,
+            cached_identifier_type=cached_type[i],
+        )
+        for c, v in res.items():
+            out[c][i] = v
 
     if counters is not None:
         counters.n_docs.add(n)
-        counters.n_candidates.add(int(candidate.fillna(False).sum()))
-
-    # charset-aware decode (BOM → declared charset → lossy UTF-8), same
-    # function as the byte-parity oracle: pdf2doi_spark.core.webmeta._decode
-    from pdf2doi_spark.core.webmeta import _decode as _decode_html
-
-    def _decode(b) -> str:
-        return _decode_html(b) if b is not None else ""
-
-    if with_text:
-        html_str = html.map(_decode)  # extracted_text needed for every row
-    else:
-        html_str = pd.Series([None] * n, index=html.index, dtype=object)
-        cmask = candidate.fillna(False)
-        if cmask.any():
-            html_str.loc[cmask] = html[cmask].map(_decode)
-
-    out = {
-        "url": url.tolist(),
-        "identifier": [None] * n,
-        "identifier_type": [None] * n,
-        "method": [None] * n,
-        "tier": [None] * n,
-        "validation_info": [None] * n,
-        "extracted_text": [None] * n,
-    }
-
-    html_list = html_str.tolist()
-    text_list = text.tolist()
-    cand_list = candidate.tolist()
-    cached_list = cached.tolist() if cached is not None else [None] * n
-    cached_type_list = cached_type.tolist() if cached_type is not None else [None] * n
-
-    for i in range(n):
-        h = html_list[i]
-        body = extract_main_content(h) if with_text else None
-        if with_text:
-            out["extracted_text"][i] = body
-        if not cand_list[i]:
-            continue  # prefilter: provably no identifier material
-
-        def units(h=h, t=text_list[i], body=body):
-            # Lazy unit order (= reference extractor order): pre-extracted
-            # text first; the main-content body is only computed when the
-            # text unit yields no validated hit (and reused, not recomputed,
-            # when with_text already materialised it).
-            if t:
-                yield t
-            b = body if body is not None else extract_main_content(h)
-            if b:
-                yield b
-
-        res = extract_one(
-            out["url"][i],
-            extract_meta(h),
-            units(),
-            cached_identifier=cached_list[i],
-            replace_arxiv=replace_arxiv,
-            cached_identifier_type=cached_type_list[i],
-        )
-        out["identifier"][i] = res["identifier"]
-        out["identifier_type"][i] = res["identifier_type"]
-        out["method"][i] = res["method"]
-        out["tier"][i] = res["tier"]
-        out["validation_info"][i] = res["validation_info"]
-
+        counters.n_candidates.add(n_candidates)
+        counters.n_hits.add(n - out["identifier"].count(None))
     result = pd.DataFrame(out)
     for col in passthrough:  # carried columns ride the same Arrow batch
         result[col] = batch[col].to_numpy()
@@ -238,7 +96,7 @@ def _batch_extract(batch: pd.DataFrame, replace_arxiv: bool,
 
 class ExtractionCounters:
     """Spark accumulators incremented inside the kernel (SURVEY §4):
-    live job-level observability — docs seen, prefilter candidates, hits —
+    live job-level observability — docs seen, gate candidates, hits —
     without a second pass or a shuffle. Read on the driver after an action."""
 
     def __init__(self, sc):
@@ -284,9 +142,8 @@ def extract_identifiers(pages: DataFrame, replace_arxiv: bool = True,
                  # the kernel runs — a passthrough with either name would
                  # recreate the ambiguous-column failure this guard exists
                  # to prevent, so reserve them whether or not cache is set
-                 "cached_identifier", "cached_identifier_type"} | {
-        f.split()[0] for f in RESULT_SCHEMA.split(", ")
-    }
+                 "cached_identifier", "cached_identifier_type",
+                 *_RESULT_COLUMNS}
     bad = [c for c in passthrough if c in _reserved]
     if bad:
         raise ValueError(
@@ -317,11 +174,8 @@ def extract_identifiers(pages: DataFrame, replace_arxiv: bool = True,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if len(b):
-                out = _batch_extract(b, replace_arxiv, with_text, counters,
+                yield _batch_extract(b, replace_arxiv, with_text, counters,
                                      passthrough=passthrough)
-                if counters is not None:
-                    counters.n_hits.add(int(out["identifier"].notna().sum()))
-                yield out
 
     return df.mapInPandas(run, schema=schema)
 

@@ -3,12 +3,17 @@
 Each case mirrors a row category from FIXTURES.md §1 (stage-coverage
 matrix); reference behaviors cited per test.
 """
+import base64
+
+import pytest
+
 from pdf2doi_spark.core.kernel import (
     extract_one,
     filename_candidates,
     find_identifier_in_filename,
     find_identifier_in_metadata,
     find_identifier_in_text,
+    may_hold_identifier,
     rewrite_arxiv_to_doi,
 )
 from pdf2doi_spark.core.webmeta import (
@@ -302,7 +307,7 @@ def test_main_content_deterministic_and_safe():
 
 
 def test_page_text_units_order():
-    units = page_text_units(HTML, "pre-extracted text column value here")
+    units = list(page_text_units(HTML, "pre-extracted text column value here"))
     assert units[0] == "pre-extracted text column value here"
     assert "main body paragraph" in units[1]
 
@@ -456,6 +461,123 @@ def test_meta_hit_always_wins(doi, units):
     assert res["method"] == "document_infos"
     assert res["identifier"] == standardise_doi(doi)
 
+
+# ------------------------------------------------------------- page gate
+
+def _page(charset, body: bytes, meta: str = "") -> bytes:
+    """An html page with an ASCII head (the charset declaration must be
+    readable) and ``body`` bytes already encoded for ``charset``; the tail
+    is encoded for it too. 'utf-16' means a BOM'd UTF-16LE page."""
+    decl = f'<meta charset="{charset}">' if charset not in (None, "utf-16") else ""
+    head = (f'<html><head>{decl}<meta name="citation_doi" content="{meta}">'
+            '</head><body><p>').encode("ascii", "replace")
+    tail = " and some more words here to keep the block</p></body></html>"
+    if charset == "utf-16":
+        return "\ufeff".encode("utf-16-le") + (head + body).decode(
+            "ascii", "replace").encode("utf-16-le") + tail.encode("utf-16-le")
+    return head + body + tail.encode(charset or "utf-8")
+
+
+_ENC_DOI = "10.1234/enc.doc.1"
+_GATE_CASES = [
+    # escape-decoding codecs and an ISO-2022 shift sequence make '10.' out
+    # of bytes that hold no '10.' — a raw-byte scan alone cannot see it
+    pytest.param("https://x.org/a", None,
+                 _page("utf-7", b"doi: +ADEAMAAu-1234/enc.doc.1"), _ENC_DOI,
+                 id="utf-7"),
+    pytest.param("https://x.org/a", None,
+                 _page("unicode_escape", b"doi: \\x31\\x30\\x2e1234/enc.doc.1"),
+                 _ENC_DOI, id="unicode_escape"),
+    pytest.param("https://x.org/a", None,
+                 _page("raw_unicode_escape",
+                       b"doi: \\u0031\\u0030\\u002e1234/enc.doc.1"),
+                 _ENC_DOI, id="raw_unicode_escape"),
+    pytest.param("https://x.org/a", None,
+                 _page("iso-2022-jp", b"doi: 1\x1b(B0.1234/enc.doc.1"), _ENC_DOI,
+                 id="iso-2022-jp"),
+    pytest.param("https://x.org/a", None,
+                 _page("cp500", f"doi: {_ENC_DOI}".encode("cp500")), _ENC_DOI,
+                 id="cp500"),
+    pytest.param("https://x.org/a", None,
+                 _page("utf-16", f"doi: {_ENC_DOI}".encode()), _ENC_DOI,
+                 id="utf-16-bom"),
+    # url-only evidence: a bare arXiv filename (no 'arxiv', no '10.') and
+    # a DOI whose markers hide behind percent escapes
+    pytest.param("https://x.org/papers/1907.11692v2.pdf", "plain body",
+                 _page(None, b"nothing"), "10.48550/arXiv.1907.11692",
+                 id="bare-arxiv-filename"),
+    pytest.param("https://x.org/10%2E1227%2F12345678.pdf", None,
+                 _page(None, b"nothing"), "10.1227/12345678.pdf",
+                 id="percent-escaped-doi-url"),
+]
+
+
+@pytest.mark.parametrize("url,text,html,expected", _GATE_CASES)
+def test_page_gate_keeps_kernel_hits(url, text, html, expected):
+    """The kernel finds the identifier, the page gate passes the page, and
+    the batch kernel returns what the per-row kernel does."""
+    import pandas as pd
+
+    from pdf2doi_spark.operators.extract import _batch_extract
+
+    res = extract_one(url, extract_meta(html), page_text_units(html, text))
+    assert res["identifier"] == expected
+    assert may_hold_identifier(url, text, html)
+    batch = pd.DataFrame([(url, html, text)], columns=["url", "html", "text"])
+    for with_text in (False, True):
+        assert _batch_extract(batch, True, with_text)["identifier"][0] == expected
+
+
+_arxivish = st.builds(
+    lambda yymm, num, v, form: form.format(f"{yymm:04d}.{num}v{v}"),
+    st.integers(0, 9999), st.integers(0, 99999), st.integers(1, 9),
+    st.sampled_from(["{}.pdf", "arXiv: {}", "{}"]),
+)
+_marked = st.one_of(_doiish, _arxivish,
+                    st.builds(lambda d, t: f"{t} doi: {d} {t}", _doiish, _text))
+_ESCAPE = {  # how each escape-decoding codec spells a marker char
+    "utf-7": lambda c: b"+" + base64.b64encode(
+        c.encode("utf-16-be")).rstrip(b"=") + b"-",
+    "unicode_escape": lambda c: b"\\x%02x" % ord(c),
+    "raw_unicode_escape": lambda c: b"\\u%04x" % ord(c),
+}
+
+
+@st.composite
+def _gate_inputs(draw):
+    # the identifier shape goes into one place; the others get noise
+    where = draw(st.sampled_from(["url", "text", "meta", "body"]))
+
+    def part(name):
+        return draw(_marked if where == name else _text)
+
+    name = part("url")
+    escaped = draw(st.sets(st.integers(0, max(len(name) - 1, 0))))
+    path = "".join(f"%{ord(c):02X}" if i in escaped and ord(c) < 128 else c
+                   for i, c in enumerate(name))
+    url = f"https://h.org/{path}" if path else None
+    text = part("text")
+    meta = part("meta")
+    body = part("body")
+    charset = draw(st.sampled_from([None, "utf-8", "windows-1252", "cp500",
+                                    "utf-7", "unicode_escape",
+                                    "raw_unicode_escape", "utf-16"]))
+    spell = _ESCAPE.get(charset)
+    enc = charset if charset not in (None, "utf-16") else "utf-8"
+    raw = b"".join(spell(c) if spell and c in "0123456789.v"
+                   else c.encode(enc, "replace") for c in body)
+    return url, text, _page(charset, raw, meta=meta)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_gate_inputs())
+def test_page_gate_is_necessary(page):
+    """Whenever the per-row kernel finds an identifier, the page gate
+    passes the page: the gate may over-match, never under-match."""
+    url, text, html = page
+    res = extract_one(url, extract_meta(html), page_text_units(html, text))
+    if res["identifier"] is not None:
+        assert may_hold_identifier(url, text, html)
 
 def test_config_registry_parity():
     """Reference config surface (config.py:38-57): get/set/update_params

@@ -5,7 +5,9 @@ Reads one event-log file (plain or ``.zstd``) or a rolling
 ``eventlog_v2_*`` directory and prints one row per Spark job: start
 offset from the first job, duration, tasks run, executor run seconds
 (the tasks' ``Executor Run Time``), executor CPU seconds (the tasks'
-``Executor CPU Time``), shuffle bytes written, output bytes
+``Executor CPU Time``), Python worker seconds (the tasks' ``time to run
+Python workers`` SQL metric, milliseconds spent in ``mapInPandas`` and
+other Python UDF workers), shuffle bytes written, output bytes
 written (the tasks' ``Output Metrics`` ``Bytes Written``), and what
 submitted it (the SQL execution description, else the job description,
 else the name of its last stage). The last line is the total.
@@ -50,7 +52,7 @@ def read_events(path: str):
 
 def job_rows(events) -> list:
     """One dict per job: id, start_ms, duration_ms, tasks, run_ms, cpu_ns,
-    shuffle_bytes, out_bytes, description."""
+    py_ms, shuffle_bytes, out_bytes, description."""
     jobs, stage_job, sql_desc = {}, {}, {}
     for e in events:
         kind = e["Event"]
@@ -68,7 +70,7 @@ def job_rows(events) -> list:
                                  "start_ms": e["Submission Time"],
                                  "end_ms": e["Submission Time"],
                                  "tasks": 0, "run_ms": 0, "cpu_ns": 0,
-                                 "shuffle_bytes": 0, "out_bytes": 0,
+                                 "py_ms": 0, "shuffle_bytes": 0, "out_bytes": 0,
                                  "description": desc}
             # a reused shuffle stage is listed again by later jobs but its
             # tasks ran under the first one
@@ -81,6 +83,12 @@ def job_rows(events) -> list:
                 jobs[job]["tasks"] += 1
                 jobs[job]["run_ms"] += m.get("Executor Run Time", 0)
                 jobs[job]["cpu_ns"] += m.get("Executor CPU Time", 0)
+                # SQL metrics ride the task's accumulables; "Update" is
+                # this task's share ("Value" is the running total)
+                jobs[job]["py_ms"] += sum(
+                    int(a.get("Update", 0))
+                    for a in (e.get("Task Info") or {}).get("Accumulables", [])
+                    if a.get("Name") == "time to run Python workers")
                 jobs[job]["shuffle_bytes"] += (
                     m.get("Shuffle Write Metrics") or {}
                 ).get("Shuffle Bytes Written", 0)
@@ -98,20 +106,24 @@ def job_rows(events) -> list:
 def report(rows: list) -> str:
     t0 = rows[0]["start_ms"] if rows else 0
     lines = [f"{'job':>4} {'start_s':>8} {'dur_s':>7} {'tasks':>6} "
-             f"{'run_s':>7} {'cpu_s':>7} {'shuffle_B':>11} {'out_B':>11}  "
+             f"{'run_s':>7} {'cpu_s':>7} {'py_s':>7} {'shuffle_B':>11} "
+             f"{'out_B':>11}  "
              "description"]
     for j in rows:
         desc = " ".join(j["description"].split())[:90]
         lines.append(f"{j['id']:>4} {(j['start_ms'] - t0) / 1e3:8.2f} "
                      f"{j['duration_ms'] / 1e3:7.2f} {j['tasks']:>6} "
                      f"{j['run_ms'] / 1e3:7.2f} "
-                     f"{j['cpu_ns'] / 1e9:7.2f} {j['shuffle_bytes']:>11} "
+                     f"{j['cpu_ns'] / 1e9:7.2f} {j['py_ms'] / 1e3:7.2f} "
+                     f"{j['shuffle_bytes']:>11} "
                      f"{j['out_bytes']:>11}  {desc}")
     lines.append(f"total: {len(rows)} jobs, "
                  f"{sum(j['tasks'] for j in rows)} tasks, "
                  f"{sum(j['duration_ms'] for j in rows) / 1e3:.2f} s in jobs, "
                  f"{sum(j['run_ms'] for j in rows) / 1e3:.2f} executor run-s, "
                  f"{sum(j['cpu_ns'] for j in rows) / 1e9:.2f} executor cpu-s, "
+                 f"{sum(j['py_ms'] for j in rows) / 1e3:.2f} python worker "
+                 "run-s, "
                  f"{sum(j['shuffle_bytes'] for j in rows)} shuffle bytes "
                  f"written, {sum(j['out_bytes'] for j in rows)} output bytes "
                  "written")
