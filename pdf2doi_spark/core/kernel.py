@@ -39,6 +39,7 @@ from pdf2doi_spark.core.patterns import (
     ARXIV2007_RE,
     ARXIV_GATE_RE as _ARXIV_GATE_RE,
     ARXIV_GATE_RE_B as _ARXIV_GATE_RE_B,
+    ARXIV_GATE_WIDE_RE_B as _ARXIV_GATE_WIDE_RE_B,
     extract_arxivID_from_text,
     extract_doi_from_text,
     doi_regexp,
@@ -204,8 +205,9 @@ def may_hold_identifier(url: Optional[str], text: Optional[str], html) -> bool:
     every arXiv tier an ``ARXIV_GATE_RE`` shape. The url feeds only the
     filename stage (its own gate); ``text`` is a text unit; metadata and
     the main-content body both come from the decoded html, so the raw html
-    bytes are scanned for the same markers — sound whenever the page's
-    codec is ASCII-transparent, and a page whose codec is not is always a
+    bytes are scanned for the same markers (plus the byte traces of an
+    arXiv shape with non-ASCII digits) — sound whenever the page's codec
+    is ASCII-transparent, and a page whose codec is not is always a
     candidate. The html is never decoded here. Over-matching costs time;
     under-matching would silently drop hits.
     """
@@ -217,6 +219,8 @@ def may_hold_identifier(url: Optional[str], text: Optional[str], html) -> bool:
         return False
     if b"10." in html or _ARXIV_GATE_RE_B.search(html) is not None:
         return True
+    if not html.isascii() and _ARXIV_GATE_WIDE_RE_B.search(html) is not None:
+        return True  # an arXiv shape spelled with non-ASCII digits
     return not ascii_transparent(html)
 
 

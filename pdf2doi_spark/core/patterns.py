@@ -123,6 +123,14 @@ ARXIV2007_RE = re.compile(arxiv2007_pattern, re.I)
 ARXIV_GATE_PATTERN = r"(?i)\d{4}\.\d|arxiv"
 ARXIV_GATE_RE = re.compile(ARXIV_GATE_PATTERN)
 ARXIV_GATE_RE_B = re.compile(ARXIV_GATE_PATTERN.encode("ascii"))
+# The byte form sees ASCII digits only, while ``\d`` on str matches every
+# Unicode digit (``١٢٣٤.٥٦٧٨.pdf`` validates). Under each codec whose raw
+# bytes the page gate trusts (``webmeta.ascii_transparent``), a non-ASCII
+# char starts with a byte >= 0x80, spans at most 4 bytes and holds no
+# ``.`` byte. So an arXiv shape with a non-ASCII digit leaves ``.`` then a
+# high byte (the digit after the dot), or a high byte at most 15 bytes
+# before a ``.`` that an ASCII digit follows (one of the four before it).
+ARXIV_GATE_WIDE_RE_B = re.compile(rb"\.[\x80-\xff]|[\x80-\xff][^.]{0,15}\.[0-9]")
 
 
 def extract_doi_from_text(text: str, version: int = 0) -> list:

@@ -188,16 +188,25 @@ def word_shingles(col: Column, n: int = 3) -> Column:
 
     ``transform(sequence(...))`` over the split token array — no explode, so
     the row count (and therefore the shuffle width) never fans out.
+
+    The token array is bound ONCE per row: the outer one-element
+    ``transform`` is a ``let``, and the grams are built over its lambda
+    variable. Referencing ``split(norm_text(col))`` inside the gram lambda
+    instead re-normalizes and re-splits the whole text for every shingle —
+    O(words²) per doc, which dominated the signature pass on long pages.
     """
+    def grams(words: Column) -> Column:
+        k = F.size(words) - (n - 1)
+        g = F.transform(
+            F.sequence(F.lit(0), F.greatest(k - 1, F.lit(-1))),
+            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+        )
+        return F.when(k >= 1, F.array_distinct(g)).otherwise(
+            F.array().cast("array<string>")
+        )
+
     words = F.split(_norm_text(col), " ")
-    k = F.size(words) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(-1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    return F.element_at(F.transform(F.array(words), grams), 1)
 
 
 # ---------------------------------------------------------------- exact
@@ -300,22 +309,30 @@ def _sig_df(docs: DataFrame, text_col: str, num_hashes: int,
     )
 
 
-def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
-                     hash_fn: str) -> DataFrame:
-    """(doc_id, band_idx, band_hash) from a signature table — THE band
-    construction, shared by the one-shot join and the persisted index
-    (which bands stored signatures without re-shingling the text)."""
+def _band_hashes(num_hashes: int, bands: int, hash_fn: str) -> List[Column]:
+    """The ``bands`` band-hash expressions over a row's ``mh*`` columns —
+    THE band-hash construction (band ``b`` is element ``b``)."""
     rows_per_band = num_hashes // bands
-    band_hashes = []
+    out = []
     for b in range(bands):
         parts = [F.col(f"mh{b * rows_per_band + r}")
                  for r in range(rows_per_band)]
-        band_hashes.append(
+        out.append(
             F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
             else F.xxhash64(*parts)
         )
+    return out
+
+
+def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
+                     hash_fn: str) -> DataFrame:
+    """(doc_id, band_idx, band_hash) from a signature table — THE band
+    rows, shared by the one-shot join and the persisted index (which
+    bands stored signatures without re-shingling the text)."""
     return sigs.select(
-        "doc_id", F.posexplode(F.array(*band_hashes)).alias("band_idx", "band_hash")
+        "doc_id",
+        F.posexplode(F.array(*_band_hashes(num_hashes, bands, hash_fn)))
+        .alias("band_idx", "band_hash"),
     )
 
 

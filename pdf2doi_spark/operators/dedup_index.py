@@ -19,32 +19,35 @@ per-doc MinHash state once and makes each batch O(batch + collisions):
 
 Scale shape of a batch probe (``incremental_near_dups``):
 
-1. band the new batch (O(batch) signature work — the only heavy compute);
-2. collect the batch's DISTINCT ``pq`` values (``sources.io.
-   touched_shards``: bounded by n_parts, a driver-side list like the IVF
-   probe cells) and scan only those postings partitions — a small batch
-   touches few partitions, a full dump touches all of them, and either
-   way the scan is partition-pruned to exactly the buckets the batch can
-   collide with;
+1. signature the new batch (O(batch) work — the only heavy compute) and
+   cut it eagerly; the cut's own job also observes the batch's DISTINCT
+   ``pq`` and ``sp`` values (``_cut_sigs``: bounded by n_parts, a
+   driver-side list like the IVF probe cells, gathered by an
+   ``Observation`` rather than a separate collect);
+2. band the batch and scan only the postings partitions in that ``pq``
+   list — a small batch touches few partitions, a full dump touches all
+   of them, and either way the scan is partition-pruned to exactly the
+   buckets the batch can collide with;
 3. union the pruned postings (``source='index'``) with the batch's own
    bands (``source='batch'``) and shuffle-join the batch bands against
    that ONE relation on (band_idx, band_hash) — collisions only, never
    all pairs. An index row pairs with any other doc_id, a batch row only
    with an earlier one, so the batch is always probed against itself
    too; ``max_bucket`` caps degenerate boilerplate buckets on each side
-   exactly as in the one-shot path;
+   exactly as in the one-shot path. The collision relation is cut once,
+   observing the ``sp`` of its index-sourced partners;
 4. fetch every colliding doc's signature from one relation — the index
-   ``sigs/`` (partition-pruned the same way via the ``sp`` of the
-   index-sourced collisions) union the batch's own signatures — and keep
-   pairs whose signature agreement ≥ threshold. Agreement = fraction of
+   ``sigs/`` (partition-pruned to that partner ``sp`` list) union the
+   batch's own signatures — and keep pairs whose signature agreement ≥
+   threshold. Agreement = fraction of
    equal minhash components — the standard unbiased Jaccard estimator,
    the only similarity computable without storing every historical text.
 
 ``merge_minhash_index`` appends the batch's survivors idempotently
-(anti-join on doc_id against the touched ``sp`` partitions first, the
-merge_cache pattern). Every table write goes through
-``sources.io.write_sharded``, so each merge adds at most ONE file per
-touched partition.
+(anti-join on doc_id against the touched ``sp`` partitions first — the
+list the probe observed, handed over by ``ingest_dump``). Every table
+write goes through ``sources.io.write_sharded``, so each merge adds at
+most ONE file per touched partition.
 
 Reference: the reference tool has no incremental mode (pdf2doi processes
 files one-shot, reference main.py:222-260); this family is part of the
@@ -53,11 +56,15 @@ training-data-pipeline mandate, not reference parity.
 from __future__ import annotations
 
 import json
+from functools import reduce
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column, DataFrame, Observation, SparkSession, functions as F,
+)
 
 from pdf2doi_spark.operators.dedup import (
+    _band_hashes,
     _bands_from_sigs,
     _sig_df,
     _truncate_lineage,
@@ -69,7 +76,6 @@ from pdf2doi_spark.sources.io import (
     fs_exists,
     read_sharded,
     shard_of,
-    touched_shards,
     write_sharded,
 )
 
@@ -115,6 +121,32 @@ def _postings(sigs: DataFrame, params: dict) -> DataFrame:
                              params["hash_fn"])
     return bands.withColumn(
         "pq", shard_of(params["n_parts"], "band_idx", "band_hash"))
+
+
+def _cut_observing(df: DataFrame, **shard_sets: Column) -> tuple:
+    """``(cut, *lists)``: the eager lineage cut of ``df``
+    (``_truncate_lineage``) and, per keyword in order, the sorted values of
+    an array-valued aggregate over ``df`` — observed on the cut's own job,
+    so a shard-prune list costs no job of its own."""
+    obs = Observation()
+    cut = _truncate_lineage(
+        df.observe(obs, *[agg.alias(k) for k, agg in shard_sets.items()]))
+    got = obs.get
+    return (cut, *(sorted(got[k]) for k in shard_sets))
+
+
+def _cut_sigs(sigs: DataFrame, params: dict) -> tuple:
+    """``(cut, sp, pq)``: THE cut of a batch signature frame, with the
+    ``sp`` shards of its docs and the ``pq`` shards of their band rows
+    (``_postings``' shard columns, from the one band-hash construction;
+    band ``b`` is ``posexplode``'s position ``b``)."""
+    n = params["n_parts"]
+    hashes = _band_hashes(params["num_hashes"], params["bands"],
+                          params["hash_fn"])
+    pq = reduce(F.array_union, [F.collect_set(shard_of(n, F.lit(b), h))
+                                for b, h in enumerate(hashes)])
+    return _cut_observing(sigs, sp=F.collect_set(shard_of(n, "doc_id")),
+                          pq=pq)
 
 
 def build_minhash_index(spark: SparkSession, docs: DataFrame,
@@ -220,6 +252,17 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
     callers wanting full clusters feed the pairs to
     ``dedup.connected_components``.
     """
+    out, sigs, _sp = _probe(spark, index_path, new_docs, text_col,
+                            threshold, max_bucket)
+    return (out, sigs) if return_sigs else out
+
+
+def _probe(spark: SparkSession, index_path: str, new_docs: DataFrame,
+           text_col: str, threshold: float,
+           max_bucket: Optional[int]) -> tuple:
+    """``incremental_near_dups`` plus what the merge reuses:
+    ``(pairs, sigs, sp)`` — ``sp`` is the shard list of the batch's docs
+    observed on the signature cut (``merge_minhash_index(sig_shards=)``)."""
     p = load_index_params(spark, index_path)
     num_hashes = p["num_hashes"]
     root = index_path.rstrip("/")
@@ -242,16 +285,17 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
     # (the caller's actions would re-run the signature pass per branch —
     # measured 19.6 s vs 2.9 s for a 1.7k-doc probe at sf0.1). The
     # checkpoint pins the signature pass to exactly one execution for the
-    # life of the returned DataFrame.
-    new_sigs = _truncate_lineage(
-        _sig_df(new_docs, text_col, num_hashes, p["hash_fn"])
-    )
+    # life of the returned DataFrame. Its job also observes the pq list
+    # (uncapped: a superset of the capped bands' list prunes to the same
+    # rows, since a bucket's rows share one pq) and the merge's sp list.
+    new_sigs, sig_sp, pq = _cut_sigs(
+        _sig_df(new_docs, text_col, num_hashes, p["hash_fn"]), p)
     band_key = ["band_idx", "band_hash"]
     new_bands = _postings(new_sigs, p)
     if max_bucket is not None:
         new_bands = cap_buckets(new_bands, band_key, max_bucket)
     posts = _index_table(spark, root, p, "postings").filter(
-        F.col("pq").isin(touched_shards(new_bands, "pq")))
+        F.col("pq").isin(pq))
     if max_bucket is not None:
         posts = cap_buckets(posts, band_key, max_bucket)
 
@@ -276,12 +320,14 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
         .select(n_id.alias("doc_id"), o_id.alias("dup_of"), "o.source")
         .distinct()
     )
+    # cut once: its job observes the sp partitions of the index-sourced
+    # partners, and the verdict write reads the cut, not a second join
+    coll, sp = _cut_observing(coll, sp=F.collect_set(
+        F.when(F.col("source") == "index",
+               shard_of(p["n_parts"], "dup_of"))))
 
-    # one matched-signature relation: the index sigs, pruned to the sp
-    # partitions of the index-sourced partners, union the batch's own
-    sp = touched_shards(
-        coll.filter(F.col("source") == "index")
-        .select(shard_of(p["n_parts"], "dup_of").alias("sp")), "sp")
+    # one matched-signature relation: the index sigs, pruned to those sp
+    # partitions, union the batch's own
 
     def partners(sigs: DataFrame, source: str) -> DataFrame:
         # renamed up front: unqualified column refs after a chain of joins
@@ -318,13 +364,14 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
         .filter(F.col("_rk") == 1)
         .drop("_rk")
     )
-    return (out, new_sigs) if return_sigs else out
+    return out, new_sigs, sig_sp
 
 
 def merge_minhash_index(spark: SparkSession, index_path: str,
                         new_docs: DataFrame, *, text_col: str = "text",
                         exclude: Optional[DataFrame] = None,
-                        sigs: Optional[DataFrame] = None) -> None:
+                        sigs: Optional[DataFrame] = None,
+                        sig_shards: Optional[list] = None) -> None:
     """Append ``new_docs`` (minus ``exclude`` — typically the ``doc_id``
     column of ``incremental_near_dups``' result) to the index.
 
@@ -357,6 +404,14 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
     validated, but the hash_fn cannot be inferred from data: sigs from a
     DIFFERENT index's params would silently corrupt recall, so only pass
     what the probe of this index returned.
+
+    ``sig_shards``: the ``sp`` list of ``sigs``' docs that the probe
+    observed (``ingest_dump`` hands it over); the existing-id read is
+    pruned to it. It may be a superset of what is merged. Without it a
+    precomputed ``sigs`` frame is anti-joined against every ``sp``
+    partition — the same result, at the cost of the full scan a whole
+    dump pays anyway; a merge that signatures ``new_docs`` itself
+    observes the list on its own signature cut.
     """
     p = load_index_params(spark, index_path)
     root = index_path.rstrip("/")
@@ -369,7 +424,12 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
             exclude.select(F.col("doc_id")).distinct(), "doc_id", "left_anti"
         )
 
-    if sigs is not None:
+    if sigs is None:
+        # exclusion BEFORE signaturing: excluded docs never pay the pass
+        sigs, sig_shards, _pq = _cut_sigs(
+            _sig_df(drop_excluded(new_docs), text_col, num_hashes,
+                    p["hash_fn"]), p)
+    else:
         want = {"doc_id", *(f"mh{i}" for i in range(num_hashes))}
         have = set(sigs.columns)
         if not want <= have:
@@ -379,40 +439,33 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
                 "frame incremental_near_dups(return_sigs=True) returned "
                 "for THIS index"
             )
-        base = drop_excluded(sigs.select(
+        sigs = drop_excluded(sigs.select(
             "doc_id", *(f"mh{i}" for i in range(num_hashes))
         ))
-    else:
-        # exclusion BEFORE signaturing: excluded docs never pay the pass
-        base = _sig_df(drop_excluded(new_docs), text_col,
-                       num_hashes, p["hash_fn"])
+    existing = _index_table(spark, root, p, "sigs")
+    if sig_shards is not None:
+        existing = existing.filter(F.col("sp").isin(sig_shards))
     # one row per doc even if the batch carries repeats (a re-crawled
     # url in the same dump): two sig rows for one id would double its
-    # postings and break the postings == sigs × bands invariant
-    sigs = base.dropDuplicates(["doc_id"]) \
-        .withColumn("sp", shard_of(p["n_parts"], "doc_id")).persist()
-    try:
-        existing = _index_table(spark, root, p, "sigs").filter(
-            F.col("sp").isin(touched_shards(sigs, "sp"))
-        ).select("doc_id")
-        # EAGER lineage cut, not persist(): fresh's plan reads the very
-        # sigs path the first write appends to, and that write's commit
-        # refreshes/invalidates every cache entry over the path — the
-        # postings write would then RE-EVALUATE the anti-join against the
-        # just-appended table and derive postings from an empty frame
-        # (sigs/postings silently desync: rows indexed but unfindable).
-        # Caught by the xxhash64-lane test; checkpointing pins fresh to
-        # the pre-append snapshot for both writes.
-        fresh = _truncate_lineage(sigs.join(existing, "doc_id", "left_anti"))
-        # postings from the checkpointed fresh sigs: no second shingle
-        # pass, and the two tables cannot desync. Written FIRST — see the
-        # crash-ordering note in the docstring (sigs commit marks the doc
-        # indexed, so it must be the LAST thing that happens).
-        write_sharded(_postings(fresh, p), root + "/postings", "pq",
-                      "append")
-        write_sharded(fresh, root + "/sigs", "sp", "append")
-    finally:
-        sigs.unpersist()
+    # postings and break the postings == sigs × bands invariant.
+    # EAGER lineage cut, not persist(): fresh's plan reads the very sigs
+    # path the first write appends to, and that write's commit
+    # refreshes/invalidates every cache entry over the path — the
+    # postings write would then RE-EVALUATE the anti-join against the
+    # just-appended table and derive postings from an empty frame
+    # (sigs/postings silently desync: rows indexed but unfindable).
+    # Caught by the xxhash64-lane test; checkpointing pins fresh to the
+    # pre-append snapshot for both writes.
+    fresh = _truncate_lineage(
+        sigs.dropDuplicates(["doc_id"])
+        .withColumn("sp", shard_of(p["n_parts"], "doc_id"))
+        .join(existing.select("doc_id"), "doc_id", "left_anti"))
+    # postings from the checkpointed fresh sigs: no second shingle pass,
+    # and the two tables cannot desync. Written FIRST — see the
+    # crash-ordering note in the docstring (sigs commit marks the doc
+    # indexed, so it must be the LAST thing that happens).
+    write_sharded(_postings(fresh, p), root + "/postings", "pq", "append")
+    write_sharded(fresh, root + "/sigs", "sp", "append")
 
 
 def ingest_dump(spark: SparkSession, index_path: str, docs: DataFrame,
@@ -434,7 +487,8 @@ def ingest_dump(spark: SparkSession, index_path: str, docs: DataFrame,
       the verdict rows out.
     * The merge excludes the WRITTEN verdicts — a stable snapshot, never
       the live probe plan — and reuses the probe's checkpointed
-      signatures: ONE signature pass per dump.
+      signatures and the ``sp`` list observed on them: ONE signature
+      pass and no shard-list collect per dump.
 
     Restart-safe: the probe is read-only, the verdict write overwrites,
     and the merge anti-joins already-indexed ids (replays to a no-op).
@@ -442,17 +496,16 @@ def ingest_dump(spark: SparkSession, index_path: str, docs: DataFrame,
     the small written table (no extra job over ``docs``).
     """
     bootstrap_index_if_absent(spark, index_path, docs, hash_fn=hash_fn)
-    dups, sigs = incremental_near_dups(
-        spark, index_path, docs, threshold=threshold,
-        max_bucket=max_bucket, return_sigs=True,
-    )
+    dups, sigs, sig_shards = _probe(spark, index_path, docs, "text",
+                                    threshold, max_bucket)
     carried = [c for c in docs.columns if c != "text"]
     (dups.join(docs.select(*carried).dropDuplicates(["doc_id"]), "doc_id")
          .select(*carried, "dup_of", "est_jaccard", "source")
          .write.mode("overwrite").parquet(verdicts_path))
     written = spark.read.parquet(verdicts_path)
     merge_minhash_index(spark, index_path, docs,
-                        exclude=written.select("doc_id"), sigs=sigs)
+                        exclude=written.select("doc_id"), sigs=sigs,
+                        sig_shards=sig_shards)
     split = {"index": 0, "batch": 0}
     for r in written.groupBy("source").count().collect():
         split[r["source"]] = r["count"]

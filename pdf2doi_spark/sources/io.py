@@ -144,7 +144,7 @@ def read_raw_files(spark: SparkSession, path: str,
 # parquet table partitioned by a deterministic hash shard. The three
 # functions below are its one implementation.
 
-def shard_of(n: int, *cols: str) -> F.Column:
+def shard_of(n: int, *cols: str | F.Column) -> F.Column:
     """Deterministic shard id ``pmod(xxhash64(cols), n)`` as int, the type
     partition discovery gives the column on read-back. xxhash64 is JVM-side
     (whole-stage codegen) and stable across runs and executors."""

@@ -579,6 +579,63 @@ def test_page_gate_is_necessary(page):
     if res["identifier"] is not None:
         assert may_hold_identifier(url, text, html)
 
+
+@pytest.mark.parametrize("charset,body,expected", [
+    ("utf-8", "١٢٣٤.٥٦٧٨.pdf", "10.48550/arXiv.١٢٣٤.٥٦٧٨"),
+    # no high byte touches the dot: an ASCII digit sits on each side
+    ("utf-8", "١٢٣4.5678.pdf", "10.48550/arXiv.١٢٣4.5678"),
+    # Shift-JIS fullwidth digits end in ASCII-range trail bytes ('P'..'S')
+    ("shift_jis", "１２３４.5678.pdf", "10.48550/arXiv.１２３４.5678"),
+    # GB18030 four-byte chars end in an ASCII digit byte
+    ("gb18030", "١٢٣٤.٥٦٧٨.pdf", "10.48550/arXiv.١٢٣٤.٥٦٧٨"),
+    ("gbk", "１２３４.5678.pdf", "10.48550/arXiv.１２３４.5678"),
+])
+def test_page_gate_keeps_non_ascii_digit_arxiv_hits(charset, body, expected):
+    """The arXiv tiers' ``\\d`` matches any Unicode digit, so a page whose
+    only evidence is an arXiv shape spelled with non-ASCII digits is a
+    hit, and the raw-byte half of the gate must pass it."""
+    import pandas as pd
+
+    from pdf2doi_spark.operators.extract import _batch_extract
+
+    html = _page(charset, body.encode(charset))
+    res = extract_one(None, extract_meta(html), page_text_units(html, None))
+    assert res["identifier"] == expected
+    assert may_hold_identifier(None, None, html)
+    batch = pd.DataFrame([(None, html, None)], columns=["url", "html", "text"])
+    for with_text in (False, True):
+        assert _batch_extract(batch, True, with_text)["identifier"][0] == expected
+
+
+@pytest.mark.parametrize("charset", [
+    "utf-8", "tis-620", "cp874", "shift_jis", "cp932", "euc-jp", "gbk",
+    "gb18030", "big5", "euc-kr", "cp949", "johab"])
+def test_page_gate_sees_every_non_ascii_digit(charset):
+    """Every Unicode digit the charset can spell, in each of the five
+    digit slots of the ``\\d{4}\\.\\d`` arXiv shape (the others ASCII),
+    passes the raw-byte gate."""
+    import sys
+    import unicodedata
+
+    from pdf2doi_spark.core.webmeta import ascii_transparent
+
+    digits = [c for c in map(chr, range(0x80, sys.maxunicode + 1))
+              if unicodedata.category(c) == "Nd"]
+    seen = 0
+    for d in digits:
+        try:
+            d.encode(charset)
+        except UnicodeEncodeError:
+            continue
+        seen += 1
+        for i in (0, 1, 2, 3, 5):  # the digit slots of "1234.5"
+            shape = "1234.5"[:i] + d + "1234.5"[i + 1:]
+            html = _page(charset, f"x {shape} y".encode(charset))
+            assert ascii_transparent(html)  # the byte half decides
+            assert may_hold_identifier(None, None, html), (charset, shape)
+    assert seen
+
+
 def test_config_registry_parity():
     """Reference config surface (config.py:38-57): get/set/update_params
     with the same keys and defaults; offline-meaningful keys feed engine

@@ -104,6 +104,41 @@ def test_minhash_near_duplicates(spark):
     assert all(3 not in p for p in pairs)
 
 
+def _py_shingles(text, n=3):
+    """word_shingles replayed in Python: Spark's ``trim`` strips spaces
+    only and Java's ``\\s`` is ASCII whitespace; distinct grams keep their
+    first-occurrence order."""
+    import re
+
+    if text is None:
+        return []
+    words = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.strip(" ").lower()).split(" ")
+    return list(dict.fromkeys(" ".join(words[i:i + n])
+                              for i in range(len(words) - n + 1)))
+
+
+def test_word_shingles_match_python_replay(spark):
+    import random
+
+    from pdf2doi_spark.operators.dedup import has_min_words, word_shingles
+
+    rng = random.Random(7)
+    vocab = ["Alpha", "beta", "GAMMA", "delta", "eps", "zeta", "eta"]
+    long = " ".join(rng.choice(vocab) + rng.choice([" ", "\t", "\n  "])
+                    for _ in range(500))
+    texts = [long, "", "   ", "one", "one two", "One  two\tthree", None]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = {r.i: (r.sh, r.ok) for r in df.select(
+        "i", word_shingles(F.col("text")).alias("sh"),
+        has_min_words(F.col("text")).alias("ok")).collect()}
+    for i, t in enumerate(texts):
+        want = _py_shingles(t)
+        assert got[i][0] == want, (i, t)
+        if t is not None:  # the cheap filter agrees with the shingles
+            assert got[i][1] == bool(want), (i, t)
+    assert len(got[0][0]) > 100 and got[5][0] == ["one two three"]
+
+
 def test_simhash_near_duplicates(spark):
     from pdf2doi_spark.operators.dedup import simhash, simhash_near_duplicates
 

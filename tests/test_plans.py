@@ -278,6 +278,37 @@ def test_minhash_guard_reuses_exchange(spark):
     )
 
 
+def test_word_shingles_split_the_text_once(spark):
+    """word_shingles normalizes and splits each text ONCE: no lambda body
+    in its analyzed expression holds the normalization or the split (a
+    gram lambda over ``split(norm_text(text))`` re-splits the whole text
+    per shingle, O(words²) per doc), and the whole expression holds one
+    copy of each."""
+    from pdf2doi_spark.operators.dedup import word_shingles
+
+    df = spark.createDataFrame([("a b c d",)], "text string").select(
+        word_shingles(F.col("text")).alias("sh"))
+    exprs = df._jdf.queryExecution().analyzed().expressions()
+
+    def walk(e):
+        yield e
+        kids = e.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    def kinds(e):
+        return [x.getClass().getSimpleName() for x in walk(e)]
+
+    every = [k for i in range(exprs.size()) for k in kinds(exprs.apply(i))]
+    lambdas = [x for i in range(exprs.size()) for x in walk(exprs.apply(i))
+               if x.getClass().getSimpleName() == "LambdaFunction"]
+    assert lambdas
+    for lam in lambdas:
+        body = kinds(lam.function())
+        assert "RegExpReplace" not in body and "StringSplit" not in body, body
+    assert every.count("RegExpReplace") == every.count("StringSplit") == 1
+
+
 def test_quality_suite_is_map_only(spark, sf_dir):
     """The fused quality suite (token/lang/score/fingerprint/scrub) is ONE
     projection: zero Exchanges, zero Joins — at 100 TB it costs exactly a
