@@ -151,6 +151,15 @@ def main() -> None:
             cache=cache,
         )
 
+        if (args.cache or args.dedup_index) \
+                and spark.sparkContext.getCheckpointDir() is None:
+            # durable checkpoint dir for the lineage cuts of the cache merge
+            # and the near-dup probe (without one, _truncate_lineage falls
+            # back to localCheckpoint, whose blocks die with a lost
+            # executor mid-job)
+            spark.sparkContext.setCheckpointDir(
+                os.path.join(args.output, "_checkpoints"))
+
         if args.cache:
             merge_cache(spark, args.cache, results)
 
@@ -173,12 +182,6 @@ def main() -> None:
                 .select("url", F.xxhash64("url").alias("doc_id"),
                         F.col("extracted_text").alias("text"))
             )
-            # durable checkpoint dir for the probe's lineage cuts (without
-            # one, _truncate_lineage falls back to localCheckpoint, whose
-            # blocks die with a lost executor mid-job)
-            if spark.sparkContext.getCheckpointDir() is None:
-                spark.sparkContext.setCheckpointDir(
-                    os.path.join(args.output, "_checkpoints"))
             split = ingest_dump(
                 spark, args.dedup_index, docs,
                 os.path.join(args.output, "dups"),

@@ -28,7 +28,7 @@ from typing import Iterator, List
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 # ---------------------------------------------------------------- helpers
 
@@ -551,7 +551,9 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
 
 
 def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Cut an iterative algorithm's growing plan at a round boundary.
+    """Cut ``df``'s plan eagerly: a frame that is read several times (a
+    round of an iterative algorithm, a batch the merge joins and writes)
+    is computed once, and a growing plan stops growing.
 
     Reliable ``checkpoint()`` when the session has a checkpoint directory
     configured (production clusters: blocks land on durable storage and
@@ -563,6 +565,20 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def _cut_observing(df: DataFrame, **facts: Column) -> tuple:
+    """``(cut, *values)``: the eager cut of ``df`` (``_truncate_lineage``)
+    and, per keyword in order, the value of an aggregate over ``df``
+    observed on the cut's own job — arrays sorted, scalars as they are. A
+    small fact about a frame that is cut anyway (a shard-prune list, a
+    fixpoint test) thus costs no job of its own."""
+    obs = Observation()
+    cut = _truncate_lineage(
+        df.observe(obs, *[agg.alias(k) for k, agg in facts.items()]))
+    got = obs.get
+    return (cut, *(sorted(got[k]) if isinstance(got[k], list) else got[k]
+                   for k in facts))
 
 
 def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
@@ -582,7 +598,8 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     is one broadcast-free join + min-agg; ``_truncate_lineage`` cuts the
     plan each round so it does not grow with iterations (reliable
     ``checkpoint()`` when the session has a checkpoint dir, else
-    ``localCheckpoint``).
+    ``localCheckpoint``), and that cut's own job counts the labels that
+    dropped — the fixpoint test, with no probe query of its own.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iterations`` — silently returning split components would make a
@@ -608,24 +625,13 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
             .groupBy(sym["dst"].alias("node"))
             .agg(F.min("label").alias("neigh_min"))
         )
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("neigh_min", "label")
-                ).alias("label"),
-            )
-            .transform(_truncate_lineage)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") < F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
+        # the round's cut keeps the old label beside the neighbour minimum,
+        # so its own job counts the nodes whose label drops this round
+        step, changed = _cut_observing(
+            labels.join(neigh, "node", "left"),
+            changed=F.count_if(F.col("neigh_min") < F.col("label")))
+        labels = step.select(
+            "node", F.least("label", "neigh_min").alias("label"))
         if changed == 0:
             break
     else:
@@ -635,18 +641,6 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
             f"max_iterations"
         )
     return labels.select("node", F.col("label").alias("component")).orderBy("node")
-
-
-def _edge_checksum(edges: DataFrame) -> tuple:
-    """Order-independent fingerprint of an edge set (count + hash-XOR) —
-    the cheap fixpoint detector for the star rounds; a collision would need
-    two different edge sets with equal count AND equal xxhash64 XOR (the
-    XOR aggregate never overflows under ANSI mode, unlike a hash SUM)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-    ).first()
-    return (row["n"], row["h"])
 
 
 def connected_components_star(edges: DataFrame,
@@ -666,22 +660,32 @@ def connected_components_star(edges: DataFrame,
     * **small-star**: orient edges large→small, point every smaller
       neighbour (and ``u``) at the neighbourhood minimum — stars flatten.
 
-    Fixpoint when the small-star round leaves the edge set unchanged
-    (order-independent checksum); then edges are exactly (node → root).
+    Fixpoint when the small-star round leaves the edge set unchanged; then
+    edges are exactly (node → root). Each cut's own job observes the
+    order-independent fingerprint of its non-loop edges: count and
+    xxhash64 XOR (a collision would need two edge sets with equal count
+    AND equal XOR; the XOR never overflows under ANSI mode, unlike a hash
+    SUM). The node set comes from the first cut, self-loops included, so
+    a node whose only edge is a self-loop keeps its own component.
     """
-    e = (
+    loop_free = F.col("u") != F.col("v")
+
+    def cut(edges_uv: DataFrame) -> tuple:
+        return _cut_observing(
+            edges_uv, n=F.count_if(loop_free),
+            h=F.bit_xor(F.when(loop_free, F.xxhash64("u", "v"))))
+
+    first, *prev = cut(
         edges.select(F.col("a").cast("long").alias("u"),
                      F.col("b").cast("long").alias("v"))
-        .filter(F.col("u") != F.col("v"))
         .distinct()
-        .transform(_truncate_lineage)
     )
     all_nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
+        first.select(F.col("u").alias("node"))
+        .union(first.select(F.col("v").alias("node")))
         .distinct()
-        .transform(_truncate_lineage)
     )
+    e = first.filter(loop_free)
 
     def large_star(edges_uv: DataFrame) -> DataFrame:
         sym = edges_uv.union(
@@ -714,10 +718,8 @@ def connected_components_star(edges: DataFrame,
             .distinct()
         )
 
-    prev = _edge_checksum(e)
     for _ in range(max_iterations):
-        e = small_star(large_star(e)).transform(_truncate_lineage)
-        cur = _edge_checksum(e)
+        e, *cur = cut(small_star(large_star(e)))
         if cur == prev:
             break
         prev = cur

@@ -60,12 +60,13 @@ from functools import reduce
 from typing import Optional
 
 from pyspark.sql import (
-    Column, DataFrame, Observation, SparkSession, functions as F,
+    DataFrame, Observation, SparkSession, functions as F,
 )
 
 from pdf2doi_spark.operators.dedup import (
     _band_hashes,
     _bands_from_sigs,
+    _cut_observing,
     _sig_df,
     _truncate_lineage,
     cap_buckets,
@@ -121,18 +122,6 @@ def _postings(sigs: DataFrame, params: dict) -> DataFrame:
                              params["hash_fn"])
     return bands.withColumn(
         "pq", shard_of(params["n_parts"], "band_idx", "band_hash"))
-
-
-def _cut_observing(df: DataFrame, **shard_sets: Column) -> tuple:
-    """``(cut, *lists)``: the eager lineage cut of ``df``
-    (``_truncate_lineage``) and, per keyword in order, the sorted values of
-    an array-valued aggregate over ``df`` — observed on the cut's own job,
-    so a shard-prune list costs no job of its own."""
-    obs = Observation()
-    cut = _truncate_lineage(
-        df.observe(obs, *[agg.alias(k) for k, agg in shard_sets.items()]))
-    got = obs.get
-    return (cut, *(sorted(got[k]) for k in shard_sets))
 
 
 def _cut_sigs(sigs: DataFrame, params: dict) -> tuple:
@@ -492,24 +481,24 @@ def ingest_dump(spark: SparkSession, index_path: str, docs: DataFrame,
 
     Restart-safe: the probe is read-only, the verdict write overwrites,
     and the merge anti-joins already-indexed ids (replays to a no-op).
-    Returns the verdict split ``{"index": n, "batch": n}``, counted from
-    the small written table (no extra job over ``docs``).
+    Returns the verdict split ``{"index": n, "batch": n}``, observed on
+    the verdict write (no job of its own).
     """
     bootstrap_index_if_absent(spark, index_path, docs, hash_fn=hash_fn)
     dups, sigs, sig_shards = _probe(spark, index_path, docs, "text",
                                     threshold, max_bucket)
     carried = [c for c in docs.columns if c != "text"]
+    split = Observation()
     (dups.join(docs.select(*carried).dropDuplicates(["doc_id"]), "doc_id")
          .select(*carried, "dup_of", "est_jaccard", "source")
+         .observe(split, *[F.count_if(F.col("source") == k).alias(k)
+                           for k in ("index", "batch")])
          .write.mode("overwrite").parquet(verdicts_path))
     written = spark.read.parquet(verdicts_path)
     merge_minhash_index(spark, index_path, docs,
                         exclude=written.select("doc_id"), sigs=sigs,
                         sig_shards=sig_shards)
-    split = {"index": 0, "batch": 0}
-    for r in written.groupBy("source").count().collect():
-        split[r["source"]] = r["count"]
-    return split
+    return split.get
 
 
 def compact_minhash_index(spark: SparkSession, index_path: str) -> None:

@@ -30,6 +30,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pdf2doi_spark.operators.dedup import _cut_observing
+
 
 # ---------------------------------------------------------------- fs layer
 # All cache/manifest side-state goes through the Hadoop FileSystem API, not
@@ -196,14 +198,6 @@ def read_sharded(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def touched_shards(df: DataFrame, col: str) -> list:
-    """Sorted distinct values of the shard column ``col`` in ``df``: the
-    shards a batch touches, collected on the driver (bounded by the
-    modulus, never row data) so that a read of the stored table can prune
-    its scan to them with ``isin``."""
-    return sorted(r[0] for r in df.select(col).distinct().collect())
-
-
 CACHE_N_SHARDS = 64
 CACHE_SCHEMA = ("url string, identifier string, identifier_type string, "
                 "method string, shard int")
@@ -234,11 +228,12 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
     Scale shape: the cache is stored partitioned by a deterministic url
     shard (``pmod(xxhash64(url), n_shards)`` — the parquet analogue of
     Iceberg's ``bucket(N, url)`` transform), and a merge touches ONLY the
-    shards the new urls hash into. One driver-side collect names those
-    shards; one relation holds the merged rows: the batch rows that differ
-    from their stored row (``changed``), plus the stored rows of the
-    touched shards whose url is not in ``changed``, restricted to the
-    shards that hold a changed row. One dynamic partition overwrite writes
+    shards the new urls hash into. The batch is cut eagerly once, and that
+    cut's own job names those shards (``dedup._cut_observing``); one
+    relation holds the merged rows: the batch rows that differ from their
+    stored row (``changed``), plus the stored rows of the touched shards
+    whose url is not in ``changed``, restricted to the shards that hold a
+    changed row. One dynamic partition overwrite writes
     it in place; untouched shard directories are never read or rewritten,
     and an identical re-merge rewrites none. At a billions-row cache a
     merge therefore costs O(new + touched-shard rows), not a full shuffle +
@@ -266,67 +261,68 @@ def merge_cache(spark: SparkSession, cache_path: str, results: DataFrame,
     if pinned:
         n_shards = int(_fs_read_small(spark, marker).strip())
 
-    new = (
+    # The write reads the batch several times (the anti-join, the union,
+    # the shard semi-join); an unmaterialized extraction plan in
+    # ``results`` would re-run the whole kernel per read. One eager cut
+    # pays ONE extraction pass, and its job also names the touched shards
+    # (an empty list: nothing to merge).
+    new, touched = _cut_observing(
         results.filter(F.col("identifier").isNotNull())
         .filter(F.col("tier").isNull() | (F.col("tier") >= 0))
         .select("url", "identifier", "identifier_type", "method")
         .dropDuplicates(["url"])
-        .withColumn("shard", shard_of(n_shards, "url"))
+        .withColumn("shard", shard_of(n_shards, "url")),
+        shard=F.collect_set("shard"))
+    children = (_fs_child_names(spark, cache_path)
+                if fs_exists(spark, cache_path) else None)
+    if children and any(not c.startswith(("_", ".", "shard="))
+                        for c in children):
+        # one-time migration of a flat (round-1 layout) cache; flat
+        # caches predate the marker, which is written right after
+        flat = spark.read.parquet(cache_path).withColumn(
+            "shard", shard_of(n_shards, "url")
+        )
+        flat.write.mode("overwrite").parquet(cache_path + ".mig")
+        write_sharded(spark.read.parquet(cache_path + ".mig"),
+                      cache_path, "shard", "overwrite")
+        _rmtree(cache_path + ".mig", spark)
+    if not pinned and (touched or children is not None):
+        # no cache and nothing to write leaves no directory behind;
+        # otherwise the marker precedes the first data write
+        _fs_write_small(spark, marker, str(n_shards))
+    if not touched:
+        return
+    old = read_sharded(spark, cache_path, CACHE_SCHEMA).filter(
+        F.col("shard").isin(touched)
     )
-    # The merge evaluates the batch twice (touched-shard collect, the
-    # write). If ``results`` is an unmaterialized extraction plan, each
-    # evaluation would re-run the whole kernel — persist so every caller
-    # pays ONE extraction pass.
-    new = new.persist()
-    try:
-        children = (_fs_child_names(spark, cache_path)
-                    if fs_exists(spark, cache_path) else None)
-        if children and any(not c.startswith(("_", ".", "shard="))
-                            for c in children):
-            # one-time migration of a flat (round-1 layout) cache; flat
-            # caches predate the marker, which is written right after
-            flat = spark.read.parquet(cache_path).withColumn(
-                "shard", shard_of(n_shards, "url")
-            )
-            flat.write.mode("overwrite").parquet(cache_path + ".mig")
-            write_sharded(spark.read.parquet(cache_path + ".mig"),
-                          cache_path, "shard", "overwrite")
-            _rmtree(cache_path + ".mig", spark)
-        touched = touched_shards(new, "shard")
-        if not pinned and (touched or children is not None):
-            # no cache and nothing to write leaves no directory behind;
-            # otherwise the marker precedes the first data write
-            _fs_write_small(spark, marker, str(n_shards))
-        if not touched:
-            return
-        old = read_sharded(spark, cache_path, CACHE_SCHEMA).filter(
-            F.col("shard").isin(touched)
-        )
-        # Rows ALREADY in the cache with identical values are no-ops —
-        # dropping them first makes an idempotent re-merge (job restart,
-        # recrawl of an unchanged corpus) rewrite ZERO shards instead of
-        # re-churning every shard its hits map into. Null-safe equality:
-        # identifier_type/method can be NULL, and NULL = NULL is never
-        # true under plain equality, so such rows would count as "new"
-        # and re-churn their shard on every merge forever.
-        cols = ("url", "identifier", "identifier_type", "method", "shard")
-        old_cmp = old.select(*[F.col(c).alias(f"_old_{c}") for c in cols])
-        same = [new[c].eqNullSafe(old_cmp[f"_old_{c}"]) for c in cols]
-        cond = same[0]
-        for c in same[1:]:
-            cond = cond & c
-        changed = new.join(old_cmp, cond, "left_anti")
-        # new rows win on url; only shards holding a changed row are kept,
-        # so the dynamic write below replaces exactly those directories
-        merged = (
-            old.join(changed.select("url"), on="url", how="left_anti")
-            .unionByName(changed)
-            .join(changed.select("shard").distinct(), on="shard",
-                  how="left_semi")
-        )
-        write_sharded(merged, cache_path, "shard", "dynamic")
-    finally:
-        new.unpersist()
+    # Rows ALREADY in the cache with identical values are no-ops —
+    # dropping them first makes an idempotent re-merge (job restart,
+    # recrawl of an unchanged corpus) rewrite ZERO shards instead of
+    # re-churning every shard its hits map into. Null-safe equality:
+    # identifier_type/method can be NULL, and NULL = NULL is never
+    # true under plain equality, so such rows would count as "new"
+    # and re-churn their shard on every merge forever.
+    cols = ("url", "identifier", "identifier_type", "method", "shard")
+    old_cmp = old.select(*[F.col(c).alias(f"_old_{c}") for c in cols])
+    same = [new[c].eqNullSafe(old_cmp[f"_old_{c}"]) for c in cols]
+    cond = same[0]
+    for c in same[1:]:
+        cond = cond & c
+    changed = new.join(old_cmp, cond, "left_anti")
+    # new rows win on url; only shards holding a changed row are kept,
+    # so the dynamic write below replaces exactly those directories. Only
+    # the stored side is restricted (changed rows hold changed shards by
+    # definition): were both union branches joined on shard, the union
+    # would claim a shard partitioning that AQE's per-branch coalescing
+    # does not keep, the planner would drop write_sharded's repartition
+    # as redundant, and a shard could land in two files.
+    merged = (
+        old.join(changed.select("url"), on="url", how="left_anti")
+        .join(changed.select("shard").distinct(), on="shard",
+              how="left_semi")
+        .unionByName(changed)
+    )
+    write_sharded(merged, cache_path, "shard", "dynamic")
 
 
 def completed_shards(spark: SparkSession, manifest_path: str) -> set:

@@ -206,44 +206,8 @@ def test_probe_partner_in_index_and_batch_prefers_index(spark, sf_dir,
     assert [tuple(r) for r in got] == [(900004, 900003, 1.0, "index")]
 
 
-def _scans(spark, run) -> list:
-    """``(table, partitions read, files read)`` of every parquet scan in
-    every SQL query that ``run()`` executes, checkpoints included — the
-    executed scans' metrics, read back from the session's SQL status
-    store, so a plan whose pruning is rewritten away at runtime (an AQE-
-    dropped dynamic-pruning filter) cannot pass."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def ids():
-        bus.waitUntilEmpty()
-        ex = store.executionsList()
-        return {ex.apply(i).executionId() for i in range(ex.size())}
-
-    before = ids()
-    run()
-    out = []
-    for eid in sorted(ids() - before):
-        values = store.executionMetrics(eid)
-        nodes = store.planGraph(eid).allNodes()
-        for i in range(nodes.size()):
-            node = nodes.apply(i)
-            # the table by its partition column (the location is truncated)
-            part = re.search(r"\b(pq|sp)#\d+", node.desc())
-            if not node.name().startswith("Scan parquet") or not part:
-                continue
-            got = {"number of partitions read": 0, "number of files read": 0}
-            for m in (node.metrics().apply(j)
-                      for j in range(node.metrics().size())):
-                v = values.get(m.accumulatorId())
-                if m.name() in got and v.isDefined():
-                    got[m.name()] = int(v.get())
-            out.append(({"pq": "postings", "sp": "sigs"}[part.group(1)],
-                        *got.values()))
-    return out
-
-
-def test_incremental_probe_prunes_partitions(spark, sf_dir, tmp_path):
+def test_incremental_probe_prunes_partitions(spark, sf_dir, tmp_path,
+                                             scans):
     """A one-doc probe reads only the postings partitions its bands hash
     into and the sigs partitions of its index partners; a one-doc merge
     reads the one sigs partition of its doc. Checked on the executed
@@ -257,7 +221,7 @@ def test_incremental_probe_prunes_partitions(spark, sf_dir, tmp_path):
                         num_hashes=NUM_HASHES, bands=BANDS, n_parts=N_PARTS)
 
     one = {900002: batch_docs[900002]}
-    scans = _scans(spark, lambda: incremental_near_dups(
+    got = scans(lambda: incremental_near_dups(
         spark, idx_path, _df(spark, one), threshold=0.5).collect())
     # the index docs sharing a band with the probe: their sp partitions
     idx_bands = {d: set(_bands_of(_sig(_shingles(t))))
@@ -267,55 +231,55 @@ def test_incremental_probe_prunes_partitions(spark, sf_dir, tmp_path):
     n_sp = spark.createDataFrame(partners, "doc_id long").select(
         shard_of(N_PARTS, "doc_id")).distinct().count()
     assert 1 <= n_sp < N_PARTS
-    posts = [(n, f) for t, n, f in scans if t == "postings"]
-    sigs = [(n, f) for t, n, f in scans if t == "sigs"]
-    assert posts and all(1 <= n <= BANDS and f <= BANDS for n, f in posts), scans
-    assert sigs and all(1 <= n <= n_sp and f <= n_sp for n, f in sigs), scans
+    posts = [(n, f) for t, n, f in got if t == "pq"]
+    sigs = [(n, f) for t, n, f in got if t == "sp"]
+    assert posts and all(1 <= n <= BANDS and f <= BANDS for n, f in posts), got
+    assert sigs and all(1 <= n <= n_sp and f <= n_sp for n, f in sigs), got
 
     # one-doc merges: the existing-id read touches the doc's sp partition
     # only, whether the merge signatures the doc itself or ingest_dump
     # hands over the probe's signatures and their observed sp list
-    scans = _scans(spark, lambda: merge_minhash_index(
+    got = scans(lambda: merge_minhash_index(
         spark, idx_path, _df(spark, one)))
-    sigs = [(n, f) for t, n, f in scans if t == "sigs"]
-    assert sigs and all(n <= 1 and f <= 1 for n, f in sigs), scans
+    sigs = [(n, f) for t, n, f in got if t == "sp"]
+    assert sigs and all(n <= 1 and f <= 1 for n, f in sigs), got
     alien = spark.createDataFrame(
         [(777001, "zq wv xr yt uk pl mn bc df gh jk " * 5)],
         "doc_id long, text string")
-    scans = _scans(spark, lambda: ingest_dump(
+    got = scans(lambda: ingest_dump(
         spark, idx_path, alien, str(tmp_path / "verdicts"), threshold=0.5))
-    sigs = [(n, f) for t, n, f in scans if t == "sigs"]
-    posts = [(n, f) for t, n, f in scans if t == "postings"]
+    sigs = [(n, f) for t, n, f in got if t == "sp"]
+    posts = [(n, f) for t, n, f in got if t == "pq"]
     # a partition now holds the build's file and at most one merge's
-    assert sigs and all(n <= 1 and f <= 2 * n for n, f in sigs), scans
-    assert posts and all(n <= BANDS and f <= 2 * n for n, f in posts), scans
+    assert sigs and all(n <= 1 and f <= 2 * n for n, f in sigs), got
+    assert posts and all(n <= BANDS and f <= 2 * n for n, f in posts), got
 
 
 def test_ingest_dump_observes_its_shard_lists(spark, sf_dir, tmp_path,
                                               monkeypatch):
-    """An ingest_dump step makes no touched-shard collect: every prune
-    list comes from an observation on a cut that runs anyway, and each
-    equals what ``touched_shards`` returns on the same cut frame — [] for
-    a batch that collides with nothing and for an empty batch."""
+    """Every prune list of an ingest_dump step comes from an observation
+    on a cut that runs anyway, and each equals the distinct shard values
+    of the same cut frame — [] for a batch that collides with nothing and
+    for an empty batch."""
     import pdf2doi_spark.operators.dedup_index as di
-    import pdf2doi_spark.sources.io as io
-    from pdf2doi_spark.sources.io import shard_of, touched_shards
+    from pdf2doi_spark.sources.io import shard_of
 
     index_docs, batch_docs = _doc_maps(spark, sf_dir)
     idx_path = str(tmp_path / "mh_index")
     build_minhash_index(spark, _df(spark, index_docs), idx_path,
                         num_hashes=NUM_HASHES, bands=BANDS, n_parts=N_PARTS)
     p = load_index_params(spark, idx_path)
-    collects, cuts = [], []
+    cuts = []
     orig_cut = di._cut_observing
+
+    def distinct(df, col):
+        return sorted(r[0] for r in df.select(col).distinct().collect())
 
     def recording(df, **sets):
         got = orig_cut(df, **sets)
         cuts.append((got[0], dict(zip(sets, got[1:]))))
         return got
 
-    monkeypatch.setattr(io, "touched_shards",
-                        lambda df, col: collects.append(col))
     monkeypatch.setattr(di, "_cut_observing", recording)
     batches = [batch_docs, {777001: "zq wv xr yt uk pl mn bc df gh jk " * 5},
                {}]
@@ -323,22 +287,45 @@ def test_ingest_dump_observes_its_shard_lists(spark, sf_dir, tmp_path,
         di.ingest_dump(spark, idx_path, _df(spark, docs),
                        str(tmp_path / f"verdicts{i}"), threshold=0.5)
     monkeypatch.undo()
-    assert collects == []
 
     # per step: the signature cut (sp, pq), then the collision cut (sp)
     assert [sorted(lists) for _cut, lists in cuts] == \
         [["pq", "sp"], ["sp"]] * len(batches)
     coll_sp = []
     for (sigs, sig_lists), (coll, coll_lists) in zip(cuts[::2], cuts[1::2]):
-        assert sig_lists["sp"] == touched_shards(
+        assert sig_lists["sp"] == distinct(
             sigs.select(shard_of(N_PARTS, "doc_id").alias("sp")), "sp")
-        assert sig_lists["pq"] == touched_shards(di._postings(sigs, p), "pq")
-        assert coll_lists["sp"] == touched_shards(
+        assert sig_lists["pq"] == distinct(di._postings(sigs, p), "pq")
+        assert coll_lists["sp"] == distinct(
             coll.filter(F.col("source") == "index")
             .select(shard_of(N_PARTS, "dup_of").alias("sp")), "sp")
         coll_sp.append(coll_lists["sp"])
     assert coll_sp[0] and coll_sp[1:] == [[], []]
     assert cuts[4][1] == {"sp": [], "pq": []}
+
+
+def test_ingest_dump_split_is_observed_on_the_verdict_write(
+        spark, sf_dir, tmp_path):
+    """The verdict split ``ingest_dump`` returns is observed on the verdict
+    write: it equals the written table's counts per source for a batch
+    with dups, and both keys read 0 for an empty batch."""
+    from pdf2doi_spark.operators.dedup_index import ingest_dump
+
+    index_docs, batch_docs = _doc_maps(spark, sf_dir)
+    idx_path = str(tmp_path / "mh_index")
+    build_minhash_index(spark, _df(spark, index_docs), idx_path,
+                        num_hashes=NUM_HASHES, bands=BANDS, n_parts=N_PARTS)
+    out = str(tmp_path / "verdicts")
+    split = ingest_dump(spark, idx_path, _df(spark, batch_docs), out,
+                        threshold=0.5)
+    written = {r["source"]: r["count"] for r in
+               spark.read.parquet(out).groupBy("source").count().collect()}
+    assert split == {"index": written.get("index", 0),
+                     "batch": written.get("batch", 0)}
+    assert split["index"] > 0 and split["batch"] > 0
+    assert ingest_dump(spark, idx_path, _df(spark, {}),
+                       str(tmp_path / "verdicts_empty"), threshold=0.5) \
+        == {"index": 0, "batch": 0}
 
 
 def test_probe_with_no_collisions_is_empty(spark, sf_dir, tmp_path):

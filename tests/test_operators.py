@@ -620,6 +620,8 @@ def test_star_components_match_min_label_and_handle_long_paths(spark):
         [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 13),
          (20, 21), (5, 13), (40, 41)],
         [(a, b) for a, b in rand_edges if a != b],
+        # nodes whose only edge is a self-loop keep their own component
+        [(1, 1), (2, 3), (3, 3), (7, 7), (9, 8)],
     ]
     for edges in fixtures:
         df = spark.createDataFrame(edges, "a long, b long")
@@ -1538,9 +1540,9 @@ def test_merge_cache_reads_cache_once(spark, tmp_path, monkeypatch):
 
 
 def test_merge_cache_writes_once_in_place(spark, tmp_path, monkeypatch):
-    """A merge with changes into an existing cache collects its touched
-    shards once and writes once, straight to the cache path (no staging
-    copy beside it)."""
+    """A merge with changes into an existing cache observes its touched
+    shards on its one cut of the batch and writes once, straight to the
+    cache path (no staging copy beside it)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     import pdf2doi_spark.sources.io as io
@@ -1550,28 +1552,130 @@ def test_merge_cache_writes_once_in_place(spark, tmp_path, monkeypatch):
            "method string, tier int")
     io.merge_cache(spark, cache_path, spark.createDataFrame(
         [("u1", "10.1/a", "DOI", "document_text", 1)], ddl))
-    writes, collects = [], []
-    orig_parquet, orig_touched = DataFrameWriter.parquet, io.touched_shards
+    writes, cuts = [], []
+    orig_parquet, orig_cut = DataFrameWriter.parquet, io._cut_observing
 
     def recording(self, path, *a, **kw):
         writes.append(path)
         return orig_parquet(self, path, *a, **kw)
 
-    def counting(df, col):
-        collects.append(col)
-        return orig_touched(df, col)
+    def observing(df, **facts):
+        cuts.append(sorted(facts))
+        return orig_cut(df, **facts)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording)
-    monkeypatch.setattr(io, "touched_shards", counting)
+    monkeypatch.setattr(io, "_cut_observing", observing)
     io.merge_cache(spark, cache_path, spark.createDataFrame(
         [("u1", "10.1/b", "DOI", "filename", 0),
          ("u2", "10.2/x", "DOI", "filename", 0)], ddl))
     monkeypatch.undo()
     assert writes == [cache_path], writes
-    assert collects == ["shard"], collects
+    assert cuts == [["shard"]], cuts
     got = {r["url"]: r["identifier"]
            for r in spark.read.parquet(cache_path).collect()}
     assert got == {"u1": "10.1/b", "u2": "10.2/x"}
+
+
+def test_merge_cache_write_keeps_its_shard_repartition(spark, tmp_path,
+                                                       monkeypatch):
+    """The merged relation reaches the dynamic write under
+    ``write_sharded``'s own shard repartition, and each touched shard
+    directory holds one file. A union whose branches are both joined on
+    ``shard`` claims a shard partitioning that AQE's per-branch coalescing
+    does not keep; the planner then drops the repartition as redundant and
+    a shard can land in two files."""
+    import glob
+
+    import pdf2doi_spark.sources.io as io
+
+    cache_path = str(tmp_path / "cache")
+    ddl = ("url string, identifier string, identifier_type string, "
+           "method string, tier int")
+    io.merge_cache(spark, cache_path, spark.createDataFrame(
+        [(f"https://h{i}.org/p", f"10.1/{i}", "DOI", "document_text", 1)
+         for i in range(40)], ddl), n_shards=4)
+    plans, orig = [], io.write_sharded
+
+    def recording(df, path, col, mode):
+        plans.append(df.repartition(F.col(col))._jdf.queryExecution()
+                     .executedPlan().toString())
+        return orig(df, path, col, mode)
+
+    monkeypatch.setattr(io, "write_sharded", recording)
+    io.merge_cache(spark, cache_path, spark.createDataFrame(
+        [("https://new.org/p", "10.9/z", "DOI", "filename", 0)], ddl))
+    monkeypatch.undo()
+    assert len(plans) == 1 and "REPARTITION_BY_COL" in plans[0], plans
+    for d in glob.glob(f"{cache_path}/shard=*"):
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+
+def test_merge_cache_reads_only_the_touched_shard(spark, tmp_path, scans):
+    """A one-url merge into an existing 16-shard cache reads one cache
+    partition in every scan it runs (the touched-shard prune, checked on
+    the executed scans)."""
+    import glob
+
+    from pdf2doi_spark.sources.io import merge_cache
+
+    cache_path = str(tmp_path / "cache")
+    ddl = ("url string, identifier string, identifier_type string, "
+           "method string, tier int")
+    merge_cache(spark, cache_path, spark.createDataFrame(
+        [(f"https://h{i}.org/p", f"10.1/{i}", "DOI", "document_text", 1)
+         for i in range(200)], ddl), n_shards=16)
+    assert len(glob.glob(f"{cache_path}/shard=*")) == 16
+    got = scans(lambda: merge_cache(spark, cache_path, spark.createDataFrame(
+        [("https://h7.org/p", "10.1/changed", "DOI", "filename", 0)], ddl)))
+    parts = [n for col, n, _files in got if col == "shard"]
+    assert parts and all(n == 1 for n in parts), got
+    assert spark.read.parquet(cache_path).filter(
+        F.col("identifier") == "10.1/changed").count() == 1
+
+
+def test_job_cache_merge_checkpoints_durably(spark, tmp_path):
+    """``job.py --cache`` sets ``<output>/_checkpoints`` before the cache
+    merge, so the merge's lineage cut is a reliable checkpoint (files on
+    storage, not executor blocks); the cache ends up holding the prior
+    row plus every hit of the run."""
+    import glob
+    import subprocess
+    import sys as _sys
+
+    from pdf2doi_spark.sources.io import merge_cache
+
+    pages = tmp_path / "pages"
+    spark.createDataFrame(
+        [(f"https://p{i}.org/a", None, None,
+          f"see the paper at doi:10.5555/test.{i} for details", None)
+         for i in range(4)]
+        + [("https://p9.org/a", None, None, "no identifier here", None)],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string").write.parquet(str(pages))
+    cache = str(tmp_path / "cache")
+    merge_cache(spark, cache, spark.createDataFrame(
+        [("https://old.org/a", "10.1/old", "DOI", "document_text", 1)],
+        "url string, identifier string, identifier_type string, "
+        "method string, tier int"))
+
+    out = tmp_path / "run"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [_sys.executable, os.path.join(repo, "job.py"),
+         "--input", str(pages), "--output", str(out), "--shards", "2",
+         "--master", "local[2]", "--cache", cache],
+        capture_output=True, text=True, timeout=420,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    hits = {(r.url, r.identifier) for r in spark.read.parquet(
+        str(out / "results")).filter(F.col("identifier").isNotNull())
+        .collect()}
+    assert len(hits) == 4
+    assert {(r.url, r.identifier) for r in
+            spark.read.parquet(cache).collect()} == \
+        hits | {("https://old.org/a", "10.1/old")}
+    assert glob.glob(str(out / "_checkpoints" / "**" / "rdd-*"),
+                     recursive=True)
 
 
 def test_merge_cache_mixed_batch_rewrites_only_changed_shard(spark, tmp_path):
